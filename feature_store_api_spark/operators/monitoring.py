@@ -274,11 +274,15 @@ def _bin_counts(df: DataFrame, column: str, mn: float, width: float, buckets: in
 
 def _ref_minmax(ref: DataFrame, column: str):
     """Reference [min, max] for drift binning: parquet FOOTER statistics
-    when the reference is a provably plain file scan (exact, driver-side,
-    zero jobs — same guard as ``statistics._file_scan_minmax``; double
-    footer stats are not truncated, so they equal the aggregate's
-    values bit-for-bit), else one tiny min/max aggregate. Returns
-    ``(mn, mx)`` or ``(None, None)`` for an all-null/empty reference."""
+    when the reference is a provably plain file scan (driver-side, zero
+    jobs — same guard as ``statistics._file_scan_minmax``), else one
+    tiny min/max aggregate. Returns ``(mn, mx)`` or ``(None, None)`` for
+    an all-null/empty reference.
+
+    Known gap: the two paths disagree on float columns holding NaN in
+    files whose writer leaves NaN out of footer min/max (parquet-cpp /
+    pyarrow): the footer gives the finite range, while Spark's ``max``
+    is NaN."""
     from .statistics import _file_scan_minmax
 
     fm = _file_scan_minmax(ref.select(column), [column])

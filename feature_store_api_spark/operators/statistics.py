@@ -83,7 +83,9 @@ def _file_scan_minmax(df: DataFrame, cols: Sequence[str]) -> Dict[str, tuple]:
     only, attribute-only projections (no Filter, no computed/renamed
     columns — a filter could shrink the true range below the footer's,
     and a computed column's stats aren't in the footer at all). For
-    such a scan the footer min/max IS the data min/max, so a consumer
+    such a scan the footer min/max IS the data min/max (bounds are
+    read by :func:`..sources.footer_stats.footer_stats`; one known gap:
+    writers that leave NaN out of float footer stats), so a consumer
     (the percentile bin pass) gets identical bounds one whole
     aggregation pass earlier. Footers are ~KB and independent, so they
     are read on a thread pool — the cap of 4096 files (~0.3 s of
@@ -110,38 +112,29 @@ def _file_scan_minmax(df: DataFrame, cols: Sequence[str]) -> Dict[str, tuple]:
         return {}
     if not files or len(files) > 4096:
         return {}
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover
-        return {}
+    from ..sources.footer_stats import footer_stats
+
     want = set(cols)
-    mins: Dict[str, object] = {}
-    maxs: Dict[str, object] = {}
-    seen_groups = 0
 
     def _file_minmax(path: str):
-        """Per-file (mins, maxs, n_groups) or None when any group's
-        stats can't be trusted — the caller poisons the lot."""
-        md = pq.ParquetFile(path.replace("file:", "")).metadata
-        fm: Dict[str, object] = {}
-        fx: Dict[str, object] = {}
-        for rg in range(md.num_row_groups):
-            row_group = md.row_group(rg)
-            for ci in range(row_group.num_columns):
-                col = row_group.column(ci)
-                name = col.path_in_schema
-                if name not in want:
-                    continue
-                st = col.statistics
-                if st is None or not st.has_min_max:
+        """Per-file ``name -> (min, max)`` or None when a wanted column's
+        bounds can't be trusted or aren't numeric — the caller poisons
+        the lot. A column with no non-null values has no bounds and
+        contributes nothing, exactly as in Spark's min/max."""
+        out: Dict[str, tuple] = {}
+        for name, (mn, mx, nulls, rows) in footer_stats(
+            path.replace("file:", "")
+        ).items():
+            if name not in want:
+                continue
+            if mn is None:
+                if nulls != rows:
                     return None
-                if not isinstance(st.min, (int, float)):
-                    return None
-                if name not in fm or st.min < fm[name]:
-                    fm[name] = st.min
-                if name not in fx or st.max > fx[name]:
-                    fx[name] = st.max
-        return fm, fx, md.num_row_groups
+                continue
+            if not isinstance(mn, (int, float)):
+                return None
+            out[name] = (mn, mx)
+        return out
 
     try:
         if len(files) == 1:
@@ -153,22 +146,18 @@ def _file_scan_minmax(df: DataFrame, cols: Sequence[str]) -> Dict[str, tuple]:
                 max_workers=min(16, len(files))
             ) as pool:
                 results = list(pool.map(_file_minmax, files))
+        bounds: Dict[str, tuple] = {}
         for res in results:
             if res is None:
                 return {}  # any untrusted group poisons the lot
-            fm, fx, groups = res
-            seen_groups += groups
-            for name, v in fm.items():
-                if name not in mins or v < mins[name]:
-                    mins[name] = v
-            for name, v in fx.items():
-                if name not in maxs or v > maxs[name]:
-                    maxs[name] = v
+            for name, (lo, hi) in res.items():
+                if name in bounds:
+                    lo = min(bounds[name][0], lo)
+                    hi = max(bounds[name][1], hi)
+                bounds[name] = (lo, hi)
     except Exception:
         return {}
-    if not seen_groups:
-        return {}
-    return {c: (mins[c], maxs[c]) for c in cols if c in mins and c in maxs}
+    return {c: bounds[c] for c in cols if c in bounds}
 
 
 def describe(

@@ -52,6 +52,7 @@ from urllib.parse import quote, unquote
 from pyspark.sql import DataFrame, SparkSession
 
 from .backend import CommitLogBackend
+from .footer_stats import footer_stats
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -68,59 +69,41 @@ def _file_stats(path: str) -> Optional[str]:
     """Per-file ``add.stats`` JSON (PROTOCOL.md "Per-file Statistics":
     numRecords / minValues / maxValues / nullCount) from the written
     parquet's FOOTER — no extra data pass. External Delta clients use
-    these for file skipping over our tables; ``None`` (omit the field,
-    it's optional) when any row group lacks trustworthy stats.
+    these for file skipping over our tables. Bounds follow
+    :func:`.footer_stats.footer_stats` (a column it can't bound gets
+    no min/max); ``None`` (omit the field, it's optional) when the
+    footer can't be read.
 
     String maxima are prefix-truncated like Delta writers do: the last
-    kept char is bumped so the truncated value stays an UPPER bound."""
+    kept char is bumped so the truncated value stays an UPPER bound.
+    Binary columns carry no bounds."""
     try:
         import pyarrow.parquet as pq
 
-        md = pq.ParquetFile(path).metadata
+        md = pq.read_metadata(path)
+        stats = footer_stats(md)
         mins: Dict[str, object] = {}
         maxs: Dict[str, object] = {}
-        nulls: Dict[str, int] = {}
-        skip: set = set()
-        for rg in range(md.num_row_groups):
-            row_group = md.row_group(rg)
-            for ci in range(row_group.num_columns):
-                col = row_group.column(ci)
-                name = col.path_in_schema
-                if "." in name:  # nested leaves: skip, keep it simple
-                    continue
-                st = col.statistics
-                if st is None or st.null_count is None:
-                    return None
-                nulls[name] = nulls.get(name, 0) + st.null_count
-                if not st.has_min_max:
-                    skip.add(name)
-                    continue
-                lo, hi = st.min, st.max
-                if isinstance(lo, bytes):
-                    skip.add(name)
-                    continue
-                if isinstance(lo, str):
-                    if len(hi) > _STATS_STRING_PREFIX:
-                        cut = hi[:_STATS_STRING_PREFIX]
-                        hi = cut[:-1] + chr(ord(cut[-1]) + 1)
-                    lo = lo[:_STATS_STRING_PREFIX]
-                elif hasattr(lo, "isoformat"):
-                    lo, hi = lo.isoformat(), hi.isoformat()
-                elif not isinstance(lo, (int, float, bool)):
-                    skip.add(name)
-                    continue
-                if name not in mins or lo < mins[name]:
-                    mins[name] = lo
-                if name not in maxs or hi > maxs[name]:
-                    maxs[name] = hi
-        for name in skip:
-            mins.pop(name, None)
-            maxs.pop(name, None)
+        for name, (lo, hi, _nulls, _rows) in stats.items():
+            if lo is None or isinstance(lo, bytes):
+                continue
+            if isinstance(lo, str):
+                if len(hi) > _STATS_STRING_PREFIX:
+                    cut = hi[:_STATS_STRING_PREFIX]
+                    hi = cut[:-1] + chr(ord(cut[-1]) + 1)
+                lo = lo[:_STATS_STRING_PREFIX]
+            elif hasattr(lo, "isoformat"):
+                lo, hi = lo.isoformat(), hi.isoformat()
+            elif not isinstance(lo, (int, float, bool)):
+                continue
+            mins[name], maxs[name] = lo, hi
         return json.dumps({
             "numRecords": md.num_rows,
             "minValues": mins,
             "maxValues": maxs,
-            "nullCount": nulls,
+            "nullCount": {
+                name: s[2] for name, s in stats.items() if s[2] is not None
+            },
         })
     except Exception:
         return None

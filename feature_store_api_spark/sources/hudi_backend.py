@@ -47,6 +47,7 @@ from typing import List, Sequence, Tuple
 from pyspark.sql import DataFrame, SparkSession
 
 from .backend import CommitLogBackend
+from .footer_stats import footer_min
 
 
 def _instant_of(commit_time_ms: int) -> str:
@@ -180,8 +181,6 @@ class HudiBackend(CommitLogBackend):
 
     # -- data ------------------------------------------------------------------
     def append_commit(self, df: DataFrame, partition_cols: Sequence[str]) -> None:
-        import pyarrow.parquet as pq
-
         from .commit_store import COMMIT_COL
 
         # USER partition keys only: the store's _commit_time partition
@@ -207,13 +206,7 @@ class HudiBackend(CommitLogBackend):
                         continue
                     src = os.path.join(root, name)
                     if commit_time is None:
-                        md = pq.ParquetFile(src).metadata
-                        sch = md.schema.to_arrow_schema()
-                        if COMMIT_COL in sch.names and md.num_row_groups:
-                            idx = sch.names.index(COMMIT_COL)
-                            st = md.row_group(0).column(idx).statistics
-                            if st is not None and st.has_min_max:
-                                commit_time = int(st.min)
+                        commit_time = footer_min(src, COMMIT_COL)
                     rel = os.path.relpath(root, stage)
                     staged.append((src, "" if rel == "." else rel))
             if not staged:
@@ -355,8 +348,6 @@ class HudiMorBackend(HudiBackend):
         partition_cols: Sequence[str],
         force_base: bool,
     ) -> None:
-        import pyarrow.parquet as pq
-
         from pyspark.sql import functions as F
 
         from .commit_store import COMMIT_COL
@@ -403,13 +394,7 @@ class HudiMorBackend(HudiBackend):
                         continue
                     src = os.path.join(root, name)
                     if commit_time is None:
-                        md = pq.ParquetFile(src).metadata
-                        sch = md.schema.to_arrow_schema()
-                        if COMMIT_COL in sch.names and md.num_row_groups:
-                            idx = sch.names.index(COMMIT_COL)
-                            st = md.row_group(0).column(idx).statistics
-                            if st is not None and st.has_min_max:
-                                commit_time = int(st.min)
+                        commit_time = footer_min(src, COMMIT_COL)
                     rel = os.path.relpath(root, stage)
                     if rel != ".":
                         # __hp_c=val -> c=val (hive names, real values)

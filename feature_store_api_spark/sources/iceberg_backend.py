@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .backend import CommitLogBackend
+from .footer_stats import footer_stats
 from .iceberg_prune import encode_bound
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -269,77 +270,6 @@ def _norm_mf(row: Dict) -> Dict:
     )
     out.setdefault("partitions", None)
     return out
-
-
-def _file_column_stats(md) -> Dict[str, Tuple]:
-    """Aggregate the parquet footer's per-row-group column statistics
-    to per-FILE ``name -> (min, max, null_count, value_count)`` for
-    TOP-LEVEL primitive columns (nested paths carry a ``.`` and are
-    skipped — Iceberg bounds on them need field-id path mapping this
-    backend doesn't author).
-
-    Soundness over coverage: the moment ANY row group lacks a usable
-    min/max for a column that has non-null values, the bounds drop to
-    None (readers treat an absent bound as unbounded — never prunes).
-    NaN mins/maxes drop too (poisonous to range tests, see
-    ``iceberg_prune._coerce``); INT96 timestamps simply have no footer
-    stats, so their bounds are naturally absent. ``null_count`` falls
-    to None (stat omitted) when any chunk doesn't report it;
-    ``value_count`` is the spec's rows-including-nulls."""
-    import math
-
-    stats: Dict[str, List] = {}  # name -> [min, max, nulls, rows, ok]
-    for rg_i in range(md.num_row_groups):
-        rg = md.row_group(rg_i)
-        for c_i in range(rg.num_columns):
-            col = rg.column(c_i)
-            path = col.path_in_schema
-            if "." in path:
-                continue
-            st = col.statistics
-            s = stats.setdefault(path, [None, None, 0, 0, True])
-            s[3] += rg.num_rows
-            nc = st.null_count if st is not None else None
-            if nc is None:
-                s[2] = None
-            elif s[2] is not None:
-                s[2] += int(nc)
-            n_vals = (
-                rg.num_rows - int(nc)
-                if nc is not None else rg.num_rows
-            )
-            if st is None or not st.has_min_max:
-                if n_vals > 0:
-                    s[4] = False  # values exist but no bounds: unusable
-                continue
-            mn, mx = st.min, st.max
-            if any(
-                isinstance(v, float) and not math.isfinite(v)
-                for v in (mn, mx)
-            ) or any(
-                # parquet-mr omits >4 KB binary stats but other writers
-                # may truncate; a truncated MAX is unsound as an upper
-                # bound, so oversized string stats are not trusted
-                isinstance(v, (str, bytes)) and len(v) > 4000
-                for v in (mn, mx)
-            ):
-                s[4] = False
-                continue
-            if s[0] is None or _stat_lt(mn, s[0]):
-                s[0] = mn
-            if s[1] is None or _stat_lt(s[1], mx):
-                s[1] = mx
-    out: Dict[str, Tuple] = {}
-    for name, (mn, mx, nulls, rows, ok) in stats.items():
-        out[name] = (mn if ok else None, mx if ok else None, nulls, rows)
-    return out
-
-
-def _stat_lt(a, b) -> bool:
-    try:
-        return a < b
-    except TypeError:
-        return False
 
 
 class IcebergBackend(CommitLogBackend):
@@ -588,18 +518,14 @@ class IcebergBackend(CommitLogBackend):
                         else ["data", commit_id, name]
                     )
                     dst = os.path.join(self.location, rel)
-                    if commit_time is None and md.num_row_groups:
-                        sch = md.schema.to_arrow_schema()
-                        if COMMIT_COL in sch.names:
-                            idx = sch.names.index(COMMIT_COL)
-                            st = md.row_group(0).column(idx).statistics
-                            if st is not None and st.has_min_max:
-                                commit_time = int(st.min)
+                    col_stats = footer_stats(md)
+                    if commit_time is None:
+                        commit_time = col_stats.get(COMMIT_COL, (None,))[0]
                     os.makedirs(os.path.dirname(dst), exist_ok=True)
                     os.replace(src, dst)
                     files.append(
                         (rel, md.num_rows, os.path.getsize(dst),
-                         dict(part_vals), _file_column_stats(md))
+                         dict(part_vals), col_stats)
                     )
         finally:
             shutil.rmtree(stage, ignore_errors=True)

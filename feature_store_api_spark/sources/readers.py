@@ -118,14 +118,6 @@ def _cache_key(spark: SparkSession, path: str):
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") == "0":
-        # A/B kill switch: every read builds a fresh plan (used to
-        # attribute latency shifts to the cache vs the environment).
-        # Same-session A/B at sf0.1, 6 samples, min-based: cache ON
-        # b1 0.169 s / b2 0.324 s; cache OFF b1 0.251 s / b2 0.564 s —
-        # the cache (twin-plan hand-out included) is a ~1.6-1.7x WIN,
-        # so the r07 board-wide drift was environmental, not this code.
-        return _build_parquet_plan(spark, path)
     key = _cache_key(spark, path)
     if key is not None and key in _PLAN_CACHE:
         entry = _PLAN_CACHE[key]  # [plans list, hand-out count]

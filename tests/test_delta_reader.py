@@ -952,7 +952,8 @@ def test_delta_backend_writes_file_stats(spark, tmp_path):
     """Every add action (and checkpoint add row) carries Delta
     per-file stats — numRecords/minValues/maxValues/nullCount from the
     parquet footer — so external Delta clients can file-skip over our
-    tables."""
+    tables. Non-finite double bounds are left out: ``NaN``/``Infinity``
+    are not JSON (RFC 8259), and strict Delta readers reject them."""
     from feature_store_api_spark import FeatureStore
 
     fs = FeatureStore(root=str(tmp_path))
@@ -960,9 +961,10 @@ def test_delta_backend_writes_file_stats(spark, tmp_path):
         "dl_stats", primary_key=["k"], event_time="ts",
         time_travel_format="DELTA", auto_compact_every=None,
     )
+    inf, nan = float("inf"), float("nan")
     fg.insert(spark.createDataFrame(
-        [(1, 10, 1.0), (2, 10, None), (3, 10, 3.0)],
-        "k long, ts long, v double"))
+        [(1, 10, 1.0, inf), (2, 10, None, nan), (3, 10, 3.0, -inf)],
+        "k long, ts long, v double, w double"))
     log = os.path.join(fg.location, "_delta_log")
     adds = []
     for n in sorted(os.listdir(log)):
@@ -974,11 +976,17 @@ def test_delta_backend_writes_file_stats(spark, tmp_path):
                         adds.append(a["add"])
     assert adds
     assert all("stats" in a for a in adds)
-    stats = [json.loads(a["stats"]) for a in adds]
+    def strict(token):
+        raise ValueError(f"non-JSON constant {token} in add.stats")
+
+    stats = [json.loads(a["stats"], parse_constant=strict) for a in adds]
     assert sum(s["numRecords"] for s in stats) == 3
     ks = [s["minValues"].get("k") for s in stats if "k" in s["minValues"]]
     assert min(ks) == 1
+    assert max(s["maxValues"]["k"] for s in stats if "k" in s["maxValues"]) == 3
     assert sum(s["nullCount"].get("v", 0) for s in stats) == 1
+    assert not any("w" in s["minValues"] or "w" in s["maxValues"]
+                   for s in stats)
 
 
 def test_delta_deletion_vectors_non_hive_layout(spark, tmp_path):
