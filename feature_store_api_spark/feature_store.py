@@ -540,30 +540,22 @@ _TPCH_META = {
 }
 
 
-# schema cache for the immutable testdata tables: each harness
-# subprocess builds a catalog but touches only the tables its query
-# uses — lazy + cached resolution avoids ~10 Spark schema reads per
-# catalog construction
-_TESTDATA_SCHEMAS: Dict[str, list] = {}
-
-
 def testdata_catalog(spark: SparkSession, sf_dir: str) -> FeatureStore:
     """Bind the driver's synthetic tables (TESTDATA.md) as feature groups.
 
-    Schemas resolve LAZILY on first feature access (and are cached
-    per-path for the life of the process — the testdata is immutable);
-    primary keys follow FIXTURES.md §F6.
+    Schemas resolve LAZILY on first feature access — each harness
+    subprocess builds a catalog but touches only the tables its query
+    uses — through ``read_parquet``, whose memoized plans keep their
+    schema; primary keys follow FIXTURES.md §F6.
     """
     from .sources.readers import read_parquet
 
     def _loader(path: str):
         def load():
-            if path not in _TESTDATA_SCHEMAS:
-                schema = read_parquet(spark, path).schema
-                _TESTDATA_SCHEMAS[path] = [
-                    (f.name, f.dataType) for f in schema.fields
-                ]
-            return [Feature(n, t) for n, t in _TESTDATA_SCHEMAS[path]]
+            return [
+                Feature(f.name, f.dataType)
+                for f in read_parquet(spark, path).schema.fields
+            ]
 
         return load
 

@@ -46,37 +46,9 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plan_memo import memo, plan_key
+
 _SPINE_UID = "__spine_uid"
-
-# Plan-keyed caches for the scan-only prep jobs the skew strategies pay
-# (the skew probe's freqItems + verify agg; the bucket-bounds min/max).
-# Key = (applicationId, analyzed-plan semanticHash, extras): a second
-# PIT read of the SAME commit/lineage reuses the verdict instead of
-# re-scanning the feature table — at 100 TB those probes are 1-2 extra
-# full-column scans per call. Semantic hashes are per-plan, so a new
-# commit (new file set → new plan) naturally misses; only an IN-PLACE
-# rewrite of the same files could stale these, the same caveat the
-# reader plan cache documents.
-_PIT_PROBE_CACHE: dict = {}
-_PIT_BOUNDS_CACHE: dict = {}
-
-
-def _plan_key(df: DataFrame, *extra):
-    try:
-        return (
-            df.sparkSession.sparkContext.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            *extra,
-        )
-    except Exception:  # pragma: no cover - plan access blocked
-        return None
-
-
-def _cache_put(cache: dict, key, value):
-    if len(cache) > 256:
-        for k in list(cache)[:128]:
-            del cache[k]
-    cache[key] = value
 
 # strict TTL grammar: "<n> <unit>" with a whitelisted unit. Anything
 # else (typos, stray parens, injection attempts) is rejected at the
@@ -160,8 +132,9 @@ def point_in_time_join(
     EAGERNESS: ``strategy='auto'`` and ``'union_window_skew'`` run
     scan-only prep jobs at CALL time (the skew probe; the bucket-bounds
     min/max) rather than being fully lazy like the other strategies.
-    Both verdicts are cached per (application, plan) so repeated calls
-    over the same commit/lineage pay them once."""
+    Both results are memoized per (application, plan, leaf file set)
+    (``plan_memo``), so repeated calls over the same files pay them
+    once; a frame that lists no files pays them on every call."""
     max_staleness = validate_max_staleness(max_staleness)
     keys = list(keys)
     if features is None:
@@ -235,22 +208,21 @@ def _pit_skew_probe(
     strategy is output-identical, so dispatching to it on a confirmed
     candidate is always safe.
 
-    The verdict is cached per (application, feature-plan, keys):
-    repeated reads of the same commit/lineage probe ONCE, not once per
-    PIT call (``strategy='auto'`` otherwise re-scans the feature table
-    twice per call — real money at 100 TB)."""
-    ck = _plan_key(feature_df, tuple(keys), support)
-    if ck is not None and ck in _PIT_PROBE_CACHE:
-        return _PIT_PROBE_CACHE[ck]
-    probe_col = (
-        F.col(keys[0]).cast("string")
-        if len(keys) == 1
-        else F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
-    )
-    sample = feature_df.select(probe_col.alias("__k"))
-    cand = sample.stat.freqItems(["__k"], support=support).first()[0]
-    verdict = False
-    if cand:
+    The verdict is memoized per (application, feature plan, leaf file
+    set, keys) (``plan_memo``): repeated reads of the same files probe
+    ONCE, not once per PIT call (``strategy='auto'`` otherwise re-scans
+    the feature table twice per call — real money at 100 TB)."""
+
+    def probe() -> bool:
+        probe_col = (
+            F.col(keys[0]).cast("string")
+            if len(keys) == 1
+            else F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
+        )
+        sample = feature_df.select(probe_col.alias("__k"))
+        cand = sample.stat.freqItems(["__k"], support=support).first()[0]
+        if not cand:
+            return False
         # verify EVERY candidate: freqItems(support=s) returns at most
         # ~1/s entries (50 at the default), so the verify agg stays one
         # bounded scalar row — an arbitrary truncation here could drop
@@ -264,12 +236,11 @@ def _pit_skew_probe(
             ],
         ).first()
         total = row["__n"] or 0
-        verdict = total > 0 and any(
+        return total > 0 and any(
             (row[f"__c{i}"] or 0) > support * total for i in range(len(cand))
         )
-    if ck is not None:
-        _cache_put(_PIT_PROBE_CACHE, ck, verdict)
-    return verdict
+
+    return memo(plan_key("pit_probe", feature_df, tuple(keys), support), probe)
 
 
 def _cand_struct_type(feature_df, feature_ts, features, precombine):
@@ -455,17 +426,14 @@ def _bucketed_running_max(
     else:
         axis = F.col("__ts").cast("double")
     unioned = unioned.withColumn("__axis", axis)
-    # bucket bounds: one column-pruned min/max agg, cached per plan —
-    # a repeated skew PIT over the same commit/lineage pays this scan
-    # only once (the bounds need not be tight for correctness, only
-    # CONTAIN the data; but a per-plan cache keeps them exact)
-    bk = _plan_key(unioned)
-    if bk is not None and bk in _PIT_BOUNDS_CACHE:
-        lo, hi = _PIT_BOUNDS_CACHE[bk]
-    else:
-        lo, hi = unioned.agg(F.min("__axis"), F.max("__axis")).first()
-        if bk is not None:
-            _cache_put(_PIT_BOUNDS_CACHE, bk, (lo, hi))
+    # bucket bounds: one column-pruned min/max agg, memoized per plan
+    # and file set — a repeated skew PIT over the same files pays this
+    # scan only once (any monotone bucketing gives the same output, so
+    # the bounds matter for balance only, not correctness)
+    lo, hi = memo(
+        plan_key("pit_bounds", unioned),
+        lambda: tuple(unioned.agg(F.min("__axis"), F.max("__axis")).first()),
+    )
     if lo is None or hi is None or not (hi > lo):
         return None
     width = (float(hi) - float(lo)) / skew_buckets

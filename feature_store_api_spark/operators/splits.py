@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.event_time import to_epoch_millis
+from ..plan_memo import memo, plan_key
 
 
 def random_split(
@@ -229,17 +230,6 @@ def temperature_sample(
 #: driver-side from the bucket-offset aggregate
 _NS_BCAST_ITEMS = 2_000_000
 
-#: plan-keyed cache of the candidate table's bucket-count vector (the
-#: ONE eager aggregate negative_sampling pays per call, ≤ index_buckets
-#: rows). Signatures/bucket assignment are deterministic given
-#: (hash_fn, seed, index_buckets), so repeated sampling against the
-#: same candidate catalog — the serving pattern: a stable item catalog
-#: sampled every training run — re-derives an identical vector; keying
-#: on the analyzed plan's semanticHash means any new catalog
-#: commit/file set naturally misses (the same contract as
-#: pit_join's probe/bounds caches).
-_NS_OFFSETS_CACHE: dict = {}
-
 
 def negative_sampling(
     positives: DataFrame,
@@ -303,38 +293,24 @@ def negative_sampling(
     items = items.withColumn(
         "__nsb", F.pmod(bh, F.lit(index_buckets)).cast("int")
     )
-    from .pit_join import _cache_put, _plan_key
-
-    # key on the leaf FILE SET as well as the plan hash: unlike the
-    # PIT probe/bounds caches (where staleness only costs performance)
-    # a stale count vector would desynchronize offsets from the live
-    # row_number pass, so an in-place rewrite that reuses the same
-    # lineage must miss. inputFiles() is a driver-side metadata call;
-    # writers emit unique part names, so a rewrite changes the tuple.
-    # An EMPTY file set is treated like an un-listable plan: a
-    # files-less source (JDBC/DBAPI view, local relation) returns []
-    # without raising, and its canonical plan can stay identical while
-    # the external data changes underneath — never cache those.
-    try:
-        files = tuple(sorted(candidates.inputFiles())) or None
-    except Exception:
-        files = None
-    ck = (
-        None if files is None
-        else _plan_key(candidates, item_col, hash_fn, seed, index_buckets,
-                       files)
-    )
-    if ck is not None and ck in _NS_OFFSETS_CACHE:
-        cnt_rows = _NS_OFFSETS_CACHE[ck]
-    else:
-        cnt_rows = sorted(
+    # the ONE eager aggregate per call: the ≤ index_buckets-row bucket
+    # count vector. It is deterministic given (hash_fn, seed,
+    # index_buckets), so repeated sampling against a stable catalog —
+    # the serving pattern, sampled every training run — reuses it. The
+    # memo key folds in the leaf file set, which matters here: unlike
+    # the PIT probe/bounds (where staleness costs only performance) a
+    # stale count vector would desynchronize the offsets from the live
+    # row_number pass, so an in-place rewrite must miss.
+    cnt_rows = memo(
+        plan_key("ns_offsets", candidates, item_col, hash_fn, seed,
+                 index_buckets),
+        lambda: sorted(
             (r["__nsb"], r["cnt"])
             for r in items.groupBy("__nsb")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
-        )
-        if ck is not None:
-            _cache_put(_NS_OFFSETS_CACHE, ck, cnt_rows)
+        ),
+    )
     m = sum(c for _, c in cnt_rows)
     if m == 0:
         raise ValueError("negative_sampling: empty candidates")

@@ -18,6 +18,8 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plan_memo import memo
+
 
 def _nanos_timestamp_columns(path: str) -> List[str]:
     try:
@@ -66,30 +68,10 @@ def _ensure_nanos_conf(spark: SparkSession) -> None:
         pass
 
 
-# (applicationId, realpath, mtime_ns) → [plans], hand-out counter.
-# spark.read.parquet pays a JVM file-listing + footer schema read
-# (~50-100 ms) EVERY call; for the repeated-scan shape (benchmarks,
-# per-query catalog rebuilds, serving loops) that listing dominates
-# small-query latency. A DataFrame is an immutable logical plan, so
-# reuse is safe as long as the files underneath haven't changed — the
-# mtime in the key invalidates the entry whenever the file or directory
-# is rewritten (Spark's write-temp-then-rename always bumps the dir
-# mtime).
-#
-# Self-join caveat: handing the IDENTICAL DataFrame object to two
-# reads of the same path would change behavior for callers that join
-# them (pre-cache they got independent plans; one shared plan can trip
-# AMBIGUOUS_SELF_JOIN / trivially-true-condition analysis). So each key
-# caches TWO independent plans and alternates hand-outs: consecutive
-# reads of a path get distinct expression IDs (the join-shaped usage),
-# while loops still alternate between two cached plans and never pay
-# the listing again. (A 3+-way self-join of one path repeats a plan —
-# alias both sides explicitly for that, as with any Spark self-join.)
-_PLAN_CACHE: Dict[tuple, list] = {}
-
-
 def _cache_key(spark: SparkSession, path: str):
-    """None = don't cache. For directories the key folds in every
+    """The reader's :func:`~feature_store_api_spark.plan_memo.memo` key:
+    it has no plan before it builds one, so the key is the file listing
+    itself. None = don't cache. For directories the key folds in every
     top-level entry's (name, mtime) so an in-place part-file rewrite —
     which bumps the FILE's mtime but not the directory's — still
     invalidates; dirs containing SUBdirectories (partitioned layouts,
@@ -97,45 +79,47 @@ def _cache_key(spark: SparkSession, path: str):
     try:
         real = os.path.realpath(path)
         st = os.stat(real)
+        key = (spark.sparkContext.applicationId, "read_parquet", real,
+               st.st_mtime_ns)
         if not os.path.isdir(real):
-            return (
-                spark.sparkContext.applicationId, real, st.st_mtime_ns
-            )
+            return key
         entries = []
         with os.scandir(real) as it:
             for e in it:
                 if e.is_dir():
                     return None  # partitioned layout: opt out
                 entries.append((e.name, e.stat().st_mtime_ns))
-        return (
-            spark.sparkContext.applicationId,
-            real,
-            st.st_mtime_ns,
-            tuple(sorted(entries)),
-        )
+        return (*key, tuple(sorted(entries)))
     except OSError:
         return None
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    key = _cache_key(spark, path)
-    if key is not None and key in _PLAN_CACHE:
-        entry = _PLAN_CACHE[key]  # [plans list, hand-out count]
-        plans, n = entry
-        entry[1] = n + 1
-        if n % 2 == 1 and len(plans) == 1:
-            # second hand-out: build ONE independent twin plan (fresh
-            # expression IDs) so `read(p).join(read(p), ...)` behaves
-            # like two pre-cache reads; built lazily, cached forever
-            plans.append(_build_parquet_plan(spark, path))
-        return plans[n % 2 if len(plans) == 2 else 0]
-    df = _build_parquet_plan(spark, path)
-    if key is not None:
-        if len(_PLAN_CACHE) > 256:  # bound: drop the oldest half
-            for k in list(_PLAN_CACHE)[:128]:
-                del _PLAN_CACHE[k]
-        _PLAN_CACHE[key] = [[df], 1]
-    return df
+    """``spark.read.parquet`` with the nanos-timestamp fix, memoized.
+
+    ``spark.read.parquet`` pays a JVM file listing + footer schema read
+    (~50-100 ms) EVERY call; for the repeated-scan shape (per-query
+    catalog rebuilds, serving loops) that listing dominates small-query
+    latency. A DataFrame is an immutable logical plan, so reuse is safe
+    while the listing key above is unchanged.
+
+    Self-join caveat: handing the IDENTICAL DataFrame object to two
+    reads of the same path would change behavior for callers that join
+    them (uncached they get independent plans; one shared plan can trip
+    AMBIGUOUS_SELF_JOIN / trivially-true-condition analysis). So each
+    key holds TWO independent plans and alternates hand-outs:
+    consecutive reads of a path get distinct expression IDs (the
+    join-shaped usage), while loops still alternate between two stored
+    plans and never pay the listing again. (A 3+-way self-join of one
+    path repeats a plan — alias both sides explicitly for that, as with
+    any Spark self-join.)"""
+    # [plans, hand-outs]; an uncacheable path gets a fresh entry per call
+    entry = memo(_cache_key(spark, path), lambda: [[], 0])
+    plans, n = entry
+    if len(plans) <= min(n, 1):  # first hand-out, or the lazy twin
+        plans.append(_build_parquet_plan(spark, path))
+    entry[1] = n + 1
+    return plans[n % 2]
 
 
 def _build_parquet_plan(spark: SparkSession, path: str) -> DataFrame:

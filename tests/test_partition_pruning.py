@@ -117,6 +117,7 @@ def test_read_parquet_cache_detects_inplace_file_rewrite(spark, tmp_path):
     import shutil
     import time
 
+    from feature_store_api_spark import plan_memo
     from feature_store_api_spark.sources.readers import (
         _cache_key,
         read_parquet,
@@ -127,6 +128,7 @@ def test_read_parquet_cache_detects_inplace_file_rewrite(spark, tmp_path):
     k1 = _cache_key(spark, p)
     assert k1 is not None
     assert read_parquet(spark, p).count() == 1
+    assert k1 in plan_memo._CACHE
     time.sleep(0.01)
     # rewrite a part file in place (same name, new mtime)
     part = [f for f in os.listdir(p) if f.endswith(".parquet")][0]
@@ -137,8 +139,10 @@ def test_read_parquet_cache_detects_inplace_file_rewrite(spark, tmp_path):
     crc = os.path.join(p, f".{part}.crc")
     if os.path.exists(crc):
         os.remove(crc)  # local-FS checksum of the old bytes
-    assert _cache_key(spark, p) != k1  # file mtime folded into the key
+    k2 = _cache_key(spark, p)
+    assert k2 != k1  # file mtime folded into the key
     assert read_parquet(spark, p).count() == 2
+    assert k2 in plan_memo._CACHE
 
     # partitioned layout: never cached
     pp = str(tmp_path / "parts.parquet")
@@ -174,3 +178,4 @@ def test_read_parquet_cache_self_join_safe(spark, tmp_path):
     # no unbounded growth) and stay joinable pairwise
     c, d = read_parquet(spark, p), read_parquet(spark, p)
     assert c.join(d, c["k"] == d["k"]).count() == 3
+    assert c is a and d is b  # served from the plan memo

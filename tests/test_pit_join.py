@@ -565,50 +565,58 @@ def test_pit_union_window_skew_null_keys_match_plain(spark):
     ) == [(1, 2.0, 2.0), (2, 3.0, 3.0), (3, 2.0, 2.0)]
 
 
-def test_pit_probe_and_bounds_cached_per_plan(spark):
+def test_pit_probe_and_bounds_cached_per_plan(spark, tmp_path, monkeypatch):
     """strategy='auto'/'union_window_skew' prep jobs (skew probe,
-    bucket-bounds min/max) are cached per (application, plan): a second
-    PIT call over the same lineage must NOT re-scan the feature table.
-    Pinned by poisoning the cache entries and observing the poisoned
-    values drive the second call (recompute would overwrite/ignore
-    them)."""
+    bucket-bounds min/max) are memoized per (application, plan, file
+    set): a second PIT call over the same files must NOT re-scan the
+    feature table. Pinned by poisoning the memo entries and observing
+    the poisoned values drive the second call (recompute would
+    overwrite/ignore them)."""
     import datetime as dt
 
+    from feature_store_api_spark import plan_memo
     from feature_store_api_spark.operators import pit_join as P
 
     base = dt.datetime(2024, 5, 1)
-    feat = spark.createDataFrame(
+    path = str(tmp_path / "feat")
+    spark.createDataFrame(
         [(0 if j % 2 == 0 else j % 37, base + dt.timedelta(minutes=j % 300),
           float(j)) for j in range(2000)],
         "k long, fts timestamp, v double",
-    )
+    ).write.parquet(path)
+    # plans without files never cache, so the feature side reads files
+    feat = spark.read.parquet(path)
     spine = spark.createDataFrame(
         [(i, i % 37, base + dt.timedelta(minutes=150)) for i in range(200)],
         "event_id long, k long, ts timestamp",
     )
 
-    P._PIT_PROBE_CACHE.clear()
-    P._PIT_BOUNDS_CACHE.clear()
+    monkeypatch.setattr(plan_memo, "_CACHE", {})
+    store = plan_memo._CACHE
+
+    def keys(tag):
+        return [k for k in store if k[1] == tag]
+
     assert P._pit_skew_probe(feat, ["k"]) is True
-    assert len(P._PIT_PROBE_CACHE) == 1
-    (ck,) = P._PIT_PROBE_CACHE
-    # poison: a cached verdict short-circuits the probe entirely
-    P._PIT_PROBE_CACHE[ck] = False
+    assert len(keys("pit_probe")) == 1
+    (ck,) = keys("pit_probe")
+    # poison: a memoized verdict short-circuits the probe entirely
+    store[ck] = False
     assert P._pit_skew_probe(feat, ["k"]) is False
-    P._PIT_PROBE_CACHE[ck] = True
+    store[ck] = True
 
     out1 = P.point_in_time_join(
         spine, feat, keys=["k"], spine_ts="ts", feature_ts="fts",
         features=["v"], prefix="f_", strategy="union_window_skew",
         skew_buckets=8,
     ).collect()
-    assert len(P._PIT_BOUNDS_CACHE) == 1
-    (bk,) = P._PIT_BOUNDS_CACHE
-    lo, hi = P._PIT_BOUNDS_CACHE[bk]
+    assert len(keys("pit_bounds")) == 1
+    (bk,) = keys("pit_bounds")
+    lo, hi = store[bk]
     # poison bounds with a WIDER (still containing) range: correctness
     # must hold (bounds only need to contain the data), and the changed
-    # bucket layout proves the cached value was used, not recomputed
-    P._PIT_BOUNDS_CACHE[bk] = (lo - 10_000_000, hi + 10_000_000)
+    # bucket layout proves the memoized value was used, not recomputed
+    store[bk] = (lo - 10_000_000, hi + 10_000_000)
     out2 = P.point_in_time_join(
         spine, feat, keys=["k"], spine_ts="ts", feature_ts="fts",
         features=["v"], prefix="f_", strategy="union_window_skew",
@@ -616,6 +624,23 @@ def test_pit_probe_and_bounds_cached_per_plan(spark):
     ).collect()
     key = lambda rows: sorted((r["event_id"], r["f_v"]) for r in rows)
     assert key(out1) == key(out2)
-    assert P._PIT_BOUNDS_CACHE[bk] == (lo - 10_000_000, hi + 10_000_000)
-    P._PIT_PROBE_CACHE.clear()
-    P._PIT_BOUNDS_CACHE.clear()
+    assert store[bk] == (lo - 10_000_000, hi + 10_000_000)
+
+
+def test_pit_skew_probe_misses_after_overwrite_at_same_path(spark, tmp_path):
+    """An overwrite at the same path yields a plan whose semanticHash is
+    unchanged (the hash ignores the relation's file list), so a verdict
+    keyed on the hash alone would outlive the data it described. The
+    probe's memo key folds in the leaf file set: after the rewrite the
+    probe runs again and sees the new hot key."""
+    from feature_store_api_spark.operators.pit_join import _pit_skew_probe
+
+    path = str(tmp_path / "feat")
+    spark.range(2000).select(F.col("id").alias("k")).write.parquet(path)
+    assert _pit_skew_probe(spark.read.parquet(path), ["k"]) is False
+
+    spark.range(2000).select(
+        F.when(F.col("id") % 2 == 0, F.lit(0)).otherwise(F.col("id"))
+        .alias("k")
+    ).write.mode("overwrite").parquet(path)
+    assert _pit_skew_probe(spark.read.parquet(path), ["k"]) is True

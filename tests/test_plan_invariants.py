@@ -431,3 +431,28 @@ def test_dbapi_read_partitions_match_spec(spark, tmp_path):
     # final section only)
     final = _plan(out).split("== Initial Plan ==")[0]
     assert final.count("Exchange") == 1, final
+
+
+def test_plan_memo_is_the_only_cache():
+    """Driver-side planning results are cached in one place, under one
+    staleness rule: ``plan_memo``. A second module-level ``_…CACHE…``
+    dict, or a second ``semanticHash`` key, would bring back a second
+    contract (a semanticHash-only key served stale verdicts after an
+    overwrite at the same path)."""
+    import pathlib
+    import re
+
+    import feature_store_api_spark
+
+    root = pathlib.Path(feature_store_api_spark.__file__).parent
+    binding = re.compile(r"^_[A-Z_]*CACHE[A-Z_]*\s*[:=]", re.M)
+    sources = sorted(root.rglob("*.py"))
+    assert len(sources) > 10
+    offenders = [
+        str(path.relative_to(root))
+        for path in sources
+        if path.name != "plan_memo.py"
+        and ("semanticHash" in path.read_text()
+             or binding.search(path.read_text()))
+    ]
+    assert offenders == []

@@ -324,13 +324,19 @@ def test_negative_sampling_semantics(spark):
         negative_sampling(pos, cand.limit(0), "user_id", "item_id")
 
 
-def test_negative_sampling_offsets_cache_gates(spark, tmp_path):
-    """The bucket-offsets cache only engages for file-backed candidate
+def test_negative_sampling_offsets_cache_gates(spark, tmp_path, monkeypatch):
+    """The bucket-offsets memo only engages for file-backed candidate
     frames (a files-less source can change underneath an identical
     canonical plan — never cached), and an in-place rewrite of the
     candidate files misses via the file-set key so samples always come
     from the live catalog."""
+    from feature_store_api_spark import plan_memo
     from feature_store_api_spark.operators import splits as sp
+
+    monkeypatch.setattr(plan_memo, "_CACHE", {})
+
+    def offsets_entries():
+        return [k for k in plan_memo._CACHE if k[1] == "ns_offsets"]
 
     pos = spark.createDataFrame(
         [(u, u) for u in range(4)], "user_id long, item_id long"
@@ -338,11 +344,10 @@ def test_negative_sampling_offsets_cache_gates(spark, tmp_path):
     local_cand = spark.createDataFrame(
         [(i,) for i in range(30)], "item_id long"
     )
-    sp._NS_OFFSETS_CACHE.clear()
     sp.negative_sampling(
         pos, local_cand, "user_id", "item_id", n_negatives=2, seed=3
     ).collect()
-    assert not sp._NS_OFFSETS_CACHE, "files-less candidates must not cache"
+    assert not offsets_entries(), "files-less candidates must not cache"
 
     path = str(tmp_path / "cand")
     spark.range(20, 40).select(F.col("id").alias("item_id")).write.mode(
@@ -352,7 +357,7 @@ def test_negative_sampling_offsets_cache_gates(spark, tmp_path):
     out1 = sp.negative_sampling(
         pos, file_cand, "user_id", "item_id", n_negatives=2, seed=3
     ).collect()
-    assert len(sp._NS_OFFSETS_CACHE) == 1, "file-backed candidates cache"
+    assert len(offsets_entries()) == 1, "file-backed candidates cache"
     assert all(
         20 <= r["item_id"] < 40 for r in out1 if r["label"] == 0
     )
@@ -368,7 +373,7 @@ def test_negative_sampling_offsets_cache_gates(spark, tmp_path):
     ).collect()
     negs2 = [r["item_id"] for r in out2 if r["label"] == 0]
     assert negs2 and all(100 <= i < 120 for i in negs2)
-    assert len(sp._NS_OFFSETS_CACHE) == 2
+    assert len(offsets_entries()) == 2
 
 
 def test_feature_view_pit_strategy_override(spark, tmp_path):
