@@ -1328,65 +1328,6 @@ def main():
 #    vs a FASTER oracle sample; its 5M-distinct exact-count floor note
 #    stands.
 
-def hint_ab():
-    """A/B for VERDICT r14 watch-item #2: does the compiler's hint
-    bookkeeping (filter + keep-set computation, read_source hint
-    kwargs) add measurable plan time to the small scheduling-floor
-    queries? Runs b1/b2 shapes N times compiled with push_hints on vs
-    off (compile_query knob, same exact semantics) and prints mins.
-    Invoke: python bench.py --hint-ab  (never concurrently with the
-    main board)."""
-    from feature_store_api_spark.plans.compiler import compile_query
-
-    spark = get_spark("fsas-bench-ab")
-    read_parquet(spark, f"{SF_DIR}/nation.parquet").count()
-    cat = testdata_catalog(spark, SF_DIR)
-
-    def q_b1():
-        li = cat.get_feature_group("lineitem")
-        return (
-            li.select(["l_orderkey", "l_linenumber", "l_extendedprice",
-                       "l_discount", "l_shipdate"])
-            .filter((li.l_shipdate < "1996-01-01") & (li.l_discount >= 0.05))
-        )
-
-    def q_b2():
-        o, c, n = (cat.get_feature_group(x)
-                   for x in ("orders", "customer", "nation"))
-        return (
-            o.select(["o_orderkey", "o_custkey", "o_totalprice"])
-            .join(c.select(["c_custkey", "c_name", "c_nationkey"]),
-                  left_on=["o_custkey"], right_on=["c_custkey"])
-            .join(n.select(["n_name"]),
-                  left_on=["c_nationkey"], right_on=["n_nationkey"],
-                  prefix="nat_")
-            .filter(o.o_totalprice > 100000)
-        )
-
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "9"))
-    out = {}
-    for name, qf in (("b1", q_b1), ("b2", q_b2)):
-        # warm BOTH configs first, then INTERLEAVE samples — a
-        # sequential on-then-off order would hand the second config all
-        # the shared warm-up (relation caches, codegen) and fake a win
-        _force(compile_query(qf(), spark, push_hints=True))
-        _force(compile_query(qf(), spark, push_hints=False))
-        ts = {True: [], False: []}
-        for _ in range(runs):
-            for hints in (True, False):
-                t0 = time.time()
-                _force(compile_query(qf(), spark, push_hints=hints))
-                ts[hints].append(round(time.time() - t0, 4))
-        for hints in (True, False):
-            key = f"{name}_hints_{'on' if hints else 'off'}"
-            v = ts[hints]
-            out[key] = {"min": min(v), "median": sorted(v)[len(v) // 2],
-                        "samples": v}
-            print(f"# {key}: min {min(v)} median {sorted(v)[len(v)//2]} "
-                  f"{v}", file=sys.stderr)
-    print(json.dumps({"metric": "hint_ab", "sf": SF, "results": out}))
-
-
 def prune_ab():
     """One-number quantification of the r14/r15 pruning machinery
     (VERDICT r14 #6): a FeatureView batch-window read over MANAGED
@@ -1509,9 +1450,7 @@ def prune_ab():
 
 
 if __name__ == "__main__":
-    if "--hint-ab" in sys.argv:
-        hint_ab()
-    elif "--prune-ab" in sys.argv:
+    if "--prune-ab" in sys.argv:
         prune_ab()
     else:
         main()
@@ -1602,8 +1541,9 @@ if __name__ == "__main__":
 # APPENDIX — r15 A/Bs: hint bookkeeping cost + batch-window pruning win
 # ---------------------------------------------------------------------------
 # 1. HINT OVERHEAD (VERDICT r14 watch-item #2: "confirm the b2 drift is
-#    floor noise, not hint overhead"). python bench.py --hint-ab,
-#    interleaved 9-sample pairs, sf0.1, same box/session:
+#    floor noise, not hint overhead"). A since-removed
+#    python bench.py --hint-ab, interleaved 9-sample pairs, sf0.1, same
+#    box/session:
 #      b1 hints ON  min 0.1927  median 0.2606
 #      b1 hints OFF min 0.1853  median 0.2337
 #      b2 hints ON  min 0.2706  median 0.3178
@@ -1612,9 +1552,9 @@ if __name__ == "__main__":
 #    (spreads 0.19-0.31 / 0.27-0.52), and b2's MEDIAN is lower WITH
 #    hints. Verdict: the r14 b2 vs_oracle_min creep (5.0 -> 5.52) is
 #    floor/session noise, not hint bookkeeping; the floor pin stands.
-#    The keep-set walk is pure list arithmetic (~us per node); the
-#    compile-time knob (compile_query(push_hints=False)) stays for
-#    future re-checks.
+#    The keep-set walk is pure list arithmetic (~us per node). With the
+#    A/B flat, compile_query's hints-off knob and the --hint-ab mode
+#    were removed; hints are now off only under skip_filters.
 # 2. BATCH-WINDOW PRUNING WIN (VERDICT r14 #6). python bench.py
 #    --prune-ab: a 2-week get_batch_data window over a YEAR of
 #    day-partitioned spine history (1.2 M rows, 365 partitions, sf0.1),

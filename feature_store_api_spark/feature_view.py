@@ -16,6 +16,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .constructor.filter import filters_to_column, normalize_filters
 from .constructor.query import Query
 from .feature_group import SpineGroup
 from .functions.event_time import to_epoch_millis
@@ -279,7 +280,7 @@ class FeatureView:
 
         logic = self.query.filters
         if logic is not None:
-            out = out.where(logic.to_column(lambda feat: F.col(feat.name)))
+            out = out.where(filters_to_column(normalize_filters(logic)))
         return out
 
     @staticmethod
@@ -988,7 +989,7 @@ class FeatureView:
             if isinstance(filter, _Column):
                 df = df.where(filter)
             else:
-                df = df.where(filter.to_column(lambda feat: F.col(feat.name)))
+                df = df.where(filters_to_column(normalize_filters(filter)))
         return df.drop(self._LOG_ID, self._LOG_TIME)
 
     def get_log_timeline(

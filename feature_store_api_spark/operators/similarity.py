@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..constructor.filter import filters_to_column, normalize_filters
 from .parallelism import repartition_up
 
 
@@ -127,11 +128,7 @@ def find_neighbors(
         if isinstance(filter, Column):
             df = df.where(filter)
         else:
-            from ..plans.compiler import _make_resolver  # Filter/Logic IR
-
-            df = df.where(
-                (filter.to_column(lambda feat: F.col(feat.name)))
-            )
+            df = df.where(filters_to_column(normalize_filters(filter)))
     dist = distance_expr(col, embedding, metric)
     scored = df.withColumn("distance", F.round(dist.cast("double"), 6))
     return scored.orderBy(F.col("distance").asc()).limit(k)
@@ -437,7 +434,7 @@ def read_by_keys(df: DataFrame, key_col: str, keys: Sequence) -> DataFrame:
     """Fetch index rows by key list (parity
     ``core/vector_db_client.py:311-379`` read-index path): an IN filter
     the scanner pushes down; batched lookups stay a single scan."""
-    return df.where(F.col(key_col).isin(list(keys)))
+    return df.where(F.col(key_col).isin(*keys))
 
 
 def index_count(df: DataFrame) -> int:

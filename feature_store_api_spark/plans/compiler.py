@@ -30,6 +30,7 @@ from typing import Dict, List, Optional, Set, Tuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..constructor.filter import filters_to_column, normalize_filters
 from ..constructor.join import JoinType
 from ..feature import autofix_feature_name
 
@@ -74,7 +75,7 @@ def _compile_node(
     online: bool,
     filter_refs: Set[Tuple[int, str]],
     extra_keep: Tuple[str, ...] = (),
-    push_hints: bool = True,
+    skip_filters: bool = False,
 ):
     """Compile one Query node.
 
@@ -95,7 +96,7 @@ def _compile_node(
     # (skip_filters preview contract) or when latest-per-key resolution
     # runs first (online): pre-filtering the source would resurrect
     # superseded versions / filter the preview sample
-    if push_hints and not online and q._filter is not None:
+    if not skip_filters and not online and q._filter is not None:
         try:
             refs = q._filter.referenced_features()
         except Exception:
@@ -119,7 +120,7 @@ def _compile_node(
     # the pushed projection (a default-valued feature may legitimately
     # be absent), never an error.
     cols_hint: Optional[List[str]] = None
-    if push_hints:
+    if not skip_filters:
         cols_hint = []
         for c in (
             [f.name for f in q.left_features]
@@ -208,7 +209,7 @@ def _compile_node(
         lkeys, rkeys = _join_keys(q, join)
         rdf, rsel, rcolmap, rpending = _compile_node(
             join.query, spark, online, filter_refs,
-            extra_keep=tuple(rkeys), push_hints=push_hints,
+            extra_keep=tuple(rkeys), skip_filters=skip_filters,
         )
         using = bool(lkeys) and lkeys == rkeys
         absent = [k for k in lkeys if k not in df.columns]
@@ -222,7 +223,7 @@ def _compile_node(
         if how in (JoinType.LEFT_SEMI, JoinType.LEFT_ANTI):
             # right-side filters can't apply post-join; consume them now
             for logic, scope in rpending:
-                rdf = rdf.where(logic.to_column(_make_resolver(scope)))
+                rdf = rdf.where(_scoped_column(logic, scope))
             rdf = rdf.select(*[F.col(k) for k in rkeys])
             if using:
                 df = df.join(rdf, on=list(rkeys), how=how)
@@ -300,35 +301,37 @@ def _latest_per_key(df: DataFrame, fg) -> DataFrame:
     )
 
 
-def _make_resolver(colmap):
-    def resolve(feature) -> Column:
+def _colmap_name(colmap):
+    """Filter leaf -> plan column: the feature's own group entry in
+    ``colmap``, else the one column of that feature name."""
+    def name(feature) -> str:
         fg = feature.feature_group
         if fg is not None:
-            name = colmap.get((id(fg), feature.name))
-            if name is not None:
-                return F.col(name)
+            col = colmap.get((id(fg), feature.name))
+            if col is not None:
+                return col
         hits = {v for (fgid, fname), v in colmap.items() if fname == feature.name}
         if len(hits) == 1:
-            return F.col(next(iter(hits)))
+            return next(iter(hits))
         if len(hits) > 1:
             raise ValueError(f"Ambiguous filter feature {feature.name!r}")
         raise KeyError(f"Filter feature {feature.name!r} not found in plan")
 
-    return resolve
+    return name
+
+
+def _scoped_column(logic, colmap) -> Column:
+    return filters_to_column(normalize_filters(logic, name=_colmap_name(colmap)))
 
 
 def compile_query(
     q, spark: SparkSession, online: bool = False, skip_filters: bool = False,
-    push_hints: bool = True,
 ) -> DataFrame:
     """``skip_filters=True`` compiles the plan WITHOUT the query's
     WHERE conditions — the online-preview contract: the reference's
     preview statement strips everything from `` WHERE `` and appends
-    LIMIT (``core/online_store_sql_engine.py:464-465``).
-
-    ``push_hints=False`` keeps the exact semantics but skips handing
-    filter/projection hints to sources — an A/B knob for measuring the
-    hint bookkeeping's plan-time cost (bench.py appendix)."""
+    LIMIT (``core/online_store_sql_engine.py:464-465``); it also hands
+    sources no filter/projection hints."""
     logic_all = q.filters
     filter_refs = (
         {
@@ -340,14 +343,13 @@ def compile_query(
         else set()
     )
     df, sel, colmap, pending = _compile_node(
-        q, spark, online, filter_refs,
-        push_hints=push_hints and not skip_filters,
+        q, spark, online, filter_refs, skip_filters=skip_filters,
     )
 
     cond = None
     if not skip_filters:
         for logic, scope in pending:
-            c = logic.to_column(_make_resolver(scope))
+            c = _scoped_column(logic, scope)
             cond = c if cond is None else (cond & c)
     if cond is not None:
         df = df.where(cond)

@@ -19,12 +19,12 @@ templated).
 
 from __future__ import annotations
 
+import math
 from typing import Dict, List, Tuple
 
-from ..constructor.filter import Filter, Logic
+from ..constructor.filter import Filter, normalize_filters
 from ..constructor.join import JoinType
-from ..feature import autofix_feature_name
-from .compiler import _join_keys
+from .compiler import _colmap_name, _join_keys
 
 __all__ = ["emit_sql"]
 
@@ -39,6 +39,10 @@ def _lit(v) -> str:
         return "NULL"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
+    if isinstance(v, float) and not math.isfinite(v):
+        # repr() gives the bare words nan/inf, which parse as columns
+        word = "NaN" if math.isnan(v) else "Infinity" if v > 0 else "-Infinity"
+        return f"CAST('{word}' AS DOUBLE)"
     if isinstance(v, (int, float)):
         return repr(v)
     if isinstance(v, (list, tuple, set)):
@@ -46,42 +50,37 @@ def _lit(v) -> str:
     if hasattr(v, "isoformat"):
         kind = "DATE" if not hasattr(v, "hour") else "TIMESTAMP"
         return f"{kind} '{v.isoformat(sep=' ') if kind == 'TIMESTAMP' else v.isoformat()}'"
-    s = str(v).replace("'", "''")
+    # Spark's parser drops an unknown escape ('C:\dir' reads C:dir), so
+    # every backslash is doubled; ANSI parsers never see one (the DBAPI
+    # pushdown keeps backslashes out, connectors._stable_value)
+    s = str(v).replace("\\", "\\\\").replace("'", "''")
     return f"'{s}'"
 
 
-_OPS = {
-    Filter.GE: ">=", Filter.GT: ">", Filter.NE: "!=", Filter.EQ: "=",
-    Filter.LE: "<=", Filter.LT: "<",
+_SQL_OPS = {
+    Filter.GE: ">=", Filter.GT: ">", Filter.NE: "<>", Filter.EQ: "=",
+    Filter.LE: "<=", Filter.LT: "<", Filter.LK: "LIKE",
 }
 
 
-def _filter_sql(node, colmap: Dict[Tuple[int, str], str]) -> str:
-    if isinstance(node, Logic):
-        if node.type == Logic.SINGLE:
-            return _filter_sql(node._left, colmap)
-        l = _filter_sql(node._left, colmap)
-        r = _filter_sql(node._right, colmap)
-        return f"({l} {node.type} {r})"
-    f: Filter = node
-    fg = f.feature.feature_group
-    name = None
-    if fg is not None:
-        name = colmap.get((id(fg), f.feature.name))
-    if name is None:
-        hits = {v for (_, fn), v in colmap.items() if fn == f.feature.name}
-        if len(hits) != 1:
-            raise ValueError(
-                f"Cannot emit filter on {f.feature.name!r}: "
-                + ("ambiguous" if hits else "not in plan")
-            )
-        name = next(iter(hits))
-    col = _q(name)
-    if f.condition == Filter.IN:
-        return f"{col} IN {_lit(list(f.value))}"
-    if f.condition == Filter.LK:
-        return f"{col} LIKE {_lit(f.value)}"
-    return f"{col} {_OPS[f.condition]} {_lit(f.value)}"
+def _pred_sql(tree: tuple) -> str:
+    """SQL text of a normalized filter tree; column names print as the
+    tree holds them."""
+    if tree[0] != "leaf":
+        return f"({_pred_sql(tree[1])} {tree[0].upper()} {_pred_sql(tree[2])})"
+    _, col, op, value = tree
+    if op == Filter.IN:
+        values = list(value)
+        # an empty IN is never true; the IR has no NOT, so FALSE is
+        # equivalent inside a WHERE
+        return f"{col} IN {_lit(values)}" if values else "FALSE"
+    return f"{col} {_SQL_OPS[op]} {_lit(value)}"
+
+
+def _scoped_sql(logic, colmap) -> str:
+    """A query filter bound to one plan scope's columns, quoted."""
+    name = _colmap_name(colmap)
+    return _pred_sql(normalize_filters(logic, name=lambda f: _q(name(f))))
 
 
 def _view_name(fg) -> str:
@@ -161,7 +160,7 @@ def _emit_node(q, filter_refs, extra_keep: Tuple[str, ...] = ()) -> _Emit:
             for logic, scope in sub.pending:
                 rsql = (
                     f"(SELECT * FROM {rsql} AS __f{alias_i} "
-                    f"WHERE {_filter_sql(logic, scope)})"
+                    f"WHERE {_scoped_sql(logic, scope)})"
                 )
             word = "EXISTS" if how == JoinType.LEFT_SEMI else "NOT EXISTS"
             semi = (
@@ -289,7 +288,7 @@ def emit_sql(q) -> str:
     )
     node = _emit_node(q, filter_refs)
     where = [
-        _filter_sql(logic, scope) for logic, scope in node.pending
+        _scoped_sql(logic, scope) for logic, scope in node.pending
     ]
     out, seen = [], set()
     for name in node.sel:
@@ -306,34 +305,11 @@ def emit_sql(q) -> str:
     return sql
 
 
-def filter_ir_to_sql(filters, quote=None) -> str:
+def filter_ir_to_sql(filters) -> str:
     """Emit a standalone ANSI-SQL predicate from a Filter IR tree (or
     normalized-tuple form) — the pushdown string connector reads hand
-    to an external database (``WHERE`` text, no table aliases). Unlike
-    :func:`_filter_sql` this needs no plan colmap: it is used BEFORE a
-    plan exists, at source-read time."""
-    from ..sources.iceberg_prune import normalize_filters
-
+    to an external database (``WHERE`` text, no table aliases, column
+    names unquoted). It needs no plan colmap: it is used BEFORE a plan
+    exists, at source-read time."""
     tree = normalize_filters(filters)
-    if tree is None:
-        return ""
-    q = quote or (lambda n: n)
-
-    def emit(node) -> str:
-        kind = node[0]
-        if kind in ("and", "or"):
-            return f"({emit(node[1])} {kind.upper()} {emit(node[2])})"
-        _, name, op, value = node
-        col = q(name)
-        if op == "IN":
-            return f"{col} IN {_lit(list(value))}"
-        if op == "LIKE":
-            return f"{col} LIKE {_lit(value)}"
-        sym = {
-            "EQUALS": "=", "NOT_EQUALS": "<>", "GREATER_THAN": ">",
-            "GREATER_THAN_OR_EQUAL": ">=", "LESS_THAN": "<",
-            "LESS_THAN_OR_EQUAL": "<=",
-        }[op]
-        return f"{col} {sym} {_lit(value)}"
-
-    return emit(tree)
+    return "" if tree is None else _pred_sql(tree)

@@ -78,7 +78,7 @@ class TimeTravelBackend:
     ) -> Optional[DataFrame]:
         """All live commit rows (schema-unioned), or None before the
         first commit. ``filters`` is an optional PARTITION-ONLY
-        pushdown subtree (see ``iceberg_prune.partition_subtree``) —
+        pushdown subtree (see ``constructor.filter.partition_subtree``) —
         backends that can prune files/groups on it do; ignoring it is
         always correct (the store and compiler re-apply exact
         predicates)."""
@@ -221,7 +221,7 @@ class CommitLogBackend(TimeTravelBackend):
             return None
         df = spark.read.option("mergeSchema", "true").parquet(self._data_path)
         if filters is not None:
-            from .iceberg_prune import filters_to_column, remap_tree
+            from ..constructor.filter import filters_to_column, remap_tree
 
             bound = remap_tree(filters, df.columns)
             if bound is not None:

@@ -435,7 +435,7 @@ class CommitStore:
         versions through the latest-per-key resolution below."""
         tree = None
         if filters is not None and self.partition_key:
-            from .iceberg_prune import (
+            from ..constructor.filter import (
                 normalize_filters,
                 partition_subtree,
             )

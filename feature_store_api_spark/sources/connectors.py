@@ -17,9 +17,12 @@ Spark's own missing-data-source error untouched.
 
 from __future__ import annotations
 
+import re
 from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..constructor.filter import Filter
 
 
 def _stable_value(value, op) -> bool:
@@ -53,11 +56,11 @@ def _stable_value(value, op) -> bool:
     for every operator."""
     import math
 
-    if op == "IN":
+    if op == Filter.IN:
         vals = list(value) if isinstance(value, (list, tuple, set)) else None
         if not vals:
             return False
-        return all(_stable_value(v, "EQUALS") for v in vals)
+        return all(_stable_value(v, Filter.EQ) for v in vals)
     if value is None or isinstance(value, (bytes, bytearray)):
         return False
     if isinstance(value, bool):
@@ -69,16 +72,16 @@ def _stable_value(value, op) -> bool:
     if isinstance(value, (int, float)):
         return True
     if isinstance(value, str):
-        if op not in ("EQUALS",):
+        if op != Filter.EQ:
             return False
         return "\\" not in value and "\x00" not in value
     return False
 
 
-def _plain_ident_subtree(tree):
-    """Keep only leaves that are safe to evaluate database-side
-    (AND keeps the other side, OR drops whole — same weakening as
-    ``iceberg_prune.remap_tree``). Two gates:
+def _plain_ident_leaf(leaf):
+    """Keep-leaf function for :func:`~..constructor.filter.weaken`:
+    the leaf if it is safe to evaluate database-side, else None. Two
+    gates:
 
     * the bound column must be a PLAIN identifier: identifier QUOTING
       is dialect-dependent across PEP 249 drivers (ANSI double quotes
@@ -89,24 +92,10 @@ def _plain_ident_subtree(tree):
       string range/LIKE/inequality under a foreign collation, or a
       backslash-mangled literal, can REJECT rows Spark would keep —
       and the root predicate cannot resurrect them."""
-    import re as _re
-
-    if tree is None:
+    _, name, op, value = leaf
+    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
         return None
-    kind = tree[0]
-    if kind in ("and", "or"):
-        left = _plain_ident_subtree(tree[1])
-        right = _plain_ident_subtree(tree[2])
-        if kind == "and":
-            return left if right is None else (
-                right if left is None else ("and", left, right)
-            )
-        return None if (left is None or right is None) else (
-            "or", left, right
-        )
-    if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", tree[1]):
-        return None
-    return tree if _stable_value(tree[3], tree[2]) else None
+    return leaf if _stable_value(value, op) else None
 
 
 class StorageConnector:
@@ -309,8 +298,12 @@ class DbApiConnector(StorageConnector):
             # an explicit options columns wins; any ambiguity skips the
             # projection entirely — a hint must never fail or misread a
             # query that worked without it.
+            from ..constructor.filter import (
+                normalize_filters,
+                remap_tree,
+                weaken,
+            )
             from ..plans.sql_emitter import filter_ir_to_sql
-            from .iceberg_prune import normalize_filters, remap_tree
 
             cols = None
             try:
@@ -326,8 +319,9 @@ class DbApiConnector(StorageConnector):
             except Exception:
                 cols = None  # probe failed: skip all hints, read as-is
             if cols is not None and filters is not None:
-                tree = _plain_ident_subtree(
-                    remap_tree(normalize_filters(filters), cols)
+                tree = weaken(
+                    remap_tree(normalize_filters(filters), cols),
+                    _plain_ident_leaf,
                 )
                 pred = filter_ir_to_sql(tree) if tree is not None else None
                 if pred:
@@ -360,11 +354,7 @@ class DbApiConnector(StorageConnector):
                         if not twins:
                             continue  # absent (e.g. default-valued)
                         phys = twins[0]
-                    import re as _re
-
-                    if not _re.fullmatch(
-                        r"[A-Za-z_][A-Za-z0-9_]*", phys
-                    ):
+                    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", phys):
                         ok = False  # would need dialect quoting
                         break
                     if phys not in proj:

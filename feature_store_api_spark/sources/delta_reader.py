@@ -42,6 +42,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..constructor.filter import (
+    bind_residual,
+    normalize_filters,
+    residual_where,
+)
+
 _LOG_DIR = "_delta_log"
 
 
@@ -554,12 +560,6 @@ def read_delta(
     live = state.files
     tree = None
     if filters is not None and state.schema_json:
-        from .iceberg_prune import (
-            bind_residual,
-            filters_to_column,
-            normalize_filters,
-        )
-
         schema = T.StructType.fromJson(json.loads(state.schema_json))
         # partial loss weakens conservatively; total loss raises (a
         # direct caller must never get a silently unfiltered superset)
@@ -573,11 +573,9 @@ def read_delta(
     if plan_out is not None:
         plan_out["data_files"] = sorted(live)
     df = _frame_for(spark, path, state, live)
-    if tree is not None:
-        # tree is bound to the declared schema names, which are the
-        # output names — exact residual on top of the file pruning
-        df = df.where(filters_to_column(tree))
-    return df
+    # tree is bound to the declared schema names, which are the output
+    # names — exact residual on top of the file pruning
+    return residual_where(df, tree, f"delta table {path}")
 
 
 def delta_incremental(

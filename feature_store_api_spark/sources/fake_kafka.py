@@ -142,7 +142,7 @@ class FakeKafkaBroker:
             for p, o in starting_offsets.items():
                 c = (F.col("partition") == p) & (F.col("offset") >= o)
                 cond = c if cond is None else (cond | c)
-            unseen = ~F.col("partition").isin(list(starting_offsets))
+            unseen = ~F.col("partition").isin(*starting_offsets)
             df = df.where(cond | unseen)
         if ending_offsets:
             cond = None

@@ -58,6 +58,12 @@ from typing import Dict, List, Optional, Set, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..constructor.filter import (
+    normalize_filters,
+    partition_subtree,
+    residual_where,
+)
+
 _META_DIR = ".hoodie"
 
 
@@ -319,15 +325,10 @@ def _partition_dir_pruner(tree, props: Dict[str, str]):
         for c in props.get("hoodie.table.partition.fields", "").split(",")
         if c.strip()
     ]
-    if tree is None or not part_fields:
-        return None
-
-    def refs(node):
-        if node[0] in ("and", "or"):
-            return refs(node[1]) | refs(node[2])
-        return {node[1]}
-
-    if not (refs(tree) & set(part_fields)):
+    # None also when no leaf that could prune names a partition field:
+    # an OR mixing one with another column never prunes anyway (the
+    # other leaf always may-match)
+    if not part_fields or partition_subtree(tree, part_fields) is None:
         return None
 
     def _views(tok: str, value):
@@ -425,18 +426,12 @@ def read_hudi(
     the partition columns in the data files, and surfacing the
     directory twin would change the scanned schema.
 
-    ``filters`` (Filter IR / tuples, see :mod:`.iceberg_prune`) prunes
-    FILE GROUPS whose hive-style partition directory values cannot
+    ``filters`` (Filter IR / tuples, see :mod:`..constructor.filter`)
+    prunes FILE GROUPS whose hive-style partition directory values cannot
     match — the only partition pruning available to the MOR merge path,
     which bypasses Spark directory discovery entirely (log blocks
     decode in ``mapInPandas``, out of Catalyst's reach) — then applies
     the exact residual row predicate."""
-    from .iceberg_prune import (
-        bind_residual,
-        filters_to_column,
-        normalize_filters,
-    )
-
     meta_dir = os.path.join(path, _META_DIR)
     if not os.path.isdir(meta_dir):
         raise FileNotFoundError(f"No Hudi timeline at {meta_dir}")
@@ -471,10 +466,7 @@ def read_hudi(
         }
 
     def residual(df: DataFrame) -> DataFrame:
-        if tree is None:
-            return df
-        bound = bind_residual(tree, df.columns, f"hudi table {path}")
-        return df.where(filters_to_column(bound)) if bound else df
+        return residual_where(df, tree, f"hudi table {path}")
 
     def _pruned_to_nothing() -> DataFrame:
         """A filter that prunes EVERY group is a normal empty result,

@@ -8,7 +8,8 @@ manifest entry's ``data_file.partition`` tuple and per-column
 ``lower_bounds``/``upper_bounds`` stat maps (iceberg.apache.org/spec
 "Scan Planning"; the reference consumes this via iceberg-spark's
 planFiles, storage_connector.py read path). This module evaluates the
-engine's Filter IR conservatively against those operands so a filtered
+engine's normalized Filter IR tree (:mod:`..constructor.filter`)
+conservatively against those operands so a filtered
 read of a NON-hive-layout or transform-partitioned table drops data
 files — and whole manifests — before the Spark scan is built, instead
 of scanning every file. "Conservative" = a file is only dropped when
@@ -32,114 +33,12 @@ import struct
 from datetime import date, datetime, timedelta, timezone
 from typing import Any, Callable, Dict, List, Optional, Tuple
 
-__all__ = [
-    "normalize_filters",
-    "filters_to_column",
-    "ScanPruner",
-]
+from ..constructor.filter import Filter
+
+__all__ = ["ScanPruner", "decode_bound", "encode_bound"]
 
 _EPOCH = datetime(1970, 1, 1)
 _EPOCH_D = date(1970, 1, 1)
-
-EQ = "EQUALS"
-NE = "NOT_EQUALS"
-GT = "GREATER_THAN"
-GE = "GREATER_THAN_OR_EQUAL"
-LT = "LESS_THAN"
-LE = "LESS_THAN_OR_EQUAL"
-IN = "IN"
-LK = "LIKE"
-
-_SYMBOL_OPS = {
-    "=": EQ, "==": EQ, "!=": NE, "<>": NE, ">": GT, ">=": GE,
-    "<": LT, "<=": LE, "in": IN, "like": LK,
-}
-_ALL_OPS = set(_SYMBOL_OPS.values())
-
-
-# ---------------------------------------------------------------------------
-# filter normalization: engine Filter IR / tuples -> small tuple tree
-# ---------------------------------------------------------------------------
-
-def normalize_filters(filters) -> Optional[tuple]:
-    """Normalize to ``("and"|"or", left, right)`` /
-    ``("leaf", column, OP, value)`` — accepts the engine's
-    :class:`~..constructor.filter.Filter`/``Logic`` IR (duck-typed), a
-    single ``(col, op, value)`` tuple, or a list of tuples (implicit
-    AND). Returns ``None`` for no filter."""
-    if filters is None:
-        return None
-    if isinstance(filters, tuple) and len(filters) == 3 and isinstance(
-        filters[0], str
-    ) and filters[0] not in ("and", "or", "leaf"):
-        filters = [filters]
-    if isinstance(filters, (list,)):
-        node = None
-        for t in filters:
-            leaf = _norm_one(t)
-            node = leaf if node is None else ("and", node, leaf)
-        return node
-    return _norm_one(filters)
-
-
-def _norm_one(f) -> tuple:
-    if isinstance(f, tuple):
-        if f and f[0] in ("and", "or"):
-            return (f[0], _norm_one(f[1]), _norm_one(f[2]))
-        if f and f[0] == "leaf":
-            return f
-        col, op, value = f
-        op_n = _SYMBOL_OPS.get(str(op).lower(), str(op).upper())
-        if op_n not in _ALL_OPS:
-            raise ValueError(f"unknown filter op {op!r}")
-        return ("leaf", col, op_n, value)
-    # engine Logic node: .type in {AND, OR, SINGLE}, sides on
-    # _left/_right (Filter | Logic)
-    t = getattr(f, "type", None)
-    if t in ("AND", "OR"):
-        return (t.lower(), _norm_one(f._left), _norm_one(f._right))
-    if t == "SINGLE":
-        return _norm_one(f._left)
-    # engine Filter leaf: .feature.name / .condition / .value
-    cond = getattr(f, "condition", None)
-    if cond in _ALL_OPS:
-        return ("leaf", f.feature.name, cond, f.value)
-    raise ValueError(f"cannot normalize filter {f!r}")
-
-
-def filters_to_column(tree: tuple):
-    """Compile a normalized tree to a Spark Column (the exact residual
-    filter applied on top of the pruned scan)."""
-    from pyspark.sql import functions as F
-
-    kind = tree[0]
-    if kind in ("and", "or"):
-        left, right = filters_to_column(tree[1]), filters_to_column(tree[2])
-        return (left & right) if kind == "and" else (left | right)
-    _, name, op, value = tree
-    # physical names may contain dots (field access syntax in col()):
-    # backtick-quote anything that would misparse
-    col = (
-        F.col("`" + name.replace("`", "``") + "`")
-        if ("." in name or "`" in name) else F.col(name)
-    )
-    if op == EQ:
-        return col == value
-    if op == NE:
-        return col != value
-    if op == GT:
-        return col > value
-    if op == GE:
-        return col >= value
-    if op == LT:
-        return col < value
-    if op == LE:
-        return col <= value
-    if op == IN:
-        return col.isin(list(value))
-    if op == LK:
-        return col.like(value)
-    raise AssertionError(op)
 
 
 # ---------------------------------------------------------------------------
@@ -343,10 +242,10 @@ def _like_prefix(pattern: str) -> Optional[str]:
 def _range_may_match(op: str, value, lo, hi) -> bool:
     """May any x in [lo, hi] satisfy ``x <op> value``? Missing bounds
     are unbounded; any coercion failure keeps the file."""
-    if op == IN:
+    if op == Filter.IN:
         vs = list(value) if isinstance(value, (list, tuple, set)) else [value]
-        return any(_range_may_match(EQ, v, lo, hi) for v in vs)
-    if op == LK:
+        return any(_range_may_match(Filter.EQ, v, lo, hi) for v in vs)
+    if op == Filter.LK:
         if not isinstance(value, str):
             return True
         p = _like_prefix(value)
@@ -360,7 +259,7 @@ def _range_may_match(op: str, value, lo, hi) -> bool:
         if lo is not None and isinstance(lo, str):
             ok = ok and lo[: len(p)] <= p
         return ok
-    if op == NE:
+    if op == Filter.NE:
         if lo is None or hi is None:
             return True
         cl = _coerce(lo, value)
@@ -369,7 +268,7 @@ def _range_may_match(op: str, value, lo, hi) -> bool:
             return True
         # all rows equal to value only when lo == hi == value
         return not (cl[0] == cl[1] and ch[0] == ch[1])
-    if op == EQ:
+    if op == Filter.EQ:
         if lo is not None:
             c = _coerce(lo, value)
             if c is not None and c[0] > c[1]:
@@ -379,20 +278,20 @@ def _range_may_match(op: str, value, lo, hi) -> bool:
             if c is not None and c[0] < c[1]:
                 return False
         return True
-    if op in (GT, GE):
+    if op in (Filter.GT, Filter.GE):
         if hi is None:
             return True
         c = _coerce(hi, value)
         if c is None:
             return True
-        return c[0] > c[1] if op == GT else c[0] >= c[1]
-    if op in (LT, LE):
+        return c[0] > c[1] if op == Filter.GT else c[0] >= c[1]
+    if op in (Filter.LT, Filter.LE):
         if lo is None:
             return True
         c = _coerce(lo, value)
         if c is None:
             return True
-        return c[0] < c[1] if op == LT else c[0] <= c[1]
+        return c[0] < c[1] if op == Filter.LT else c[0] <= c[1]
     return True
 
 
@@ -474,20 +373,25 @@ def _transformed_leaf_range_match(
     """Leaf test against bounds that live in PARTITION space."""
     if identity:
         return _range_may_match(op, value, lo, hi)
-    if op == IN:
+    if op == Filter.IN:
         vs = list(value) if isinstance(value, (list, tuple, set)) else [value]
         return any(
-            _transformed_leaf_range_match(transform, EQ, v, lo, hi, False)
+            _transformed_leaf_range_match(
+                transform, Filter.EQ, v, lo, hi, False
+            )
             for v in vs
         )
-    if op in (NE, LK):
+    if op in (Filter.NE, Filter.LK):
         return True  # not order-preserving enough to prune safely
     tv = _transform_value(transform, value)
     if tv is _UNSUPPORTED:
         return True
     # order-preserving transform: x <op> v can only hold when t(x)
     # satisfies the CLOSED version of the comparison against t(v)
-    relaxed = {GT: GE, GE: GE, LT: LE, LE: LE, EQ: EQ}[op]
+    relaxed = {
+        Filter.GT: Filter.GE, Filter.GE: Filter.GE, Filter.LT: Filter.LE,
+        Filter.LE: Filter.LE, Filter.EQ: Filter.EQ,
+    }[op]
     if isinstance(lo, date) or isinstance(hi, date):
         lo = (_as_date(lo) - _EPOCH_D).days if lo is not None else None
         hi = (_as_date(hi) - _EPOCH_D).days if hi is not None else None
@@ -690,13 +594,15 @@ class ScanPruner:
     @staticmethod
     def _identity_match(op: str, value, pv) -> bool:
         """Exact test: every row of the file has the partition value."""
-        if op == IN:
+        if op == Filter.IN:
             vs = (
                 list(value)
                 if isinstance(value, (list, tuple, set)) else [value]
             )
-            return any(ScanPruner._identity_match(EQ, v, pv) for v in vs)
-        if op == LK:
+            return any(
+                ScanPruner._identity_match(Filter.EQ, v, pv) for v in vs
+            )
+        if op == Filter.LK:
             if not isinstance(value, str) or not isinstance(pv, str):
                 return True
             rx = _like_to_re(value)
@@ -706,8 +612,8 @@ class ScanPruner:
             return True
         a, b = c
         return {
-            EQ: a == b, NE: a != b, GT: a > b, GE: a >= b,
-            LT: a < b, LE: a <= b,
+            Filter.EQ: a == b, Filter.NE: a != b, Filter.GT: a > b,
+            Filter.GE: a >= b, Filter.LT: a < b, Filter.LE: a <= b,
         }[op]
 
     @staticmethod
@@ -741,102 +647,3 @@ def _like_to_re(pattern: str):
             out.append(re.escape(c))
         i += 1
     return re.compile("^" + "".join(out) + "$", re.DOTALL)
-
-
-def remap_tree(tree: Optional[tuple], columns) -> Optional[tuple]:
-    """Bind a normalized tree's (engine-sanitized) column names to the
-    PHYSICAL columns of a concrete source, weakening conservatively:
-
-    * a leaf resolves to the exact physical name, else to the unique
-      physical column whose sanitized form matches (the compiler
-      normalizes sources the same way, so the root predicate will bind
-      the same column);
-    * an unresolvable leaf (appended feature with a default value,
-      sanitize collision) DROPS: from an AND keep the other side (a
-      superset predicate — safe for a pushdown hint), from an OR drop
-      the whole branch (a weakened OR would be a SUBSET — unsafe).
-
-    Returns None when nothing survives — the caller skips the filter
-    entirely (the engine compiler re-applies the exact predicate at the
-    plan root; direct callers should pass physical names)."""
-    if tree is None:
-        return None
-    from ..feature import autofix_feature_name
-
-    cols = list(columns)
-    by_sanitized: Dict[str, List[str]] = {}
-    for c in cols:
-        by_sanitized.setdefault(autofix_feature_name(c), []).append(c)
-    colset = set(cols)
-
-    def walk(node):
-        kind = node[0]
-        if kind == "and":
-            left, right = walk(node[1]), walk(node[2])
-            if left is None:
-                return right
-            if right is None:
-                return left
-            return ("and", left, right)
-        if kind == "or":
-            left, right = walk(node[1]), walk(node[2])
-            if left is None or right is None:
-                return None
-            return ("or", left, right)
-        _, name, op, value = node
-        if name in colset:
-            return node
-        twins = by_sanitized.get(name, [])
-        if len(twins) == 1:
-            return ("leaf", twins[0], op, value)
-        return None  # absent or ambiguous: drop
-
-    return walk(tree)
-
-
-def partition_subtree(tree: Optional[tuple], partition_cols) -> Optional[tuple]:
-    """The sub-predicate over ``partition_cols`` only, weakened the
-    same way as :func:`remap_tree` (AND keeps the other side, OR drops
-    whole). Partition values are part of the record identity, so EVERY
-    version of a record shares them — pre-filtering a merge-on-read
-    scan on this subtree can never resurrect a superseded version,
-    which makes it the safe pushdown for the commit store's backends."""
-    if tree is None:
-        return None
-    cols = set(partition_cols)
-
-    def walk(node):
-        kind = node[0]
-        if kind == "and":
-            left, right = walk(node[1]), walk(node[2])
-            if left is None:
-                return right
-            if right is None:
-                return left
-            return ("and", left, right)
-        if kind == "or":
-            left, right = walk(node[1]), walk(node[2])
-            if left is None or right is None:
-                return None
-            return ("or", left, right)
-        return node if node[1] in cols else None
-
-    return walk(tree)
-
-
-def bind_residual(tree: Optional[tuple], columns, source: str) -> Optional[tuple]:
-    """Bind a residual predicate to concrete output columns. PARTIAL
-    loss weakens conservatively (documented remap_tree semantics — the
-    engine compiler re-applies the exact predicate at plan root), but
-    TOTAL loss raises: a direct caller whose filter binds to NOTHING
-    would otherwise get a silently unfiltered superset."""
-    if tree is None:
-        return None
-    bound = remap_tree(tree, columns)
-    if bound is None:
-        raise ValueError(
-            f"filter references no resolvable column of {source} "
-            f"(available: {sorted(columns)}) — nothing could be bound, "
-            "refusing to return an unfiltered result"
-        )
-    return bound

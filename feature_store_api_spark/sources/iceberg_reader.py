@@ -57,6 +57,13 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..constructor.filter import (
+    filters_to_column,
+    normalize_filters,
+    remap_tree,
+    residual_where,
+)
+
 
 def _fs_path(uri: str, table_path: str) -> str:
     """Manifest/data-file location -> local filesystem path. The spec
@@ -561,12 +568,7 @@ def iceberg_incremental(
     ``filters`` prunes exactly like :func:`read_iceberg`: manifest
     partition summaries, entry partition tuples + column bounds, then
     the exact residual row predicate on the result."""
-    from .iceberg_prune import (
-        ScanPruner,
-        filters_to_column,
-        normalize_filters,
-        remap_tree,
-    )
+    from .iceberg_prune import ScanPruner
 
     meta = _read_table_metadata(path)
     tree = remap_tree(
@@ -642,15 +644,7 @@ def iceberg_incremental(
     inc = spark.read.option("mergeSchema", "true").parquet(
         *sorted(set(paths))
     )
-    if tree is not None:
-        from .iceberg_prune import bind_residual
-
-        residual = bind_residual(
-            tree, inc.columns, f"iceberg table {path}"
-        )
-        if residual is not None:
-            inc = inc.where(filters_to_column(residual))
-    return inc
+    return residual_where(inc, tree, f"iceberg table {path}")
 
 
 def _scan_avro_data(
@@ -891,13 +885,7 @@ def read_iceberg(
     :class:`~.iceberg_backend.IcebergBackend` layout): partition-key
     filters then prune DIRECTORIES (``PartitionFilters``) at the Spark
     layer on top of the manifest-level pruning."""
-    from .iceberg_prune import (
-        ScanPruner,
-        bind_residual,
-        filters_to_column,
-        normalize_filters,
-        remap_tree,
-    )
+    from .iceberg_prune import ScanPruner
 
     path = os.path.abspath(path)
     meta = _read_table_metadata(path)

@@ -18,6 +18,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..constructor.filter import residual_where
 from ..plan_memo import memo
 
 
@@ -151,23 +152,6 @@ _DEFAULT_OPTIONS: Dict[str, Dict[str, str]] = {
 }
 
 
-def _residual_where(df: DataFrame, filters) -> DataFrame:
-    """Row predicate from a Filter IR hint (see read()): partial
-    binding weakens conservatively, total loss raises loudly."""
-    if filters is None:
-        return df
-    from .iceberg_prune import (
-        bind_residual,
-        filters_to_column,
-        normalize_filters,
-    )
-
-    tree = bind_residual(
-        normalize_filters(filters), df.columns, "the source"
-    )
-    return df.where(filters_to_column(tree)) if tree is not None else df
-
-
 def read(
     spark: SparkSession,
     data_format: str,
@@ -187,8 +171,9 @@ def read(
         # partial binding weakens conservatively (the compiler
         # re-applies the exact predicate at plan root), a total loss
         # raises loudly instead of returning an unfiltered superset
-        return _residual_where(
-            read(spark, data_format, path, options, schema), filters
+        return residual_where(
+            read(spark, data_format, path, options, schema), filters,
+            "the source",
         )
     opts = dict(_DEFAULT_OPTIONS.get(fmt, {}))
     opts.update(options or {})
@@ -223,16 +208,16 @@ def read(
                 spark, path, int(sv) - 1,
                 int(ev) if ev is not None else None,
             )
-            return _residual_where(cdf, filters)
+            return residual_where(cdf, filters, "the source")
         bv = opts.get("beginVersion")
         if bv is not None:
             ev = opts.get("endVersion")
-            return _residual_where(
+            return residual_where(
                 delta_incremental(
                     spark, path, int(bv),
                     int(ev) if ev is not None else None,
                 ),
-                filters,
+                filters, "the source",
             )
         v = opts.get("versionAsOf")
         ts = opts.get("timestampAsOf")
@@ -257,14 +242,14 @@ def read(
                     "incremental Hudi reads need "
                     "hoodie.datasource.read.begin.instanttime"
                 )
-            return _residual_where(
+            return residual_where(
                 hudi_incremental(
                     spark, path, begin,
                     opts.get(
                         "hoodie.datasource.read.end.instanttime"
                     ),
                 ),
-                filters,
+                filters, "the source",
             )
         # filters prune FILE GROUPS by hive partition-dir values (the
         # MOR merge path bypasses Spark directory discovery) + exact
@@ -291,10 +276,7 @@ def read(
                 int(end) if end is not None else None,
                 filters=filters,
             )
-            return (
-                _residual_where(inc, filters)
-                if filters is not None else inc
-            )
+            return residual_where(inc, filters, "the source")
         sid = opts.get("snapshot-id")
         ts = opts.get("as-of-timestamp")
         ref = opts.get("branch") or opts.get("tag")
@@ -315,7 +297,7 @@ def read(
         # first, so a column that left the schema while still present
         # in the physical files (no-field-id tables keep the wider
         # frame) is filtered only here.
-        return _residual_where(df, filters) if filters is not None else df
+        return residual_where(df, filters, "the source")
     if fmt in ("tfrecord", "tfrecords"):
         if schema is None:
             raise ValueError(

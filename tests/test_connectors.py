@@ -616,15 +616,14 @@ def test_dbapi_pushdown_dialect_stable_leaves_only():
     are escape-introducers under MySQL's default mode, an empty IN
     list is a syntax error, and non-finite floats have no literal.
     AND keeps the stable side; OR drops the whole branch."""
-    from feature_store_api_spark.sources.connectors import (
-        _plain_ident_subtree,
-    )
-    from feature_store_api_spark.sources.iceberg_prune import (
+    from feature_store_api_spark.constructor.filter import (
         normalize_filters,
+        weaken,
     )
+    from feature_store_api_spark.sources.connectors import _plain_ident_leaf
 
     def push(f):
-        return _plain_ident_subtree(normalize_filters(f))
+        return weaken(normalize_filters(f), _plain_ident_leaf)
 
     # numerics/bools: every operator pushes
     assert push(("k", ">", 5)) == ("leaf", "k", "GREATER_THAN", 5)

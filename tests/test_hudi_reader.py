@@ -1395,9 +1395,7 @@ def test_hudi_partition_dir_pruner_type_safety(spark, tmp_path):
         _partition_dir_pruner,
         read_hudi,
     )
-    from feature_store_api_spark.sources.iceberg_prune import (
-        normalize_filters,
-    )
+    from feature_store_api_spark.constructor.filter import normalize_filters
 
     props = {"hoodie.table.partition.fields": "part"}
     keep = _partition_dir_pruner(

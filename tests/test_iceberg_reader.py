@@ -1712,10 +1712,8 @@ def test_iceberg_transform_pruning_day_and_truncate(spark, tmp_path):
     """Order-preserving transforms prune in partition space: day(ts)
     ordinals and truncate[1](part) prefixes both drop files; bucket
     (not order-preserving) never prunes."""
-    from feature_store_api_spark.sources.iceberg_prune import (
-        ScanPruner,
-        normalize_filters,
-    )
+    from feature_store_api_spark.constructor.filter import normalize_filters
+    from feature_store_api_spark.sources.iceberg_prune import ScanPruner
 
     meta = {
         "current-schema-id": 0,
@@ -1772,10 +1770,12 @@ def test_remap_tree_weakening_and_coercion():
     conservatively (AND keeps the other side, OR drops the branch);
     _range_may_match never truncates numeric-string values (r14 review:
     int('3.5') would wrongly prune the boundary file)."""
-    from feature_store_api_spark.sources.iceberg_prune import (
-        _range_may_match,
+    from feature_store_api_spark.constructor.filter import (
         normalize_filters,
         remap_tree,
+    )
+    from feature_store_api_spark.sources.iceberg_prune import (
+        _range_may_match,
     )
 
     cols = ["Doc ID", "price", "A B", "a_b"]
@@ -1807,10 +1807,8 @@ def test_iceberg_prune_timestamptz_naive_value_keeps_file():
     residual filter decides); a tz-AWARE value still prunes."""
     from datetime import datetime, timezone
 
-    from feature_store_api_spark.sources.iceberg_prune import (
-        ScanPruner,
-        normalize_filters,
-    )
+    from feature_store_api_spark.constructor.filter import normalize_filters
+    from feature_store_api_spark.sources.iceberg_prune import ScanPruner
 
     meta = {
         "current-schema-id": 0,

@@ -456,3 +456,29 @@ def test_plan_memo_is_the_only_cache():
              or binding.search(path.read_text()))
     ]
     assert offenders == []
+
+
+def test_filter_ir_has_one_home():
+    """The Filter IR's op names, tuple-tree construction and Column
+    compilation live only in ``constructor/filter.py``: a second op
+    table, a second AND/OR walk or a second ``isin`` compiler is how
+    ``to_string()`` once kept different rows than ``read()``."""
+    import pathlib
+    import re
+
+    import feature_store_api_spark
+
+    root = pathlib.Path(feature_store_api_spark.__file__).parent
+    ir = re.compile(
+        r'\("(and|or)", |isin\(list\(|"(NOT_)?EQUALS"|"GREATER_THAN|"LESS_THAN'
+    )
+    sources = sorted(root.rglob("*.py"))
+    assert len(sources) > 10
+    home = root / "constructor" / "filter.py"
+    assert ir.search(home.read_text())
+    offenders = [
+        str(path.relative_to(root))
+        for path in sources
+        if path != home and ir.search(path.read_text())
+    ]
+    assert offenders == []

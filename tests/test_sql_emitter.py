@@ -114,3 +114,38 @@ def test_time_travel_not_expressible(spark, fsq):
     q = left.select(["k"]).as_of("2024-01-01")
     with pytest.raises(ValueError):
         q.to_string()
+
+
+@pytest.fixture()
+def fs_lit(spark, tmp_path):
+    fs = FeatureStore(root=str(tmp_path / "lit"))
+    fg = fs.create_feature_group("paths", primary_key=["k"])
+    fg.insert(
+        spark.createDataFrame(
+            [(1, "C:\\dir", 1.0), (2, "C:dir", float("nan")),
+             (3, "a_b", 3.0), (4, "axb", None)],
+            "k long, tag string, v double",
+        )
+    )
+    return fs, fg
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        lambda g: g.tag == "C:\\dir",
+        lambda g: g.tag.like("a\\_b"),
+        lambda g: g.tag.isin([]),
+        lambda g: g.tag.isin([]) | (g.k == 3),
+        lambda g: g.v < float("nan"),
+        lambda g: (g.v > float("-inf")) & (g.v != float("inf")),
+    ],
+    ids=["backslash", "like_escape", "empty_in", "empty_in_or",
+         "nan", "infinity"],
+)
+def test_literals_match_compiled(spark, fs_lit, make):
+    """Backslashes, empty IN lists and non-finite floats print as SQL
+    that keeps exactly the compiled frame's rows."""
+    fs, fg = fs_lit
+    q = fg.select(["k", "tag"]).filter(make(fg))
+    _assert_sql_equals_compiled(spark, fs, q)
