@@ -46,24 +46,53 @@ def _make(name, column_expr, return_type="double", output_column_names=None,
     return tf
 
 
-def _min_max(cols, stats):
-    s = _stats_of(stats, "feature")
+# the three scalers are ``(x - center) / scale``; each reads its
+# (center, scale) from the statistics, or None when they are None (the
+# statistics of a frame with no rows), and then emits a typed null
+def _min_max_params(s):
+    if s["min"] is None or s["max"] is None:
+        return None
     lo, hi = float(s["min"]), float(s["max"])
-    denom = (hi - lo) or 1.0
-    return [(cols[0] - F.lit(lo)) / F.lit(denom)]
+    return lo, (hi - lo) or 1.0
 
 
-def _standard(cols, stats):
-    s = _stats_of(stats, "feature")
-    mean, std = float(s["mean"]), float(s["stddev"] or 1.0)
-    return [(cols[0] - F.lit(mean)) / F.lit(std or 1.0)]
+def _standard_params(s):
+    if s["mean"] is None:
+        return None
+    return float(s["mean"]), float(s["stddev"] or 1.0) or 1.0
 
 
-def _robust(cols, stats):
-    s = _stats_of(stats, "feature")
-    p25, p50, p75 = [float(p) for p in s["percentiles"]]
-    iqr = (p75 - p25) or 1.0
-    return [(cols[0] - F.lit(p50)) / F.lit(iqr)]
+def _robust_params(s):
+    p = s["percentiles"]
+    if not p or None in p:
+        return None
+    p25, p50, p75 = [float(v) for v in p]
+    return p50, (p75 - p25) or 1.0
+
+
+def _scaler(params):
+    """The Column form and the pandas twin of one scaler."""
+
+    def column(cols, stats):
+        cs = params(_stats_of(stats, "feature"))
+        if cs is None:
+            return [F.lit(None).cast("double")]
+        return [(cols[0] - F.lit(cs[0])) / F.lit(cs[1])]
+
+    def pandas(series, stats):
+        cs = params(_stats_of(stats, "feature"))
+        if cs is None:
+            import pandas as pd
+
+            return [pd.Series(float("nan"), index=series[0].index)]
+        return [(series[0] - cs[0]) / cs[1]]
+
+    return column, pandas
+
+
+_min_max, _min_max_pd = _scaler(_min_max_params)
+_standard, _standard_pd = _scaler(_standard_params)
+_robust, _robust_pd = _scaler(_robust_params)
 
 
 def _label_encode(cols, stats):
@@ -97,24 +126,6 @@ def _one_hot_names(features, stats):
 
 # -- driver-side pandas twins (ms-latency serving; formula parity with
 # the Column expressions is pinned by tests/test_udf.py) ---------------
-
-def _min_max_pd(series, stats):
-    s = _stats_of(stats, "feature")
-    lo, hi = float(s["min"]), float(s["max"])
-    return [(series[0] - lo) / ((hi - lo) or 1.0)]
-
-
-def _standard_pd(series, stats):
-    s = _stats_of(stats, "feature")
-    mean, std = float(s["mean"]), float(s["stddev"] or 1.0)
-    return [(series[0] - mean) / (std or 1.0)]
-
-
-def _robust_pd(series, stats):
-    s = _stats_of(stats, "feature")
-    p25, p50, p75 = [float(p) for p in s["percentiles"]]
-    return [(series[0] - p50) / ((p75 - p25) or 1.0)]
-
 
 def _quantile_bin(cols, stats):
     s = _stats_of(stats, "feature")

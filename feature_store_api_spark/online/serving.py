@@ -38,8 +38,7 @@ def _staleness_cutoff_value(max_staleness, clock=None):
     The clock domain is naive UTC throughout: the default ``clock`` is
     ``datetime.now(timezone.utc)`` stripped of tzinfo (never the
     deprecated, implicitly-naive ``utcnow``), and every lookup path
-    already normalizes hit timestamps to naive UTC
-    (``store._utc_naive_values`` for Spark collect; pyarrow natively).
+    already normalizes hit timestamps to naive UTC (``store._naive_utc``).
 
     Numeric event times carry no wall-clock meaning the server can
     infer, so they REQUIRE a caller-supplied numeric ``clock``; without
@@ -439,6 +438,8 @@ class VectorServer:
             out = _apply(
                 spark.createDataFrame(pdf), tfs, stats=self._stats
             ).toPandas()
-        for (i, _), (_, rec) in zip(live, out.iterrows()):
-            rows[i] = {k: v for k, v in rec.to_dict().items()}
+        # to_dict("records") keeps each column's own type; iterrows
+        # would upcast an all-numeric row (ints included) to float64
+        for (i, _), rec in zip(live, out.to_dict("records")):
+            rows[i] = rec
         return rows

@@ -15,11 +15,14 @@ Implementation — LSM-flavored merge-on-read:
   compute it in Python).
 * an upsert APPENDS its rows to ``delta/`` as-is — ONE job, no shuffle,
   no table read, no rewrite: a 1-row micro-batch costs one small file.
-  ``_online_bucket`` rides along as a data column for row-group-level
-  pruning of the (small, recent) delta pile.
-* a read resolves newest-per-key over base ∪ delta with one window
-  (event_time, then precombine, then arrival sequence — Hudi precombine
-  parity).
+  ``_online_bucket`` rides along as a data column, so a Spark read
+  prunes the (small, recent) delta pile by row group.
+* a Spark read resolves newest-per-key over base ∪ delta with one
+  window (event_time, then precombine, then arrival sequence — Hudi
+  precombine parity). A driver-side lookup replays that order in Arrow
+  over the keys' base buckets and the delta pile, which each store
+  instance decodes once per file (the files are write-once, so the
+  directory listing says what is new and what is gone).
 * every ``auto_compact_every`` upserts, compaction folds the deltas
   into a new bucket-partitioned base (write-then-atomic-swap), so the
   merge tail a read windows over stays bounded — the same cadence
@@ -31,7 +34,9 @@ contract.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import shutil
 import warnings
@@ -53,43 +58,24 @@ _BUCKET = "_online_bucket"
 _ARROW_FALLBACK_WARNED = False
 
 
-def _utc_naive_values(rec: Dict) -> Dict:
-    """Normalize every datetime value in a hit row to NAIVE UTC.
+def _naive_utc(rec: Dict, naive_is_local: bool) -> Dict:
+    """A hit row with every datetime value in NAIVE UTC: the one clock
+    domain both lookup paths serve (serving-TTL freshness compares in
+    it). Tz-aware values (TIMESTAMP_LTZ, int64-utc files) convert on
+    both paths. Naive values differ per path:
 
-    The two lookup paths disagree on clock domain: pyarrow's
-    ``to_pylist`` yields naive-UTC datetimes (the session pins
-    ``spark.sql.session.timeZone=UTC`` at write), while Spark's
-    ``collect()`` converts TimestampType through
-    ``datetime.fromtimestamp`` — the Python process's LOCAL timezone —
-    so on a non-UTC machine the same stored instant reads differently
-    per path (and serving-TTL freshness decisions would shift by the
-    UTC offset). Collect-path rows funnel through here so both paths
-    serve one clock domain; tz-aware values (TIMESTAMP_LTZ through
-    arrow) also coerce to naive UTC."""
+    * Spark's ``collect()`` converts TimestampType through
+      ``datetime.fromtimestamp``, the process's LOCAL timezone; its rows
+      pass ``naive_is_local=True``, and ``astimezone`` applies the exact
+      inverse (identity on UTC machines);
+    * pyarrow's naive values are already UTC (the session pins
+      ``spark.sql.session.timeZone=UTC`` at write) and pass untouched,
+      including the naive ``pandas.Timestamp`` of ns (INT96) columns."""
     import datetime as _dt
 
     out = {}
     for k, v in rec.items():
-        if isinstance(v, _dt.datetime):
-            # astimezone interprets a NAIVE value as local time — the
-            # exact inverse of collect()'s fromtimestamp conversion —
-            # and converts tz-AWARE values directly; identity on UTC
-            # machines either way
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        out[k] = v
-    return out
-
-
-def _aware_to_naive_utc(rec: Dict) -> Dict:
-    """Coerce only tz-AWARE datetime values to naive UTC; naive values
-    pass through untouched (the arrow read path's naive values are
-    already UTC — see ``_utc_naive_values`` for the collect-path twin
-    whose naive-as-local inverse must NOT be applied here)."""
-    import datetime as _dt
-
-    out = {}
-    for k, v in rec.items():
-        if isinstance(v, _dt.datetime) and v.tzinfo is not None:
+        if isinstance(v, _dt.datetime) and (naive_is_local or v.tzinfo is not None):
             v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
         out[k] = v
     return out
@@ -105,6 +91,20 @@ def _portable_str(v) -> Optional[str]:
     if isinstance(v, (int, str)):
         return str(v)
     return None
+
+
+def _parts(tables) -> list:
+    """One contiguous table per schema (metadata aside), in first-seen
+    order: a file whose schema is wider or different stays its own
+    part. Empty tables are left out (pyarrow's ``indices_nonzero``
+    crashes on a 0-chunk array)."""
+    import pyarrow as pa
+
+    groups: Dict = {}
+    for t in tables:
+        if t.num_rows:
+            groups.setdefault(t.schema.remove_metadata(), []).append(t)
+    return [pa.concat_tables(g).combine_chunks() for g in groups.values()]
 
 
 class OnlineStore:
@@ -125,6 +125,9 @@ class OnlineStore:
         # observability: how many times _arrow_lookup degraded to the
         # Spark fallback on this instance (see _ARROW_FALLBACK_WARNED)
         self.arrow_fallback_count = 0
+        # the decoded delta pile, ({path: table}, parts), one attribute
+        # so a concurrent lookup never pairs files and parts of two states
+        self._pile_state: tuple = ({}, [])
         os.makedirs(location, exist_ok=True)
         # bucket count must stay stable for the life of the table: a
         # sidecar records it at creation and wins over the ctor arg
@@ -158,12 +161,9 @@ class OnlineStore:
 
     @staticmethod
     def _has_parquet(path: str) -> bool:
-        if not os.path.exists(path):
-            return False
-        for _root, _dirs, files in os.walk(path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        return any(
+            f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs
+        )
 
     def _exists(self) -> bool:
         return self._has_parquet(self._base_path) or self._has_parquet(
@@ -201,6 +201,11 @@ class OnlineStore:
                 return None
             parts.append(s)
         return zlib.crc32("\x1f".join(parts).encode("utf-8")) % self.num_buckets
+
+    def _buckets(self, keys: List[Dict]) -> Optional[List[int]]:
+        """The buckets the keys hash to; None if a key is unprunable."""
+        out = {self._bucket_of(k) for k in keys}
+        return None if None in out else sorted(out)
 
     # -- write path --------------------------------------------------------
     def upsert(self, df: DataFrame) -> None:
@@ -284,24 +289,34 @@ class OnlineStore:
             out = out.unionByName(p, allowMissingColumns=True)
         return out
 
+    def _order(self) -> List[str]:
+        """The newest-row order of both lookup paths, most significant
+        first: event_time (else the upsert sequence), then precombine,
+        then the unique upsert sequence, so the order is total. With
+        precombine set and no event_time, arrival decides FIRST (latest
+        upsert wins) — precombine first would make serving disagree
+        with batch reads (training-serving skew)."""
+        return [self.event_time or _SEQ] + [
+            c for c in (self.precombine_key,) if c
+        ] + [_SEQ]
+
     def _resolve(self, df: DataFrame) -> DataFrame:
-        order = [c for c in (self.event_time,) if c]
-        ties = [c for c in (self.precombine_key,) if c] + [_SEQ]
-        # The ordering ends in the unique upsert sequence, so it is
-        # total under BOTH strategies. Strategy choice: the delta tail
-        # length is known driver-side (the _upserts_since_compact
-        # counter; auto-compaction keeps it ≤ auto_compact_every), and
-        # a key appears at most ~once per upsert batch, so with a short
-        # tail a window-sort partition holds a handful of rows per key —
-        # no hot key possible, and the window plan skips the agg path's
-        # per-row struct buffers (the b7 regression). An unbounded tail
-        # (auto-compaction off) keeps the skew-immune map-side max_by.
+        # The order is total under BOTH strategies. Strategy choice: the
+        # delta tail length is known driver-side (the
+        # _upserts_since_compact counter; auto-compaction keeps it ≤
+        # auto_compact_every), and a key appears at most ~once per
+        # upsert batch, so with a short tail a window-sort partition
+        # holds a handful of rows per key — no hot key possible, and the
+        # window plan skips the agg path's per-row struct buffers (the
+        # b7 regression). An unbounded tail (auto-compaction off) keeps
+        # the skew-immune map-side max_by.
+        order = self._order()
         tail = self._counter("_upserts_since_compact")
         return latest_per_key(
             df,
             self.primary_key,
-            order_by=order or [_SEQ],
-            tie_breakers=ties,
+            order_by=order[:1],
+            tie_breakers=order[1:],
             strategy="window" if tail <= 64 else "agg",
         )
 
@@ -312,14 +327,7 @@ class OnlineStore:
     # -- serving -----------------------------------------------------------
     def _pruned(self, spark: SparkSession, keys: List[Dict]) -> DataFrame:
         """Latest state restricted to the buckets the keys hash to."""
-        buckets = set()
-        for k in keys:
-            b = self._bucket_of(k)
-            if b is None:
-                buckets = None  # unprunable key type
-                break
-            buckets.add(b)
-        df = self._raw(spark, sorted(buckets) if buckets is not None else None)
+        df = self._raw(spark, self._buckets(keys))
         return self._resolve(df).drop(_SEQ, _BUCKET)
 
     def get_feature_vector(
@@ -332,22 +340,12 @@ class OnlineStore:
         jobs); falls back to the Spark plan when the key is unprunable
         or the layout defeats a plain arrow read."""
         if return_type == "dict":
-            fast = self._arrow_lookup([key])
-            if fast is not None:
-                return fast[0]
-        df = self._pruned(spark, [key])
-        cond = None
-        for k in self.primary_key:
-            c = F.col(k) == F.lit(key[k])
-            cond = c if cond is None else (cond & c)
-        rows = df.where(cond).limit(2).collect()
-        if not rows:
-            return None
-        return (
-            _utc_naive_values(rows[0].asDict())
-            if return_type == "dict"
-            else rows[0]
+            return self.get_feature_vectors(spark, [key])[0]
+        cond = functools.reduce(
+            operator.and_, (F.col(k) == F.lit(key[k]) for k in self.primary_key)
         )
+        rows = self._pruned(spark, [key]).where(cond).limit(2).collect()
+        return rows[0] if rows else None
 
     def get_feature_vectors(
         self, spark: SparkSession, keys: List[Dict]
@@ -362,128 +360,128 @@ class OnlineStore:
                 return fast
         return self.lookup(self._pruned(spark, keys), keys)
 
+    @property
+    def pile_stats(self) -> Dict[str, int]:
+        """``{files, rows, bytes}`` of the delta pile as the last arrow
+        lookup decoded it; ``bytes`` counts the decoded files and their
+        per-schema parts. The pile is the delta files since the last
+        compaction, so ``auto_compact_every`` bounds it."""
+        decoded, parts = self._pile_state
+        files = list(decoded.values())
+        return {"files": len(files), "rows": sum(t.num_rows for t in files),
+                "bytes": sum(t.nbytes for t in files + parts)}
+
+    def _pile(self) -> list:
+        """The delta pile as per-schema parts (:func:`_parts`), decoded
+        once per file. The pile is every ``*.parquet`` under ``delta/``,
+        skipping path components that start with ``_`` or ``.`` (Spark's
+        in-flight ``_temporary/``) as pyarrow's discovery does.
+
+        Staleness contract: delta files are write-once (an upsert adds
+        one; compact and truncate delete the directory), so the file
+        listing is the pile's version. A file is decoded by the first
+        lookup that lists it and dropped by the first that does not."""
+        paths = []
+        for root, dirs, files in os.walk(self._delta_path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            paths += [
+                os.path.join(root, f) for f in sorted(files)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            ]
+        decoded, parts = self._pile_state
+        if paths != list(decoded):
+            import pyarrow.parquet as pq
+
+            decoded = {
+                p: decoded[p] if p in decoded else pq.read_table(p) for p in paths
+            }
+            parts = _parts(decoded.values())
+            self._pile_state = (decoded, parts)
+        return parts
+
     def _arrow_lookup(self, keys: List[Dict]) -> Optional[List[Optional[Dict]]]:
         """Point/batch lookup WITHOUT Spark: the bucket of each key is
         crc32-computable in Python (that is WHY the bucket hash is
-        crc32), so the read is (a) the matching ``base/_bucket=N``
-        directories and (b) the small delta pile, both through pyarrow
-        with the pk predicate pushed to row groups — the same pruning
-        the Spark plan does, minus the job-scheduling floor. The
-        newest-per-key resolve replays ``_resolve``'s total order
-        (event_time, precombine, arrival seq; nulls lowest) in pandas.
+        crc32), so the read is the keys' ``base/_bucket=N`` directories,
+        through pyarrow with the pk predicate pushed to row groups, plus
+        this instance's decoded delta pile (:meth:`_pile`).
+
+        The newest-per-key resolve runs in Arrow: one stable sort of the
+        candidate rows by ``_resolve``'s order, descending with nulls
+        lowest and the read position last (the later row wins a full
+        tie), then the first row per key. Only the winners become
+        Python values, taken from their own part.
 
         Returns None (→ Spark fallback) for unprunable key types or any
-        arrow-side surprise (e.g. schema widening mid-pile)."""
-        try:
-            import pyarrow.dataset as ds
-        except ImportError:  # pragma: no cover
+        arrow-side surprise."""
+        buckets = self._buckets(keys)
+        if buckets is None:
             return None
-        buckets = set()
-        for k in keys:
-            b = self._bucket_of(k)
-            if b is None:
-                return None
-            buckets.add(b)
         if not self._exists():
             raise FileNotFoundError(f"Online store empty at {self.location}")
         try:
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            import pyarrow.dataset as ds
+
             pk = self.primary_key
-            vals = {p: list({k[p] for k in keys}) for p in pk}
-
-            def _pk_filter():
-                f = None
-                for p in pk:
-                    e = ds.field(p).isin(vals[p])
-                    f = e if f is None else f & e
-                return f
-
-            # to_pylist gives python natives and None for nulls — the
-            # same value semantics as the Spark Row path (no pandas NaN
-            # / int→float coercion); widened-schema rows simply lack
-            # keys, which .get() maps to None like allowMissingColumns
-            rows: List[Dict] = []
-            columns: List[str] = []
-            for b in sorted(buckets):
-                part = os.path.join(self._base_path, f"{_BUCKET}={b}")
-                if self._has_parquet(part):
-                    t = ds.dataset(part, format="parquet").to_table(
-                        filter=_pk_filter()
-                    )
-                    rows.extend(t.to_pylist())
-                    # union across buckets: schema widening can leave a
-                    # new column present in some buckets only; keeping
-                    # just the first bucket's names would silently drop
-                    # it (the Spark path reads with mergeSchema=true)
-                    for c in t.column_names:
-                        if c not in columns:
-                            columns.append(c)
-            if self._has_parquet(self._delta_path):
-                t = ds.dataset(self._delta_path, format="parquet").to_table(
-                    filter=_pk_filter() & ds.field(_BUCKET).isin(sorted(buckets))
-                )
-                rows.extend(t.to_pylist())
-                for c in t.column_names:
-                    if c not in columns:
-                        columns.append(c)
-            if not rows:
+            vals = {p: pa.array(list({k[p] for k in keys})) for p in pk}
+            f = functools.reduce(operator.and_, (ds.field(p).isin(vals[p]) for p in pk))
+            dirs = [os.path.join(self._base_path, f"{_BUCKET}={b}") for b in buckets]
+            base = [
+                ds.dataset(d, format="parquet").to_table(filter=f)
+                for d in dirs if self._has_parquet(d)
+            ]
+            parts = _parts(base) + self._pile()
+            if not parts:
                 return [None] * len(keys)
-            # EXACTLY _resolve's order: order_by = event_time or [_SEQ],
-            # then ties = (precombine, _SEQ). With precombine set and no
-            # event_time, arrival sequence must decide FIRST (latest
-            # upsert wins) — putting precombine first here would make
-            # serving disagree with batch reads (training-serving skew).
-            order = (
-                ([self.event_time] if self.event_time else [_SEQ])
-                + ([self.precombine_key] if self.precombine_key else [])
-                + [_SEQ]
-            )
-
-            def _sort_key(rec):
-                # ascending, nulls first (≡ pick-max desc_nulls_last);
-                # the 0 placeholder is only ever compared against other
-                # placeholders (the presence flag decides first).
-                # tz-aware datetimes coerce to naive UTC so a store
-                # whose files mix INT96 (naive through arrow) and
-                # int64-utc (aware) still sorts instead of raising
-                import datetime as _dt
-
-                vals = []
-                for c in order:
-                    v = rec.get(c)
-                    if (
-                        isinstance(v, _dt.datetime)
-                        and v.tzinfo is not None
-                    ):
-                        v = v.astimezone(
-                            _dt.timezone.utc
-                        ).replace(tzinfo=None)
-                    vals.append((v is not None, v if v is not None else 0))
-                return tuple(vals)
-
-            rows.sort(key=_sort_key)
-            by_key: Dict = {}
-            for rec in rows:  # later (greater) rows overwrite → max wins
-                by_key[tuple(rec.get(p) for p in pk)] = rec
-            drop = {_SEQ, _BUCKET}
-            out: List[Optional[Dict]] = []
-            for k in keys:
-                rec = by_key.get(tuple(k[p] for p in pk))
-                if rec is None:
-                    out.append(None)
-                else:
-                    # clock-domain: arrow's NAIVE datetimes are already
-                    # UTC (write-time session pin) and stay untouched —
-                    # only tz-AWARE values (int64-utc-adjusted files)
-                    # coerce to naive UTC, else the same instant would
-                    # compare unequal to the collect path. NOT funneled
-                    # through _utc_naive_values: its naive-as-local
-                    # inverse is for collect() rows, and it would also
-                    # trip on the naive pandas.Timestamp objects arrow
-                    # yields for ns-precision (INT96) columns
-                    out.append(_aware_to_naive_utc(
-                        {c: rec.get(c) for c in columns if c not in drop}
-                    ))
-            return out
+            order = self._order()
+            names = pk + [f"_o{j}" for j in range(len(order))] + ["_part", "_row"]
+            narrow = []
+            for i, t in enumerate(parts):
+                rows = pc.indices_nonzero(functools.reduce(
+                    pc.and_, (pc.is_in(t[p], value_set=vals[p]) for p in pk)
+                ))
+                cols = [
+                    t[c].take(rows) if c in t.schema.names else pa.nulls(len(rows))
+                    for c in pk + order
+                ]
+                # one naive-UTC type for this comparison only: an aware
+                # value casts to its UTC instant, ns truncates to Spark's µs
+                cols = [
+                    c.cast(pa.timestamp("us"), safe=False)
+                    if pa.types.is_timestamp(c.type) else c for c in cols
+                ]
+                cols += [pa.array([i] * len(rows), pa.int32()), rows]
+                narrow.append(pa.table(cols, names))
+            cand = pa.concat_tables(narrow, promote_options="permissive")
+            ranked = cand.take(pc.sort_indices(
+                cand,
+                [(c, "descending") for c in cand.column_names[len(pk):]],
+                null_placement="at_end",
+            ))
+            # the first row of each key in rank order is its newest
+            won = ranked.group_by(pk, use_threads=False).aggregate(
+                [("_part", "first"), ("_row", "first")]
+            ).to_pylist()
+            hits: Dict = {}
+            for i in {w["_part_first"] for w in won}:
+                rows = [w["_row_first"] for w in won if w["_part_first"] == i]
+                for rec in parts[i].take(rows).to_pylist():
+                    hits[tuple(rec[p] for p in pk)] = rec
+            # union of the columns: schema widening can leave a column
+            # in some tables only (the Spark path reads with
+            # mergeSchema=true); a row lacking it serves None
+            columns = list(dict.fromkeys(
+                c for t in base + parts for c in t.schema.names
+                if c not in (_SEQ, _BUCKET)
+            ))
+            return [
+                None if rec is None else _naive_utc(
+                    {c: rec.get(c) for c in columns}, naive_is_local=False
+                )
+                for rec in (hits.get(tuple(k[p] for p in pk)) for k in keys)
+            ]
         except FileNotFoundError:
             raise
         except Exception as exc:
@@ -519,7 +517,8 @@ class OnlineStore:
                 F.broadcast(spark_keys), on=self.primary_key, how="left_semi"
             ).collect()
         by_key = {
-            tuple(r[p] for p in self.primary_key): _utc_naive_values(r.asDict())
+            tuple(r[p] for p in self.primary_key):
+            _naive_utc(r.asDict(), naive_is_local=True)
             for r in hits
         }
         return [by_key.get(tuple(k[p] for p in self.primary_key)) for k in keys]

@@ -141,10 +141,9 @@ def test_fs_sql_online_binds_latest_state(spark, tmp_path):
     assert {r["uid"]: r["v"] for r in online} == {1: 5.0, 2: 3.0}  # latest per key
 
 
-def test_arrow_lookup_matches_spark_and_runs_no_job(spark, store_dir):
-    """The pyarrow point-lookup path must (a) return exactly what the
-    Spark plan returns — latest per key across base ∪ delta with the
-    precombine/seq tie order — and (b) launch ZERO Spark jobs."""
+def _base_plus_delta(spark, store_dir):
+    """Compacted base, then a delta that updates some keys with a later
+    event time and adds a null-ts duplicate of key 3."""
     import datetime as dt
 
     store = OnlineStore(
@@ -154,17 +153,84 @@ def test_arrow_lookup_matches_spark_and_runs_no_job(spark, store_dir):
     t0 = dt.datetime(2024, 1, 1)
     t1 = dt.datetime(2024, 2, 1)
     rows = [(i, t0, float(i)) for i in range(50)]
-    df = spark.createDataFrame(rows, "uid long, ets timestamp, v double")
-    store.upsert(df)
+    store.upsert(spark.createDataFrame(rows, "uid long, ets timestamp, v double"))
     store.compact(spark)  # base
-    # delta on top: update some keys, later event time; one null-ts row
-    upd = spark.createDataFrame(
+    store.upsert(spark.createDataFrame(
         [(3, t1, 300.0), (7, t1, 700.0), (3, None, -1.0)],
         "uid long, ets timestamp, v double",
-    )
-    store.upsert(upd)
+    ))
+    return store, [{"uid": 3}, {"uid": 7}, {"uid": 11}, {"uid": 9999}]
 
-    keys = [{"uid": 3}, {"uid": 7}, {"uid": 11}, {"uid": 9999}]
+
+def _null_event_times(spark, store_dir):
+    """Null event times sort lowest; between two nulls the later upsert
+    wins; a key with only a null event time is still served."""
+    import datetime as dt
+
+    store = OnlineStore(
+        store_dir, primary_key=["uid"], event_time="ets",
+        num_buckets=4, auto_compact_every=None,
+    )
+    t0 = dt.datetime(2024, 1, 1)
+    schema = "uid long, ets timestamp, v double"
+    store.upsert(spark.createDataFrame([(1, None, 1.0), (2, t0, 2.0)], schema))
+    store.upsert(spark.createDataFrame(
+        [(1, None, 10.0), (2, None, 20.0), (3, None, 3.0)], schema
+    ))
+    return store, [{"uid": 1}, {"uid": 2}, {"uid": 3}, {"uid": 4}]
+
+
+def _precombine_ties_across_batches(spark, store_dir):
+    """Equal event times across batches: the precombine key decides,
+    and a full event-time/precombine tie goes to the later upsert."""
+    store = OnlineStore(
+        store_dir, primary_key=["uid"], event_time="ts",
+        precombine_key="ver", num_buckets=4, auto_compact_every=None,
+    )
+    schema = "uid long, ts long, ver long, v string"
+    store.upsert(spark.createDataFrame([(1, 10, 5, "a"), (2, 10, 5, "b")], schema))
+    store.upsert(spark.createDataFrame([(1, 10, 5, "a2"), (2, 10, 4, "b2")], schema))
+    store.upsert(spark.createDataFrame([(1, 10, 5, "a3"), (3, 9, 1, "c")], schema))
+    return store, [{"uid": 1}, {"uid": 2}, {"uid": 3}]
+
+
+def _keys_repeated_across_upserts(spark, store_dir):
+    """A composite string/int key rewritten by most of five upserts,
+    with no event time: the latest upsert that wrote a key wins."""
+    store = OnlineStore(
+        store_dir, primary_key=["region", "uid"], num_buckets=4,
+        auto_compact_every=None,
+    )
+    for i in range(5):
+        rows = [(r, u, i * 100 + u) for r in ("eu", "us") for u in range(8)
+                if (u + i) % 4]
+        store.upsert(spark.createDataFrame(rows, "region string, uid long, v long"))
+    keys = [{"region": r, "uid": u} for r in ("us", "eu", "ap") for u in (0, 1, 3, 7)]
+    return store, keys
+
+
+def _widened_schema(spark, store_dir):
+    """A later upsert adds a column: rows from older files serve it as
+    None, as the Spark path's mergeSchema read does."""
+    store = OnlineStore(
+        store_dir, primary_key=["uid"], num_buckets=4, auto_compact_every=None,
+    )
+    store.upsert(spark.createDataFrame([(1, 1.0), (2, 2.0)], "uid long, x double"))
+    store.upsert(spark.createDataFrame(
+        [(1, 9.0, "new"), (3, 3.0, "three")], "uid long, x double, extra string"
+    ))
+    return store, [{"uid": 1}, {"uid": 2}, {"uid": 3}]
+
+
+@pytest.mark.parametrize("build", [
+    _base_plus_delta, _null_event_times, _precombine_ties_across_batches,
+    _keys_repeated_across_upserts, _widened_schema,
+], ids=lambda f: f.__name__.strip("_"))
+def test_arrow_lookup_matches_spark_and_runs_no_job(spark, store_dir, build):
+    """The pyarrow point-lookup path must (a) return exactly what the
+    Spark plan returns — latest per key across base ∪ delta with the
+    precombine/seq tie order — and (b) launch ZERO Spark jobs."""
+    store, keys = build(spark, store_dir)
     tracker = spark.sparkContext.statusTracker()
     before = tracker.getJobIdsForGroup(None)
     fast = store._arrow_lookup(keys)
@@ -172,8 +238,8 @@ def test_arrow_lookup_matches_spark_and_runs_no_job(spark, store_dir):
     assert fast is not None
 
     slow = store.lookup(store._pruned(spark, keys), keys)
-    assert len(fast) == len(slow) == 4
-    assert fast[3] is None and slow[3] is None
+    assert len(fast) == len(slow) == len(keys)
+    assert any(s is not None for s in slow)
     for f, s in zip(fast, slow):
         if s is None:
             assert f is None
@@ -181,6 +247,9 @@ def test_arrow_lookup_matches_spark_and_runs_no_job(spark, store_dir):
         assert set(f) == set(s)
         for c in s:
             assert f[c] == s[c], c
+    if build is not _base_plus_delta:
+        return
+    assert fast[3] is None
     # the null-ts duplicate must NOT beat the real event time
     assert fast[0]["v"] == 300.0 and fast[1]["v"] == 700.0
 
@@ -284,7 +353,7 @@ def test_arrow_fallback_warns_once_and_counts(spark, store_dir, monkeypatch):
     returns the correct row."""
     import warnings
 
-    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
     import feature_store_api_spark.online.store as mod
 
@@ -296,7 +365,8 @@ def test_arrow_fallback_warns_once_and_counts(spark, store_dir, monkeypatch):
     def boom(*a, **k):
         raise RuntimeError("forced arrow failure")
 
-    monkeypatch.setattr(ds, "dataset", boom)
+    # the delta pile's file reader (OnlineStore._pile)
+    monkeypatch.setattr(pq, "read_table", boom)
     monkeypatch.setattr(mod, "_ARROW_FALLBACK_WARNED", False)
     with pytest.warns(RuntimeWarning, match="degraded"):
         got = store.get_feature_vector(spark, {"uid": 7})
@@ -308,6 +378,97 @@ def test_arrow_fallback_warns_once_and_counts(spark, store_dir, monkeypatch):
         got = store.get_feature_vector(spark, {"uid": 7})
     assert got["v"] == 70
     assert store.arrow_fallback_count == 2
+
+
+def _count_decodes(monkeypatch):
+    """Record every path the delta pile's reader decodes."""
+    import pyarrow.parquet as pq
+
+    decoded = []
+    read = pq.read_table
+
+    def counting(path, *a, **k):
+        decoded.append(path)
+        return read(path, *a, **k)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    return decoded
+
+
+def _pair(store_dir, **kw):
+    """A writer and a serving instance over one directory, as
+    ``FeatureGroup.insert`` and ``init_serving`` hold them."""
+    kw = dict(primary_key=["uid"], num_buckets=4, auto_compact_every=None, **kw)
+    return OnlineStore(store_dir, **kw), OnlineStore(store_dir, **kw)
+
+
+def test_pile_decodes_each_delta_file_once(spark, store_dir, monkeypatch):
+    """k upserts interleaved with m lookups decode each delta file
+    exactly once, and a row upserted between two lookups is served by
+    the second."""
+    decoded = _count_decodes(monkeypatch)
+    writer, reader = _pair(store_dir, event_time="ts")
+    schema = "uid long, ts long, v double"
+    for i in range(4):
+        writer.upsert(spark.createDataFrame(
+            [(1, i, float(i)), (10 + i, 0, -1.0)], schema
+        ).coalesce(1))
+        for _ in range(3):
+            got = reader.get_feature_vectors(spark, [{"uid": 1}, {"uid": 10 + i}])
+            assert [g["v"] for g in got] == [float(i), -1.0]
+    files = list(_files(writer._delta_path))
+    assert len(files) == 4
+    assert sorted(os.path.relpath(p, writer._delta_path) for p in decoded) == sorted(files)
+    assert reader.arrow_fallback_count == 0
+    stats = reader.pile_stats
+    assert stats["files"] == 4 and stats["rows"] == 8 and stats["bytes"] > 0
+
+
+def test_pile_follows_compact_and_truncate(spark, store_dir, monkeypatch):
+    """compact() empties the pile into the base and truncate() drops
+    both: the serving instance's next lookup reflects each, and no file
+    is decoded twice."""
+    decoded = _count_decodes(monkeypatch)
+    writer, reader = _pair(store_dir)
+    schema = "uid long, v long"
+    writer.upsert(spark.createDataFrame([(1, 10), (2, 20)], schema))
+    assert reader.get_feature_vector(spark, {"uid": 1})["v"] == 10
+    writer.compact(spark)
+    assert reader.get_feature_vector(spark, {"uid": 2})["v"] == 20  # from base
+    assert reader.pile_stats == {"files": 0, "rows": 0, "bytes": 0}
+    writer.upsert(spark.createDataFrame([(1, 11)], schema).coalesce(1))
+    got = reader.get_feature_vectors(spark, [{"uid": 1}, {"uid": 2}])
+    assert [g["v"] for g in got] == [11, 20]
+    assert reader.pile_stats["files"] == 1
+    writer.truncate()
+    writer.upsert(spark.createDataFrame([(2, 22)], schema).coalesce(1))
+    got = reader.get_feature_vectors(spark, [{"uid": 1}, {"uid": 2}])
+    assert got[0] is None and got[1]["v"] == 22
+    assert reader.pile_stats["rows"] == 1
+    assert len(decoded) == len(set(decoded))
+    assert reader.arrow_fallback_count == 0
+
+
+def test_pile_ignores_in_flight_temporary_files(spark, store_dir):
+    """A file under ``delta/_temporary/`` is an unfinished Spark write:
+    neither lookup path may serve it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = OnlineStore(
+        store_dir, primary_key=["uid"], num_buckets=4, auto_compact_every=None,
+    )
+    store.upsert(spark.createDataFrame([(1, 10)], "uid long, v long").coalesce(1))
+    tmp = os.path.join(store._delta_path, "_temporary", "0")
+    os.makedirs(tmp)
+    pq.write_table(
+        pa.table({"uid": [1], "v": [999], "_online_seq": pa.array([99], pa.int32()),
+                  _BUCKET: pa.array([store._bucket_of({"uid": 1})], pa.int32())}),
+        os.path.join(tmp, "part-x.parquet"),
+    )
+    assert store.get_feature_vector(spark, {"uid": 1})["v"] == 10
+    assert store.pile_stats["files"] == 1
+    assert store.read(spark).first()["v"] == 10
 
 
 def test_external_fg_online_only_insert_and_serving(spark, tmp_path):

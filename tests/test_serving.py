@@ -268,6 +268,38 @@ def test_live_serving_full_request_runs_no_spark_job(spark, served):
     assert live.get_feature_vector(spark, {"user_id": 999999}) is None
 
 
+def test_transformed_vector_keeps_int_features(spark, tmp_path):
+    """The serving transform must not upcast int features to float: a
+    row whose values are all numeric comes back with the same Python
+    types as the untransformed vector."""
+    from feature_store_api_spark.functions.builtin_transformations import (
+        min_max_scaler,
+    )
+
+    fs = FeatureStore(root=str(tmp_path))
+    fg = fs.create_feature_group("ints", primary_key=["uid"], online_enabled=True)
+    fg.insert(
+        spark.createDataFrame(
+            [(1, 10, 0.5), (2, 20, 1.5)], "uid long, cnt long, x double"
+        ),
+        compute_stats=False,
+    )
+    q = fg.select(["uid", "cnt", "x"])
+    plain = FeatureView("ints_plain", q).init_serving(
+        spark, pin_snapshots=False
+    )
+    scaled = FeatureView(
+        "ints_scaled", q, transformation_functions=[min_max_scaler("x")]
+    ).init_serving(spark, pin_snapshots=False)
+    raw = plain.get_feature_vector(spark, {"uid": 1})
+    vec = scaled.get_feature_vector(spark, {"uid": 1})
+    assert raw == {"uid": 1, "cnt": 10, "x": 0.5}
+    assert vec == {"uid": 1, "cnt": 10, "min_max_scaler_x": 0.0}
+    assert type(vec["uid"]) is int and type(vec["cnt"]) is int
+    many = scaled.get_feature_vectors(spark, [{"uid": 2}, {"uid": 1}])
+    assert [type(v["cnt"]) for v in many] == [int, int]
+
+
 def test_inference_helper_columns_served_separately(spark, tmp_path):
     """Declared inference helpers are excluded from feature vectors and
     served via get_inference_helper(s) (parity feature_view.py:735-830,

@@ -153,6 +153,41 @@ def test_get_batch_data_applies_transformations(spark, pit_fixtures):
     assert "bal" in raw.columns
 
 
+@pytest.mark.parametrize(
+    "scaler", ["min_max_scaler", "standard_scaler", "robust_scaler"]
+)
+def test_empty_window_batch_data_scaler_emits_typed_nulls(
+    spark, pit_fixtures, scaler
+):
+    """A window with no rows has no statistics (every stat is None): the
+    scaler emits a typed null column, so the empty frame keeps the
+    columns and types of a non-empty one instead of raising."""
+    from feature_store_api_spark.functions import builtin_transformations as bt
+
+    fs, spine, profile = pit_fixtures
+    q = spine.select_all().join(profile.select(["bal"]), on=["cid"])
+    fv = FeatureView(
+        "fv", q, labels=["label"],
+        transformation_functions=[getattr(bt, scaler)("bal")],
+    )
+    full = fv.get_batch_data(spark)
+    empty = fv.get_batch_data(spark, start_time="2030-01-01")
+    assert empty.count() == 0
+    assert empty.dtypes == full.dtypes
+    assert f"{scaler}_bal" in empty.columns
+    # the driver-side pandas twin keeps the same contract
+    import pandas as pd
+
+    from feature_store_api_spark.functions.udf import apply_transformations_pandas
+
+    unset = dict.fromkeys(("min", "max", "mean", "stddev", "percentiles"))
+    out = apply_transformations_pandas(
+        pd.DataFrame({"bal": [1.0, 2.0]}), fv.transformation_functions,
+        stats={"bal": unset},
+    )[f"{scaler}_bal"]
+    assert out.dtype == "float64" and out.isna().all()
+
+
 def test_stratified_sample_fractions_and_determinism(spark, sf_dir):
     from feature_store_api_spark.operators.splits import stratified_sample
     from feature_store_api_spark.sources.readers import read_parquet
