@@ -4565,7 +4565,7 @@ class _RecordingConnect:
 
 def _q_batch_window_prune(spark, sf_dir):
     """FeatureView.get_batch_data(start, end) pushes the event-time
-    window into the SOURCE scans (r15: feature_view.py
+    window into the SOURCE scans (r15: plans/compiler.py
     _event_bound_hint -> read_source(filters=) -> backend partition
     pruning) instead of only filtering above the PIT plan: the spine
     group gets both bounds, the PIT feature group the as-of-safe

@@ -1342,7 +1342,7 @@ def prune_ab():
     from pyspark.sql import Window as W
 
     from feature_store_api_spark import FeatureStore
-    from feature_store_api_spark.feature_view import FeatureView
+    from feature_store_api_spark.plans import compiler
 
     spark = get_spark("fsas-bench-prune")
     read_parquet(spark, f"{SF_DIR}/nation.parquet").count()
@@ -1415,10 +1415,7 @@ def prune_ab():
         }
         print(f"# spine rows into the PIT union: "
               f"{out['spine_rows_scanned']}", file=sys.stderr)
-        # class access strips the staticmethod wrapper; keep the raw
-        # descriptor so the finally-restore doesn't leave a plain
-        # function that would bind self on later instance access
-        real_hint = FeatureView.__dict__["_event_bound_hint"]
+        real_hint = compiler._event_bound_hint
 
         def read_window():
             fv.get_batch_data(
@@ -1428,7 +1425,7 @@ def prune_ab():
 
         for mode in ("pruned", "unpruned"):
             if mode == "unpruned":
-                FeatureView._event_bound_hint = staticmethod(
+                compiler._event_bound_hint = (
                     lambda fg, start_ms=None, end_ms=None: None)
             try:
                 read_window()  # codegen warmup
@@ -1438,7 +1435,7 @@ def prune_ab():
                     read_window()
                     ts.append(round(time.time() - t0, 4))
             finally:
-                FeatureView._event_bound_hint = real_hint
+                compiler._event_bound_hint = real_hint
             out[mode] = {"min": min(ts),
                          "median": sorted(ts)[len(ts) // 2],
                          "samples": ts}

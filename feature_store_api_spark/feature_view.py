@@ -20,8 +20,8 @@ from .constructor.filter import filters_to_column, normalize_filters
 from .constructor.query import Query
 from .feature_group import SpineGroup
 from .functions.event_time import to_epoch_millis
-from .operators.pit_join import point_in_time_join_many
 from .operators.splits import random_split, split_labels, time_series_split
+from .plans.compiler import PitRead, compile_query
 
 
 class FeatureView:
@@ -83,75 +83,6 @@ class FeatureView:
         )
 
     # -- PIT compilation ---------------------------------------------------
-    @staticmethod
-    def _event_bound_hint(fg, start_ms=None, end_ms=None):
-        """Filter IR hint over ``fg``'s event-time column for an
-        event-time window, or None when it can't be expressed safely.
-
-        Only TIMESTAMP-declared event times produce a hint: the root
-        predicate compares ``timestamp_millis(ms)``, so a datetime
-        value is instant-identical under the engine's pinned-UTC
-        session; a LONG event time has unknowable units (seconds?
-        micros?) and a DATE needs day-boundary rounding — both skip
-        (skipping a hint is always sound, it just doesn't prune).
-
-        The hint rides ``read_source(filters=)``: managed groups push
-        only its partition-key subtree pre-merge (commit_store
-        contract), file-backed externals apply it as a pre-plan
-        predicate Catalyst pushes into the scan."""
-        et = fg.event_time
-        if not et:
-            return None
-        ftype = None
-        for f in (getattr(fg, "_features", None) or []):
-            if f.name == et:
-                t = f.type  # declared as a string OR a Spark DataType
-                ftype = (
-                    t.simpleString() if hasattr(t, "simpleString")
-                    else str(t or "")
-                ).lower()
-                break
-        if ftype not in ("timestamp", "timestamp_ntz"):
-            return None
-        from datetime import datetime as _dt
-        from datetime import timedelta as _td
-
-        def ms_to_dt(ms):
-            return _dt(1970, 1, 1) + _td(milliseconds=int(ms))
-
-        leaves = []
-        if start_ms is not None:
-            leaves.append((et, ">=", ms_to_dt(start_ms)))
-        if end_ms is not None:
-            leaves.append((et, "<", ms_to_dt(end_ms)))
-        return leaves or None
-
-    @staticmethod
-    def _staleness_ms(stale) -> Optional[int]:
-        """A declared ``max_staleness`` TTL as epoch-milliseconds, or
-        None when it isn't a fixed timestamp duration (numeric
-        staleness belongs to numeric event times, which never get a
-        bound hint anyway)."""
-        import datetime as _dt
-        import re as _re
-
-        if isinstance(stale, _dt.timedelta):
-            return int(stale.total_seconds() * 1000)
-        if isinstance(stale, str):
-            m = _re.match(
-                r"^\s*(\d+)\s+"
-                r"(millisecond|second|minute|hour|day|week)s?\s*$",
-                stale,
-            )
-            if m:
-                unit_ms = {
-                    "millisecond": 1, "second": 1000, "minute": 60_000,
-                    "hour": 3_600_000, "day": 86_400_000,
-                    "week": 604_800_000,
-                }[m.group(2)]
-                return int(m.group(1)) * unit_ms
-        return None
-
     def _pit_plan(
         self,
         spark: SparkSession,
@@ -160,128 +91,27 @@ class FeatureView:
         event_start_ms: Optional[int] = None,
         event_end_ms: Optional[int] = None,
     ) -> DataFrame:
-        """Compile the view query with as-of semantics: the left feature
-        group (or a passed spine) provides (pk, event_time); every joined
-        feature group with an event time is as-of joined instead of
-        equi-joined. Feature groups without event time join plainly.
+        """The view's read: its query compiled in as-of mode. The left
+        feature group (or a passed spine) is the root; every joined
+        group with an event time is as-of joined (``PitRead`` in
+        ``plans/compiler.py`` has the semantics and the event-window
+        pushdown rules for ``event_start_ms``/``event_end_ms``).
 
         ``pit_strategy`` overrides the PIT physical strategy for this
         read (``union_window`` default; ``union_window_skew`` for
         zipfian entities — stays FUSED across feature groups; ``auto``
         probes). Falls back to the view's ``default_pit_strategy``
-        attribute when unset.
-
-        ``event_start_ms``/``event_end_ms`` (epoch millis) are the
-        EVENT-time window the caller will re-apply exactly on the plan
-        (``get_batch_data``); here they become source pushdown hints so
-        date/time-partitioned history prunes files instead of
-        full-scanning (parity: the reference embeds the range per FG
-        server-side, ``core/feature_view_engine.py:187-244,411-436``):
-
-        * spine side gets BOTH bounds — spine rows outside the window
-          are dropped by the exact root predicate anyway;
-        * each PIT feature side gets only ``event_time < end``: with
-          every surviving spine row at ``spine_ts < end``, a feature
-          row at ``feature_ts >= end`` can never win the as-of match
-          (``feature_ts <= spine_ts``), so the bound changes nothing —
-          the LOWER bound is NOT safe (an older row may still be the
-          as-of match inside the window) and is never pushed."""
-        left_fg = self.query.left_feature_group
-        if spine is None:
-            left_df = self.query._left_feature_group.read_source(
-                spark, self.query.start_time, self.query.end_time,
-                filters=self._event_bound_hint(
-                    left_fg, event_start_ms, event_end_ms
-                ),
-            )
-            left_cols = [f.name for f in self.query.left_features]
-            left_df = left_df.select(*left_cols) if left_cols else left_df
-        else:
-            self._validate_spine(spine, left_fg)
-            left_df = spine
-        if not left_fg.event_time:
-            return self.query.read(spark)
-
-        # plain equi-joins apply first, PIT joins are collected and
-        # handed to point_in_time_join_many as one batch: when all PIT
-        # feature groups share the spine keys (the common FeatureView
-        # shape) that fuses them into ONE union + window — a single
-        # shuffle for the whole view instead of one per feature group.
-        # Every join only ADDS prefixed feature columns (keys always
-        # refer to spine/FG columns), so this regrouping cannot change
-        # the result.
-        out = left_df
-        pit_specs = []
-        for join in self.query.joins:
-            sub = join.query
-            fg = sub.left_feature_group
-            # PIT-safe feature-side bounds (docstring above): the upper
-            # bound always; a LOWER bound only when the group declares
-            # a max_staleness TTL — then any surviving spine row
-            # (spine_ts >= start) can only pick feature rows at
-            # feature_ts >= spine_ts - staleness >= start - staleness,
-            # so everything older is dead weight (and a spine row with
-            # no in-window feature row is NULL either way)
-            f_start_ms = None
-            if event_start_ms is not None and fg.event_time:
-                ttl_ms = self._staleness_ms(
-                    getattr(fg, "max_staleness", None)
-                )
-                if ttl_ms is not None:
-                    f_start_ms = event_start_ms - ttl_ms
-            rdf = fg.read_source(
-                spark, sub.start_time, sub.end_time,
-                filters=(
-                    self._event_bound_hint(fg, f_start_ms, event_end_ms)
-                    if fg.event_time else None
-                ),
-            )
-            keys = join.on or join.left_on or [
-                k for k in left_fg.primary_key if k in set(fg.primary_key)
-            ]
-            rkeys = join.right_on or keys
-            # align right key names onto spine key names
-            for lk, rk in zip(keys, rkeys):
-                if lk != rk:
-                    rdf = rdf.withColumnRenamed(rk, lk)
-            feats = [f.name for f in sub.left_features if f.name not in keys]
-            if fg.event_time:
-                pit_specs.append(
-                    {
-                        "df": rdf,
-                        "keys": keys,
-                        "feature_ts": fg.event_time,
-                        "features": [f for f in feats if f != fg.event_time],
-                        "prefix": join.prefix,
-                        "precombine": getattr(fg, "precombine_key", None),
-                        # declared feature TTL rides into the PIT plan
-                        "max_staleness": getattr(fg, "max_staleness", None),
-                    }
-                )
-            else:
-                sel = [(join.prefix + f) if join.prefix else f for f in feats]
-                renamed = rdf.select(
-                    *[F.col(k) for k in keys],
-                    *[
-                        F.col(f).alias(n)
-                        for f, n in zip(feats, sel)
-                    ],
-                )
-                out = out.join(renamed, on=keys, how="left")
-        if pit_specs:
-            out = point_in_time_join_many(
-                out, pit_specs, spine_ts=left_fg.event_time,
-                strategy=(
-                    pit_strategy
-                    or getattr(self, "default_pit_strategy", None)
-                    or "union_window"
-                ),
-            )
-
-        logic = self.query.filters
-        if logic is not None:
-            out = out.where(filters_to_column(normalize_filters(logic)))
-        return out
+        attribute when unset."""
+        if spine is not None:
+            self._validate_spine(spine, self.query.left_feature_group)
+        strategy = (
+            pit_strategy
+            or getattr(self, "default_pit_strategy", None)
+            or "union_window"
+        )
+        return compile_query(self.query, spark, pit=PitRead(
+            spine, strategy, event_start_ms, event_end_ms,
+        ))
 
     @staticmethod
     def _validate_spine(spine: DataFrame, left_fg) -> None:

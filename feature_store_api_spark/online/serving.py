@@ -25,6 +25,7 @@ from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import SparkSession
 
+from ..plans.compiler import _join_keys
 from .store import OnlineStore
 
 
@@ -45,19 +46,12 @@ def _staleness_cutoff_value(max_staleness, clock=None):
     one the caller warns and skips enforcement (never silently)."""
     import datetime as _dt
 
-    from ..operators.pit_join import _STALENESS_RE, validate_max_staleness
+    from ..operators.pit_join import staleness_delta
 
-    max_staleness = validate_max_staleness(max_staleness)
-    if isinstance(max_staleness, _dt.timedelta):
-        delta = max_staleness
-    elif isinstance(max_staleness, str):
-        m = _STALENESS_RE.match(max_staleness)
-        n, unit = int(m.group(1)), m.group(2).lower().rstrip("s") + "s"
-        delta = _dt.timedelta(**{unit: n})
-    else:  # numeric TTL ↔ numeric event time: needs a numeric clock
-        if clock is None:
-            return None
-        return clock - max_staleness
+    delta = staleness_delta(max_staleness)
+    if not isinstance(delta, _dt.timedelta):
+        # numeric TTL ↔ numeric event time: needs a numeric clock
+        return None if clock is None else clock - delta
     if clock is None:
         clock = _dt.datetime.now(_dt.timezone.utc)
     if isinstance(clock, _dt.datetime) and clock.tzinfo is not None:
@@ -120,10 +114,19 @@ class VectorServer:
         ]
         for join in q.joins:
             fg = join.query.left_feature_group
-            lkeys = join.on or join.left_on or [
-                k for k in self._serving_keys if k in set(fg.primary_key)
+            if join.query.joins:
+                # its features are in the training frame but would
+                # never reach a vector: training/serving skew
+                raise ValueError(
+                    f"Serving looks up directly joined feature groups "
+                    f"only; the join with {fg.name!r} has nested joins"
+                )
+            # the compiler's key rule: an entry carries the left pk and
+            # every left join key
+            lkeys, rkeys = _join_keys(q, join)
+            self._serving_keys += [
+                k for k in lkeys if k not in self._serving_keys
             ]
-            rkeys = join.right_on or lkeys
             self._plans.append(
                 {
                     "store": OnlineStore.for_feature_group(fg),

@@ -102,6 +102,17 @@ def validate_max_staleness(max_staleness):
     )
 
 
+def staleness_delta(max_staleness):
+    """The one TTL parser: a validated ``max_staleness`` as a
+    ``datetime.timedelta`` (interval strings in any case, timedeltas),
+    the number itself for numeric event times, or None."""
+    max_staleness = validate_max_staleness(max_staleness)
+    if isinstance(max_staleness, str):
+        m = _STALENESS_RE.match(max_staleness)
+        return _dt.timedelta(**{m.group(2).lower() + "s": int(m.group(1))})
+    return max_staleness
+
+
 def point_in_time_join(
     spine: DataFrame,
     feature_df: DataFrame,
@@ -174,22 +185,10 @@ def point_in_time_join(
 
 
 def _staleness_cutoff(ts_col, max_staleness):
-    """spine_ts - TTL: the oldest feature timestamp still usable.
-    ``max_staleness`` is an INTERVAL string ('30 days', '6 hours') or a
-    ``datetime.timedelta`` for temporal timestamps, or a number for
-    numeric event times. Callers validate via
-    ``validate_max_staleness`` before this interpolates anything."""
-    if isinstance(max_staleness, _dt.timedelta):
-        # lit(timedelta) → DayTimeIntervalType literal: the typed path,
-        # no string interpolation at all
-        return ts_col - F.lit(max_staleness)
-    if isinstance(max_staleness, str):
-        m = _STALENESS_RE.match(max_staleness)
-        if not m:  # defense in depth behind validate_max_staleness
-            raise ValueError(f"Invalid max_staleness {max_staleness!r}")
-        # re-render from the PARSED parts — only vetted tokens reach expr
-        return ts_col - F.expr(f"INTERVAL {int(m.group(1))} {m.group(2).upper()}")
-    return ts_col - F.lit(max_staleness)
+    """spine_ts - TTL: the oldest feature timestamp still usable. A
+    temporal TTL becomes a typed DayTimeIntervalType literal (no string
+    ever reaches ``F.expr``); a numeric one subtracts as a number."""
+    return ts_col - F.lit(staleness_delta(max_staleness))
 
 
 def _pit_skew_probe(

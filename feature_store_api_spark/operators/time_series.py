@@ -177,27 +177,19 @@ def label_window_join(
     in pit_join's skew strategy if an entity can dominate."""
     import datetime as _dt
 
-    from ..operators.pit_join import _STALENESS_RE, validate_max_staleness
+    from ..operators.pit_join import staleness_delta
 
     keys = list(keys)
     bad = [a for a in aggs if a not in _LABEL_AGGS]
     if bad:
         raise ValueError(f"Unknown label aggs {bad}; choose from {_LABEL_AGGS}")
-    horizon = validate_max_staleness(horizon)
-    if horizon is None:
+    delta = staleness_delta(horizon)
+    if delta is None:
         raise ValueError("horizon is required")
-    if isinstance(horizon, _dt.timedelta):
-        span = int(horizon.total_seconds() * 1_000_000)
-    elif isinstance(horizon, str):
-        m = _STALENESS_RE.match(horizon)
-        unit_us = {
-            "millisecond": 1_000, "second": 1_000_000,
-            "minute": 60_000_000, "hour": 3_600_000_000,
-            "day": 86_400_000_000, "week": 604_800_000_000,
-        }[m.group(2).lower()]
-        span = int(m.group(1)) * unit_us
+    if isinstance(delta, _dt.timedelta):
+        span = delta // _dt.timedelta(microseconds=1)
     else:
-        span = int(horizon)
+        span = int(delta)
     if span <= 0:
         raise ValueError(f"horizon must be positive, got {horizon!r}")
 

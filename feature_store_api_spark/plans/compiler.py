@@ -21,11 +21,16 @@ Semantics compiled (parity ``constructor/query.py``):
     sub-queries are applied to the right side BEFORE the join, since
     their columns don't survive
   * final projection in declaration order
+  * as-of mode (``PitRead``, FeatureView reads): the one planner of
+    point-in-time reads (parity: one constructor builds both ``query``
+    and ``pit_query``, ``constructor/fs_query.py:32-43``)
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Set, Tuple
+import datetime as _dt
+from dataclasses import dataclass
+from typing import List, Optional, Set, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +38,88 @@ from pyspark.sql import functions as F
 from ..constructor.filter import filters_to_column, normalize_filters
 from ..constructor.join import JoinType
 from ..feature import autofix_feature_name
+from ..operators.pit_join import point_in_time_join_many, staleness_delta
+
+
+@dataclass(frozen=True)
+class PitRead:
+    """As-of mode of :func:`compile_query`, passed by FeatureView reads.
+
+    The root reads ``spine`` when given (every spine column passes
+    through), else the left feature group. When the left group has an
+    event time, a join whose group has one is compiled like any other
+    join (keys, prefixes, nested joins, defaults, hints), keeps its
+    event time and precombine key, has its right keys aliased to the
+    left key names, and becomes one ``point_in_time_join_many`` spec;
+    all specs run in ONE call after the plain joins, so groups sharing
+    the spine keys fuse into one union + window. A PIT-joined group's
+    event time stays out of the output.
+
+    ``start_ms``/``end_ms`` (epoch millis) are the EVENT-time window
+    the caller re-applies exactly on the plan (``get_batch_data``);
+    here they only become source pushdown hints, so date/time
+    partitioned history prunes files instead of full-scanning (parity:
+    the reference embeds the range per FG server-side,
+    ``core/feature_view_engine.py:187-244,411-436``):
+
+    * the spine side gets BOTH bounds — spine rows outside the window
+      are dropped by the exact root predicate anyway;
+    * each PIT feature side gets ``event_time < end`` always: with
+      every surviving spine row at ``spine_ts < end``, a feature row at
+      ``feature_ts >= end`` can never win the as-of match;
+    * a feature side gets the LOWER bound ``start - max_staleness``
+      only when its group declares a TTL: a surviving spine row can
+      only pick ``feature_ts >= spine_ts - staleness >= start -
+      staleness``. Without a TTL an older row may still be the as-of
+      match inside the window, so no lower bound is pushed;
+    * a PIT side never receives its own query filter as a hint: that
+      filter applies after the as-of match (WHERE semantics)."""
+
+    spine: Optional[DataFrame] = None
+    strategy: str = "union_window"
+    start_ms: Optional[int] = None
+    end_ms: Optional[int] = None
+
+
+def _event_bound_hint(fg, start_ms=None, end_ms=None):
+    """Filter IR hint over ``fg``'s event-time column for an event-time
+    window, or None when it can't be expressed safely.
+
+    Only TIMESTAMP-declared event times produce a hint: the root
+    predicate compares ``timestamp_millis(ms)``, so a datetime value is
+    instant-identical under the engine's pinned-UTC session; a LONG
+    event time has unknowable units and a DATE needs day-boundary
+    rounding — both skip (skipping a hint is always sound, it just
+    doesn't prune).
+
+    The hint rides ``read_source(filters=)``: managed groups push only
+    its partition-key subtree pre-merge (commit_store contract),
+    file-backed externals apply it as a pre-plan predicate Catalyst
+    pushes into the scan."""
+    et = fg.event_time
+    if not et:
+        return None
+    ftype = None
+    for f in (getattr(fg, "_features", None) or []):
+        if f.name == et:
+            t = f.type  # declared as a string OR a Spark DataType
+            ftype = (
+                t.simpleString() if hasattr(t, "simpleString")
+                else str(t or "")
+            ).lower()
+            break
+    if ftype not in ("timestamp", "timestamp_ntz"):
+        return None
+
+    def ms_to_dt(ms):
+        return _dt.datetime(1970, 1, 1) + _dt.timedelta(milliseconds=int(ms))
+
+    leaves = []
+    if start_ms is not None:
+        leaves.append((et, ">=", ms_to_dt(start_ms)))
+    if end_ms is not None:
+        leaves.append((et, "<", ms_to_dt(end_ms)))
+    return leaves or None
 
 
 def _normalize_columns(df: DataFrame) -> DataFrame:
@@ -76,8 +163,12 @@ def _compile_node(
     filter_refs: Set[Tuple[int, str]],
     extra_keep: Tuple[str, ...] = (),
     skip_filters: bool = False,
+    pit: Optional[PitRead] = None,
+    window: Optional[Tuple[Optional[int], Optional[int]]] = None,
 ):
-    """Compile one Query node.
+    """Compile one Query node. ``pit`` (root only) selects the as-of
+    mode; ``window`` marks a PIT-joined side and carries its event
+    window (``PitRead`` has the rules).
 
     Returns ``(df, selected_outnames, colmap, pending)`` where ``colmap``
     maps ``(id(feature_group), feature_name) -> column name in df`` and
@@ -138,17 +229,31 @@ def _compile_node(
         ):
             if c not in cols_hint:
                 cols_hint.append(c)
-    df = _normalize_columns(
-        fg.read_source(
-            spark, q.start_time, q.end_time,
-            filters=flt_hint, columns=cols_hint,
+    # event-window HINT (``PitRead`` has the rules): a PIT side pushes
+    # its window only — its own filter applies after the as-of match
+    if window is not None:
+        flt_hint = None
+    elif pit is not None:
+        window = (pit.start_ms, pit.end_ms)
+    bounds = _event_bound_hint(fg, *window) if window else None
+    if bounds:
+        flt_hint = bounds if flt_hint is None else [flt_hint, *bounds]
+    spine = pit.spine if pit is not None else None
+    if spine is not None:
+        df = spine
+    else:
+        df = _normalize_columns(
+            fg.read_source(
+                spark, q.start_time, q.end_time,
+                filters=flt_hint, columns=cols_hint,
+            )
         )
-    )
     if online:
         df = _latest_per_key(df, fg)
+    as_of = pit is not None and bool(fg.event_time)
 
     colmap = {(id(fg), f.name): f.name for f in fg.features if f.name in df.columns}
-    sel = [f.name for f in q.left_features]
+    sel = list(df.columns) if spine is not None else [f.name for f in q.left_features]
     # pending filters are SCOPED: each carries the column map of the
     # sub-query it was attached to, so a self-join's two sides resolve
     # the same Feature to their own columns (the reference gets this via
@@ -195,7 +300,7 @@ def _compile_node(
     for c in sel + list(extra_keep) + own_filter_cols:
         if c not in keep:
             keep.append(c)
-    for c in own_keys:
+    for c in own_keys + ([fg.event_time] if as_of else []):
         if c in df.columns and c not in keep:
             keep.append(c)
     df = df.select(*keep)
@@ -204,12 +309,23 @@ def _compile_node(
     if q._filter is not None:
         pending.append((q._filter, colmap))
 
+    specs: List[dict] = []
     for join in q.joins:
         how = join.join_type
         lkeys, rkeys = _join_keys(q, join)
+        rfg = join.query.left_feature_group
+        extra, side = tuple(rkeys), None
+        if as_of and rfg.event_time:
+            pre = getattr(rfg, "precombine_key", None)
+            extra += (rfg.event_time,) + ((pre,) if pre else ())
+            ttl = staleness_delta(getattr(rfg, "max_staleness", None))
+            lower = None
+            if pit.start_ms is not None and isinstance(ttl, _dt.timedelta):
+                lower = pit.start_ms - ttl // _dt.timedelta(milliseconds=1)
+            side = (lower, pit.end_ms)
         rdf, rsel, rcolmap, rpending = _compile_node(
             join.query, spark, online, filter_refs,
-            extra_keep=tuple(rkeys), skip_filters=skip_filters,
+            extra_keep=extra, skip_filters=skip_filters, window=side,
         )
         using = bool(lkeys) and lkeys == rkeys
         absent = [k for k in lkeys if k not in df.columns]
@@ -220,7 +336,28 @@ def _compile_node(
                 "order joins so the producing join comes first"
             )
 
-        if how in (JoinType.LEFT_SEMI, JoinType.LEFT_ANTI):
+        if side:
+            # as-of join: right keys aliased to the left key names; the
+            # selected and filter-referenced columns ride as features
+            rdf = rdf.select(
+                *[F.col(r).alias(l) for l, r in zip(lkeys, rkeys)],
+                *[c for c in rdf.columns if c not in lkeys],
+            )
+            wanted = set(rsel) | {
+                v for k, v in rcolmap.items() if k in filter_refs
+            }
+            feats = [
+                c for c in rdf.columns
+                if c in wanted and c not in lkeys and c != rfg.event_time
+            ]
+            specs.append({
+                "df": rdf, "keys": lkeys, "feature_ts": rfg.event_time,
+                "features": feats, "prefix": join.prefix, "precombine": pre,
+                "max_staleness": getattr(rfg, "max_staleness", None),
+            })
+            ren = dict(zip(rkeys, lkeys))
+            ren.update((c, (join.prefix or "") + c) for c in feats)
+        elif how in (JoinType.LEFT_SEMI, JoinType.LEFT_ANTI):
             # right-side filters can't apply post-join; consume them now
             for logic, scope in rpending:
                 rdf = rdf.where(_scoped_column(logic, scope))
@@ -230,52 +367,51 @@ def _compile_node(
             else:
                 df = df.join(rdf, on=_eq_cond(lkeys, rkeys), how=how)
             continue
+        else:
+            # prefix rename on the right (parity join.py:43,51); USING
+            # keys keep their name so Spark merges them
+            ren = {
+                c: c if using and c in rkeys else (join.prefix or "") + c
+                for c in rdf.columns
+            }
+            # collision handling: a collision on a USER-SELECTED column
+            # is an ambiguity error; a filter-only column is aliased
+            # internally
+            merge_keys = set(rkeys) if using else set()
+            left_cols = set(df.columns)
+            tmp_i = 0
+            for c in list(ren):
+                n = ren[c]
+                if n in left_cols and n not in merge_keys:
+                    if c in rsel:
+                        raise ValueError(
+                            f"Ambiguous column {n!r} on both sides of join "
+                            f"with {rfg.name!r}; use prefix="
+                        )
+                    ren[c] = f"__j{id(join) % 10007}_{tmp_i}_{n}"
+                    tmp_i += 1
 
-        # prefix rename on the right (parity join.py:43,51); USING keys
-        # keep their name so Spark merges them
-        ren: Dict[str, str] = {}
-        for c in rdf.columns:
-            if using and c in rkeys:
-                ren[c] = c
+            if any(k != v for k, v in ren.items()):
+                rdf = rdf.select([F.col(c).alias(n) for c, n in ren.items()])
+            rkeys = [ren[k] for k in rkeys]
+            if how == JoinType.CROSS:
+                df = df.crossJoin(rdf)
+            elif using:
+                df = df.join(rdf, on=list(rkeys), how=how)
             else:
-                ren[c] = (join.prefix + c) if join.prefix else c
+                df = df.join(rdf, on=_eq_cond(lkeys, rkeys), how=how)
 
-        # collision handling: a collision on a USER-SELECTED column is an
-        # ambiguity error; a filter-only column is aliased internally
-        merge_keys = {k for k in rkeys} if using else set()
-        left_cols = set(df.columns)
-        tmp_i = 0
-        for c in list(ren):
-            n = ren[c]
-            if n in left_cols and (not using or n not in merge_keys):
-                if c in rsel:
-                    raise ValueError(
-                        f"Ambiguous column {n!r} on both sides of join with "
-                        f"{join.query.left_feature_group.name!r}; use prefix="
-                    )
-                ren[c] = f"__j{id(join) % 10007}_{tmp_i}_{n}"
-                tmp_i += 1
-
-        if any(k != v for k, v in ren.items()):
-            rdf = rdf.select([F.col(c).alias(n) for c, n in ren.items()])
-        rkeys = [ren[k] for k in rkeys]
-        rsel = [ren[s] for s in rsel]
-        rcolmap = {k: ren[v] for k, v in rcolmap.items()}
         for logic, scope in rpending:
             pending.append((logic, {k: ren.get(v, v) for k, v in scope.items()}))
-
-        if how == JoinType.CROSS:
-            df = df.crossJoin(rdf)
-        elif using:
-            df = df.join(rdf, on=list(rkeys), how=how)
-        else:
-            df = df.join(rdf, on=_eq_cond(lkeys, rkeys), how=how)
-
-        sel.extend(rsel)
+        sel.extend(ren[s] for s in rsel if s in ren)
         for key, v in rcolmap.items():
-            if v in df.columns and key not in colmap:
-                colmap[key] = v
+            if v in ren and key not in colmap:
+                colmap[key] = ren[v]
 
+    if specs:
+        df = point_in_time_join_many(
+            df, specs, spine_ts=fg.event_time, strategy=pit.strategy,
+        )
     return df, sel, colmap, pending
 
 
@@ -326,12 +462,14 @@ def _scoped_column(logic, colmap) -> Column:
 
 def compile_query(
     q, spark: SparkSession, online: bool = False, skip_filters: bool = False,
+    pit: Optional[PitRead] = None,
 ) -> DataFrame:
     """``skip_filters=True`` compiles the plan WITHOUT the query's
     WHERE conditions — the online-preview contract: the reference's
     preview statement strips everything from `` WHERE `` and appends
     LIMIT (``core/online_store_sql_engine.py:464-465``); it also hands
-    sources no filter/projection hints."""
+    sources no filter/projection hints. ``pit`` is the as-of mode of
+    FeatureView reads (:class:`PitRead`)."""
     logic_all = q.filters
     filter_refs = (
         {
@@ -343,7 +481,7 @@ def compile_query(
         else set()
     )
     df, sel, colmap, pending = _compile_node(
-        q, spark, online, filter_refs, skip_filters=skip_filters,
+        q, spark, online, filter_refs, skip_filters=skip_filters, pit=pit,
     )
 
     cond = None

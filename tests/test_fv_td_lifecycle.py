@@ -535,6 +535,21 @@ def test_batch_window_ttl_lower_bound_on_feature_side(spark, tmp_path):
         FeatureGroup.read_source = orig
     assert [(c, o) for (c, o, _v) in seen["tb_feat"]] == [("fts", "<")]
 
+    # a TTL written in any case the TTL validator accepts prunes too
+    feat.max_staleness = "30 Days"
+    FeatureGroup.read_source = spy
+    try:
+        seen.clear()
+        fv.get_batch_data(
+            spark, start_time=dt.datetime(2024, 1, 8),
+            end_time=dt.datetime(2024, 1, 15),
+        ).collect()
+    finally:
+        FeatureGroup.read_source = orig
+    ff = seen["tb_feat"]
+    assert [(c, o) for (c, o, _v) in ff] == [("fts", ">="), ("fts", "<")]
+    assert ff[0][2] == dt.datetime(2023, 12, 9)   # start - 30 days
+
 
 def test_time_splits_training_dataset_pushes_window_hull(spark, tmp_path):
     """create_training_dataset(time_splits=) pushes the splits' convex

@@ -482,3 +482,28 @@ def test_filter_ir_has_one_home():
         if path != home and ir.search(path.read_text())
     ]
     assert offenders == []
+
+
+def test_query_compiler_is_the_only_planner():
+    """Batch and training reads of a view compile through
+    ``plans/compiler.py``: it is the only caller of
+    ``point_in_time_join_many`` in the package. A second caller is a
+    second planner with its own key, prefix and filter rules (one once
+    dropped nested features and ignored ``join_type``)."""
+    import pathlib
+    import re
+
+    import feature_store_api_spark
+
+    root = pathlib.Path(feature_store_api_spark.__file__).parent
+    call = re.compile(r"(?<!def )\bpoint_in_time_join_many\(")
+    sources = sorted(root.rglob("*.py"))
+    assert len(sources) > 10
+    home = root / "plans" / "compiler.py"
+    assert call.search(home.read_text())
+    offenders = [
+        str(path.relative_to(root))
+        for path in sources
+        if path != home and call.search(path.read_text())
+    ]
+    assert offenders == []

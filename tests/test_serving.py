@@ -430,3 +430,42 @@ def test_serving_ttl_declaration_validated(tmp_path):
             "ttl_bad", primary_key=["k"], event_time="ts",
             online_enabled=True, max_staleness="1 dayz",
         )
+
+
+@pytest.fixture()
+def keyed_view(spark, tmp_path):
+    """``ev`` (pk ``eid``) joins ``us`` on the non-pk column ``cust``;
+    ``us`` joins ``rg`` on ``rid``."""
+    fs = FeatureStore(root=str(tmp_path))
+    ev = fs.create_feature_group("kv_ev", primary_key=["eid"])
+    ev.insert(spark.createDataFrame(
+        [(1, 3, 1.0)], "eid long, cust long, amt double"))
+    us = fs.create_feature_group("kv_us", primary_key=["cust"])
+    us.insert(spark.createDataFrame(
+        [(3, "n3", 1)], "cust long, nm string, rid long"))
+    rg = fs.create_feature_group("kv_rg", primary_key=["rid"])
+    rg.insert(spark.createDataFrame([(1, "west")], "rid long, region string"))
+    return ev, us, rg
+
+
+def test_serving_keys_include_left_join_keys(spark, keyed_view):
+    """An entry without a non-pk join key gets the "Serving key(s)
+    missing" error, not a raw KeyError from the lookup."""
+    ev, us, _rg = keyed_view
+    fv = FeatureView("kv1", ev.select_all().join(us.select(["nm"]), on=["cust"]))
+    server = fv.init_serving(spark, pin_snapshots=False)
+    assert server._serving_keys == ["eid", "cust"]
+    with pytest.raises(ValueError, match="Serving key.*cust"):
+        server.get_feature_vector(spark, {"eid": 1})
+
+
+def test_serving_rejects_nested_joins(spark, keyed_view):
+    """Serving looks up directly joined groups only; a nested join's
+    features would be in the training frame but never in a vector
+    (training/serving skew), so init_serving refuses it."""
+    ev, us, rg = keyed_view
+    fv = FeatureView("kv2", ev.select_all().join(
+        us.select(["nm"]).join(rg.select(["region"]), on=["rid"]),
+        on=["cust"]))
+    with pytest.raises(ValueError, match="nested"):
+        fv.init_serving(spark, pin_snapshots=False)

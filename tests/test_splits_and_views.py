@@ -452,3 +452,73 @@ def test_feature_view_pit_strategy_override(spark, tmp_path):
     sticky = fv.get_batch_data(spark, transformed=False)
     assert "__bkt" in sticky._jdf.queryExecution().executedPlan().toString()
     assert rows(sticky) == rows(plain)
+
+
+@pytest.fixture(scope="module")
+def shapes(spark, tmp_path_factory):
+    """Small groups for views whose joined groups have no event time:
+    ``ev`` (event time ``ts``) joins ``us``, ``rg`` and ``od``, none of
+    which has one, so a view over them reads the rows its own
+    ``Query.read`` reads. Customer 5 has events but no ``us`` row."""
+    fs = FeatureStore(root=str(tmp_path_factory.mktemp("shapes")))
+    ev = fs.create_feature_group("ev", primary_key=["eid"], event_time="ts")
+    ev.insert(spark.createDataFrame(
+        [(i, i % 5 + 1, ts("2024-01-01") + dt.timedelta(days=i), float(i))
+         for i in range(10)],
+        "eid long, cust long, ts timestamp, amt double"))
+    us = fs.create_feature_group("us", primary_key=["cust"])
+    us.insert(spark.createDataFrame(
+        [(c, f"n{c}", c % 2) for c in range(1, 5)],
+        "cust long, nm string, rid long"))
+    rg = fs.create_feature_group("rg", primary_key=["rid"])
+    rg.insert(spark.createDataFrame(
+        [(0, "east"), (1, "west")], "rid long, region string"))
+    od = fs.create_feature_group("od", primary_key=["oid"])
+    od.insert(spark.createDataFrame(
+        [(100 + c, c, c * 1.5) for c in range(1, 6)],
+        "oid long, ocust long, total double"))
+    return ev, us, rg, od
+
+
+_SHAPES = {
+    "left": lambda ev, us, rg, od: ev.select_all().join(
+        us.select(["nm"]), on=["cust"]),
+    "inner": lambda ev, us, rg, od: ev.select_all().join(
+        us.select(["nm"]), on=["cust"], join_type="inner"),
+    "prefix": lambda ev, us, rg, od: ev.select_all().join(
+        us.select(["nm"]), on=["cust"], prefix="u_"),
+    "prefix_filter": lambda ev, us, rg, od: ev.select_all().join(
+        us.select(["nm"]), on=["cust"], prefix="u_").filter(us.nm == "n1"),
+    "nested": lambda ev, us, rg, od: ev.select_all().join(
+        us.select(["nm"]).join(rg.select(["region"]), on=["rid"]),
+        on=["cust"]),
+    "selected_right_key": lambda ev, us, rg, od: ev.select_all().join(
+        od.select(["ocust", "total"]), left_on=["cust"], right_on=["ocust"]),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_view_reads_what_query_reads(spark, shapes, shape):
+    """One planner: a view over groups joined without an event time
+    returns the rows and the columns of its own ``Query.read``."""
+    q = _SHAPES[shape](*shapes)
+    want = q.read(spark)
+    got = FeatureView(f"v_{shape}", q).get_batch_data(spark)
+    assert got.columns == want.columns
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr)
+
+
+def test_spine_replaces_left_group_without_event_time(spark, shapes):
+    """A passed spine is the root of the read even when the left group
+    has no event time: the training frame has exactly the spine's rows
+    (spine values included), with the joined features added."""
+    ev, us, rg, od = shapes
+    fv = FeatureView(
+        "v_spine", us.select_all().join(rg.select(["region"]), on=["rid"]))
+    spine = spark.createDataFrame(
+        [(1, "a", 1), (3, "b", 0)], "cust long, nm string, rid long")
+    out = fv.training_data(spark, spine=spine)
+    assert out.columns == ["cust", "nm", "rid", "region"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "a", 1, "west"), (3, "b", 0, "east")]
