@@ -192,7 +192,11 @@ class FeatureView:
         model-dependent transformations; pass ``stats`` (the training
         run's statistics dict) to guarantee training/serving-consistent
         scaling — without it, statistics-bound transformations fall back
-        to stats over this batch frame.
+        to stats over this batch frame. That fallback makes the call
+        eager: the batch frame is materialized once, the statistics and
+        the returned rows both come from it, and the rows are fixed at
+        call time (with ``stats``, or no such transformation, the frame
+        stays lazy).
 
         Helper columns (parity ``feature_view.py:974-983``): declared
         ``training_helper_columns`` are always dropped from batch data;
@@ -253,7 +257,12 @@ class FeatureView:
         """Training frame. Declared ``inference_helper_columns`` are
         always dropped; declared ``training_helper_columns`` only
         survive with ``training_helper_columns=True`` (parity
-        ``feature_view.py:2118-2130`` defaults)."""
+        ``feature_view.py:2118-2130`` defaults).
+
+        With a statistics-bound transformation the call is eager: the
+        PIT frame is materialized once, the statistics and the returned
+        rows both come from it, and the rows are fixed at call time.
+        Otherwise the frame is lazy."""
         df = self._pit_plan(spark, spine)
         if apply_transformations and self.transformation_functions:
             from .functions.udf import apply_transformations as _apply
@@ -266,6 +275,20 @@ class FeatureView:
             ]
         return df.drop(*drop) if drop else df
 
+    def _random_splits(self, spark, spine, weights, seed):
+        """Seeded random splits of the PIT frame, transformed with the
+        train split's statistics. The frame is materialized once with an
+        eager ``localCheckpoint``: the statistics pass and every split
+        read it, and it frees itself when the splits are
+        garbage-collected, so no cache outlives the returned frames."""
+        from .operators.training import prepare_training_data
+
+        df = self._pit_plan(spark, spine).localCheckpoint(eager=True)
+        return prepare_training_data(
+            df, transformations=self.transformation_functions,
+            random=weights, seed=seed, cache=False,
+        )
+
     def train_test_split(
         self,
         spark: SparkSession,
@@ -273,14 +296,8 @@ class FeatureView:
         seed: Optional[int] = None,
         spine: Optional[DataFrame] = None,
     ) -> Tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-        from .operators.training import prepare_training_data
-
-        df = self._pit_plan(spark, spine)
-        td = prepare_training_data(
-            df,
-            transformations=self.transformation_functions,
-            random={"train": 1 - test_size, "test": test_size},
-            seed=seed,
+        td = self._random_splits(
+            spark, spine, {"train": 1 - test_size, "test": test_size}, seed
         )
         x_train, y_train = split_labels(td["train"], self.labels)
         x_test, y_test = split_labels(td["test"], self.labels)
@@ -335,24 +352,16 @@ class FeatureView:
         returns ``x_train, x_val, x_test, y_train, y_val, y_test``.
         Statistics for statistics-bound transformations come from the
         train split only and are shared by all three."""
-        from .operators.training import prepare_training_data
-
         if validation_size + test_size >= 1.0:
             raise ValueError(
                 "validation_size + test_size must be < 1.0, got "
                 f"{validation_size} + {test_size}"
             )
-        df = self._pit_plan(spark, spine)
-        td = prepare_training_data(
-            df,
-            transformations=self.transformation_functions,
-            random={
-                "train": 1 - validation_size - test_size,
-                "validation": validation_size,
-                "test": test_size,
-            },
-            seed=seed,
-        )
+        td = self._random_splits(spark, spine, {
+            "train": 1 - validation_size - test_size,
+            "validation": validation_size,
+            "test": test_size,
+        }, seed)
         x_train, y_train = split_labels(td["train"], self.labels)
         x_val, y_val = split_labels(td["validation"], self.labels)
         x_test, y_test = split_labels(td["test"], self.labels)
@@ -1148,7 +1157,10 @@ class FeatureView:
 
     def transform(self, df: DataFrame, stats=None) -> DataFrame:
         """Apply the view's model-dependent transformations to an
-        arbitrary frame (parity ``feature_view.py`` ``transform``)."""
+        arbitrary frame (parity ``feature_view.py`` ``transform``).
+        Without ``stats``, statistics-bound transformations take their
+        statistics from ``df`` itself; the call is then eager: ``df`` is
+        materialized once and the rows are fixed at call time."""
         from .functions.udf import TransformationFunction, apply_transformations
 
         tfs = [

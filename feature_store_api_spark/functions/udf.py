@@ -424,8 +424,19 @@ def apply_transformations(
     Two phases in the reference's order (vector_server.py:924-978):
     on-demand UDFs whose outputs aren't materialized yet run FIRST, so
     model-dependent UDFs may consume on-demand outputs; each phase is
-    ONE select (parity ``engine/spark.py:1267-1328``)."""
+    ONE select (parity ``engine/spark.py:1267-1328``).
+
+    When the statistics come from ``df`` itself (no ``stats``, no other
+    ``train_df``) and some transformation is statistics-bound, ``df``
+    is materialized ONCE (an eager ``localCheckpoint``, parity
+    ``engine/spark.py:703``) and both the statistics pass and the
+    returned projection read that checkpoint: the upstream (PIT-join)
+    plan runs once instead of once per consumer. The call is then
+    eager and the returned rows are fixed at call time. The checkpoint
+    frees itself when the frame is garbage-collected; streaming frames
+    stay lazy."""
     transformations = list(transformations)
+    same_frame = train_df is None or train_df is df
     # ON_DEMAND UDFs whose outputs are already materialized (ingest-time
     # insert wrote them) are skipped entirely — the serving contract is
     # "compute on demand only when absent" (vector_server.py:924-978);
@@ -445,13 +456,17 @@ def apply_transformations(
     rest = [t for t in transformations if t not in pending_od]
     if pending_od and rest:
         df = _apply_one_phase(df, pending_od, None)
-        if train_df is not None:
+        if not same_frame:
             train_df = _apply_one_phase(train_df, pending_od, None)
         transformations = rest
     if stats is None:
-        stats = transformation_stats_for(
-            transformations, train_df if train_df is not None else df
-        )
+        if same_frame:
+            if not df.isStreaming and any(
+                t.stat_columns() for t in transformations
+            ):
+                df = df.localCheckpoint(eager=True)
+            train_df = df
+        stats = transformation_stats_for(transformations, train_df)
     return _apply_one_phase(df, transformations, stats)
 
 

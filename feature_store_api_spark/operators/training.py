@@ -17,9 +17,12 @@ materialization share one execution of the upstream (PIT-join) plan
 instead of re-running it per consumer — measured ~2× on the training
 bench locally, and the win grows with upstream plan cost. The persist
 spills under memory pressure and is released by
-:meth:`TrainingData.release` (or the context manager); disable with
-``cache=False`` for one-shot single-split reads where the extra
-materialization buys nothing.
+:meth:`TrainingData.release` (or the context manager), as
+``create_training_dataset`` does after its writes. ``cache=False``
+suits a frame that is already materialized — the FeatureView random
+splits pass an eager ``localCheckpoint``, which frees itself when the
+returned splits are garbage-collected — and one-shot single-split
+reads where the extra materialization buys nothing.
 """
 
 from __future__ import annotations

@@ -53,7 +53,12 @@ class PitRead:
     left key names, and becomes one ``point_in_time_join_many`` spec;
     all specs run in ONE call after the plain joins, so groups sharing
     the spine keys fuse into one union + window. A PIT-joined group's
-    event time stays out of the output.
+    event time stays out of the output. Its ``join_type`` applies to
+    the as-of match: ``inner`` keeps the spine rows that have one,
+    ``left_semi`` does too but adds no features, ``left_anti`` keeps
+    the rows without one (a TTL-expired match counts as none; semi and
+    anti apply the side's own filter before the match); ``right``,
+    ``full`` and ``cross`` raise.
 
     ``start_ms``/``end_ms`` (epoch millis) are the EVENT-time window
     the caller re-applies exactly on the plan (``get_batch_data``);
@@ -310,12 +315,19 @@ def _compile_node(
         pending.append((q._filter, colmap))
 
     specs: List[dict] = []
+    matches: List[Tuple[str, str]] = []
     for join in q.joins:
         how = join.join_type
         lkeys, rkeys = _join_keys(q, join)
         rfg = join.query.left_feature_group
         extra, side = tuple(rkeys), None
         if as_of and rfg.event_time:
+            if how in (JoinType.RIGHT, JoinType.FULL, JoinType.CROSS):
+                raise ValueError(
+                    f"A {how!r} join to {rfg.name!r} has no as-of meaning: "
+                    "a group with an event time is as-of joined in a view "
+                    "read; use left, inner, left_semi or left_anti"
+                )
             pre = getattr(rfg, "precombine_key", None)
             extra += (rfg.event_time,) + ((pre,) if pre else ())
             ttl = staleness_delta(getattr(rfg, "max_staleness", None))
@@ -327,6 +339,12 @@ def _compile_node(
             join.query, spark, online, filter_refs,
             extra_keep=extra, skip_filters=skip_filters, window=side,
         )
+        semi = how in (JoinType.LEFT_SEMI, JoinType.LEFT_ANTI)
+        if semi:
+            # right-side filters can't apply post-join (nor, as-of, after
+            # the match); consume them now
+            for logic, scope in rpending:
+                rdf = rdf.where(_scoped_column(logic, scope))
         using = bool(lkeys) and lkeys == rkeys
         absent = [k for k in lkeys if k not in df.columns]
         if absent:
@@ -343,24 +361,32 @@ def _compile_node(
                 *[F.col(r).alias(l) for l, r in zip(lkeys, rkeys)],
                 *[c for c in rdf.columns if c not in lkeys],
             )
-            wanted = set(rsel) | {
+            wanted = set() if semi else set(rsel) | {
                 v for k, v in rcolmap.items() if k in filter_refs
             }
             feats = [
                 c for c in rdf.columns
                 if c in wanted and c not in lkeys and c != rfg.event_time
             ]
+            marker = []
+            if how != JoinType.LEFT:
+                # a non-null constant rides as one more feature: it is
+                # NULL exactly when the spine row has no as-of match (or
+                # a TTL-expired one), which a NULL feature can't tell
+                marker = [f"__pit_match{len(specs)}"]
+                rdf = rdf.withColumn(marker[0], F.lit(True))
+                matches.append((how, (join.prefix or "") + marker[0]))
             specs.append({
                 "df": rdf, "keys": lkeys, "feature_ts": rfg.event_time,
-                "features": feats, "prefix": join.prefix, "precombine": pre,
+                "features": feats + marker, "prefix": join.prefix,
+                "precombine": pre,
                 "max_staleness": getattr(rfg, "max_staleness", None),
             })
+            if semi:
+                continue
             ren = dict(zip(rkeys, lkeys))
             ren.update((c, (join.prefix or "") + c) for c in feats)
-        elif how in (JoinType.LEFT_SEMI, JoinType.LEFT_ANTI):
-            # right-side filters can't apply post-join; consume them now
-            for logic, scope in rpending:
-                rdf = rdf.where(_scoped_column(logic, scope))
+        elif semi:
             rdf = rdf.select(*[F.col(k) for k in rkeys])
             if using:
                 df = df.join(rdf, on=list(rkeys), how=how)
@@ -412,6 +438,11 @@ def _compile_node(
         df = point_in_time_join_many(
             df, specs, spine_ts=fg.event_time, strategy=pit.strategy,
         )
+    # join types of as-of joins; the markers drop out of the final
+    # projection
+    for how, marker in matches:
+        hit = F.col(marker).isNotNull()
+        df = df.where(~hit if how == JoinType.LEFT_ANTI else hit)
     return df, sel, colmap, pending
 
 

@@ -153,6 +153,87 @@ def test_get_batch_data_applies_transformations(spark, pit_fixtures):
     assert "bal" in raw.columns
 
 
+_STATS_CALLERS = {
+    "training_data": lambda fv, spark: fv.training_data(spark),
+    "transform": lambda fv, spark: fv.transform(
+        fv.training_data(spark, apply_transformations=False)),
+    "get_batch_data": lambda fv, spark: fv.get_batch_data(spark),
+}
+
+
+@pytest.mark.parametrize("caller, stats_bound", [
+    *((c, True) for c in sorted(_STATS_CALLERS)), ("training_data", False)])
+def test_statistics_and_rows_share_one_execution(
+    spark, pit_fixtures, caller, stats_bound
+):
+    """Statistics taken from the frame being transformed come from one
+    materialization of it: the returned plan holds no PIT window and
+    forcing it runs one job. Without a statistics-bound transformation
+    the frame stays lazy and keeps its window."""
+    from feature_store_api_spark.functions.builtin_transformations import (
+        min_max_scaler,
+    )
+    from feature_store_api_spark.functions.udf import udf
+
+    @udf(float)
+    def plus_one(bal):
+        return bal + 1.0
+
+    fs, spine, profile = pit_fixtures
+    q = spine.select_all().join(profile.select(["bal"]), on=["cid"])
+    tf = min_max_scaler("bal") if stats_bound else plus_one
+    fv = FeatureView("fv", q, labels=["label"], transformation_functions=[tf])
+    out = _STATS_CALLERS[caller](fv, spark)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    if not stats_bound:
+        assert "Window" in plan
+        return
+    assert "Window" not in plan
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None))
+    rows = out.collect()
+    assert len(tracker.getJobIdsForGroup(None)) - before == 1
+    assert sorted(r["min_max_scaler_bal"] is None for r in rows) == [
+        False, False, True]
+
+
+def test_random_splits_leave_no_cache(spark, pit_fixtures):
+    """``train_test_split`` and ``train_validation_test_split`` leave
+    nothing in the CacheManager, and their splits hold the rows of the
+    same seeded split over a cached PIT frame."""
+    from feature_store_api_spark.functions.builtin_transformations import (
+        min_max_scaler,
+    )
+    from feature_store_api_spark.operators.training import (
+        prepare_training_data,
+    )
+
+    fs, spine, profile = pit_fixtures
+    q = spine.select_all().join(profile.select(["bal"]), on=["cid"])
+    fv = FeatureView("fv", q, labels=["label"],
+                     transformation_functions=[min_max_scaler("bal")])
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    two = fv.train_test_split(spark, test_size=0.5, seed=7)
+    three = fv.train_validation_test_split(
+        spark, validation_size=0.3, test_size=0.3, seed=11)
+    assert cache.isEmpty()
+
+    rows = lambda df: sorted(map(tuple, df.collect()), key=repr)
+    for got, weights, seed in (
+        (two, {"train": 0.5, "test": 0.5}, 7),
+        (three, {"train": 1 - 0.3 - 0.3, "validation": 0.3, "test": 0.3}, 11),
+    ):
+        with prepare_training_data(
+            fv._pit_plan(spark), fv.transformation_functions,
+            random=weights, seed=seed,
+        ) as want:
+            xs = got[:len(weights)]
+            for x, name in zip(xs, weights):
+                assert rows(x) == rows(want[name].drop("label"))
+    assert cache.isEmpty()
+
+
 @pytest.mark.parametrize(
     "scaler", ["min_max_scaler", "standard_scaler", "robust_scaler"]
 )
@@ -477,7 +558,16 @@ def shapes(spark, tmp_path_factory):
     od.insert(spark.createDataFrame(
         [(100 + c, c, c * 1.5) for c in range(1, 6)],
         "oid long, ocust long, total double"))
-    return ev, us, rg, od
+    # ``pf`` HAS an event time, so a view as-of joins it: events 0 and 6
+    # match a value, event 7 matches a NULL value, event 5's match is
+    # older than the 3-day TTL, customers 4 and 5 have no row
+    pf = fs.create_feature_group(
+        "pf", primary_key=["cust"], event_time="ts", max_staleness="3 days")
+    pf.insert(spark.createDataFrame(
+        [(1, ts("2023-12-31"), 1.0), (2, ts("2024-01-05"), 2.0),
+         (3, ts("2024-01-06"), None)],
+        "cust long, ts timestamp, score double"))
+    return ev, us, rg, od, pf
 
 
 _SHAPES = {
@@ -501,7 +591,7 @@ _SHAPES = {
 def test_view_reads_what_query_reads(spark, shapes, shape):
     """One planner: a view over groups joined without an event time
     returns the rows and the columns of its own ``Query.read``."""
-    q = _SHAPES[shape](*shapes)
+    q = _SHAPES[shape](*shapes[:4])
     want = q.read(spark)
     got = FeatureView(f"v_{shape}", q).get_batch_data(spark)
     assert got.columns == want.columns
@@ -509,11 +599,48 @@ def test_view_reads_what_query_reads(spark, shapes, shape):
         map(tuple, want.collect()), key=repr)
 
 
+_AS_OF_MATCHES = {0: 1.0, 6: 2.0, 7: None}
+_AS_OF_EIDS = {
+    "left": set(range(10)),
+    "inner": set(_AS_OF_MATCHES),
+    "left_semi": set(_AS_OF_MATCHES),
+    "left_anti": set(range(10)) - set(_AS_OF_MATCHES),
+}
+
+
+@pytest.mark.parametrize("how", sorted(_AS_OF_EIDS))
+def test_as_of_join_honours_join_type(spark, shapes, how):
+    """An as-of joined group keeps its ``join_type``: ``inner`` keeps
+    the events with a match (a matched NULL value included, a
+    TTL-expired match not), ``left_semi`` the same events without the
+    group's features, ``left_anti`` the others."""
+    ev, pf = shapes[0], shapes[4]
+    fv = FeatureView(f"v_asof_{how}", ev.select_all().join(
+        pf.select(["score"]), on=["cust"], join_type=how))
+    out = fv.get_batch_data(spark)
+    features = ["score"] if how in ("left", "inner") else []
+    assert out.columns == ["eid", "cust", "ts", "amt"] + features
+    rows = {r["eid"]: r for r in out.collect()}
+    assert set(rows) == _AS_OF_EIDS[how]
+    if features:
+        assert {e: r["score"] for e, r in rows.items()} == {
+            e: _AS_OF_MATCHES.get(e) for e in rows}
+
+
+@pytest.mark.parametrize("how", ["cross", "full", "right"])
+def test_as_of_join_rejects_types_without_as_of_meaning(spark, shapes, how):
+    ev, pf = shapes[0], shapes[4]
+    fv = FeatureView(f"v_asof_{how}", ev.select_all().join(
+        pf.select(["score"]), on=["cust"], join_type=how))
+    with pytest.raises(ValueError, match="as-of"):
+        fv.get_batch_data(spark)
+
+
 def test_spine_replaces_left_group_without_event_time(spark, shapes):
     """A passed spine is the root of the read even when the left group
     has no event time: the training frame has exactly the spine's rows
     (spine values included), with the joined features added."""
-    ev, us, rg, od = shapes
+    ev, us, rg, od, pf = shapes
     fv = FeatureView(
         "v_spine", us.select_all().join(rg.select(["region"]), on=["rid"]))
     spine = spark.createDataFrame(
