@@ -216,8 +216,9 @@ def _q_pit_join(spark, sf_dir):
 
 
 def _q_pit_join_skew(spark, sf_dir):
-    """The skew-safe two-stage PIT strategy (time-bucketed running max,
-    operators/pit_join.py:_pit_union_window_skew): output must be
+    """The skew-safe two-stage PIT strategy (the as-of kernel's
+    time-bucketed running max, operators/pit_join.py:
+    _pit_union_window_many with skew=True): output must be
     hash-identical to the plain strategy, so it shares pit_join's
     oracle verbatim. At 100 TB this is the escape hatch for a zipfian
     hot entity that would serialize the plain window's per-key sort."""

@@ -327,30 +327,23 @@ class FeatureGroup(FeatureGroupBase):
                 "insert/commit operations require a managed feature group"
             )
         if self._store is None:
+            from importlib import import_module
+
             from .sources.commit_store import CommitStore
 
-            backend = None
-            if getattr(self, "time_travel_format", "COMMITLOG") == "DELTA":
-                from .sources.delta_backend import DeltaLogBackend
-
-                backend = DeltaLogBackend(self.location)
-            elif getattr(self, "time_travel_format", "COMMITLOG") == "ICEBERG":
-                from .sources.iceberg_backend import IcebergBackend
-
-                backend = IcebergBackend(self.location)
-            elif getattr(self, "time_travel_format", "COMMITLOG") == "HUDI":
-                from .sources.hudi_backend import HudiBackend
-
-                backend = HudiBackend(self.location)
-            elif getattr(
-                self, "time_travel_format", "COMMITLOG"
-            ) == "HUDI_MOR":
-                # MERGE_ON_READ: follow-up commits append log files to
-                # existing file groups instead of new parquet groups —
-                # the reference's streaming-FG default table type
-                from .sources.hudi_backend import HudiMorBackend
-
-                backend = HudiMorBackend(self.location)
+            # HUDI_MOR is MERGE_ON_READ: follow-up commits append log
+            # files to existing file groups instead of new parquet groups
+            # (the reference's streaming-FG default table type)
+            module, cls = {
+                "COMMITLOG": ("backend", "CommitLogBackend"),
+                "DELTA": ("delta_backend", "DeltaLogBackend"),
+                "ICEBERG": ("iceberg_backend", "IcebergBackend"),
+                "HUDI": ("hudi_backend", "HudiBackend"),
+                "HUDI_MOR": ("hudi_backend", "HudiMorBackend"),
+            }[self.time_travel_format]
+            backend = getattr(
+                import_module(f".sources.{module}", __package__), cls
+            )(self.location)
             self._store = CommitStore(
                 self.location,
                 primary_key=self.primary_key,

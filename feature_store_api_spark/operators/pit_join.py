@@ -4,37 +4,39 @@ Parity target: the reference's server-generated ``pit_query`` /
 ``pit_query_asof`` (surfaced at
 ``/root/reference/python/hsfs/constructor/fs_query.py:32-43,77-82``,
 selected at ``constructor/query.py:597-607``): for each left (spine)
-row, pick from the right feature group the latest row with
+row, pick from EACH right feature group the latest row with
 ``right.event_time <= left.event_time``, per primary key, with LEFT
 semantics (no match → NULL features).
 
-Two physical strategies, both pure DataFrame ops:
+One union-window kernel (:func:`_pit_union_window_many`) serves one
+feature group or N groups that share their keys. It tags spine and
+feature rows, unions them, and runs one running
+``max(struct(ts, precombine, payload))`` per feature group over one
+window per key ordered by (event time, side). Cost = ONE hash shuffle
+of (spine + features) on the join key, however many groups ride it —
+no range-join row explosion, and the sort key is just (ts, side): the
+payload rides in the commutative agg buffer, not in every sort record.
+Ties (right.ts == left.ts) are included by sorting feature rows before
+spine rows at equal timestamps; multiple feature rows at the same
+timestamp resolve by the precombine tie-break
+(``core/hudi_engine.py:141-149``), then by the lexicographic max
+payload (total deterministic order).
 
-* ``union_window`` (default, the 100 TB path): tag spine and feature
-  rows, union them, and run one running ``max(struct(ts, precombine,
-  payload))`` window per key ordered by (event time, side). Cost = ONE
-  hash shuffle of (spine + features) on the join key — no range-join
-  row explosion, no matter how many feature rows precede each spine
-  row — and the sort key is just (ts, side): the payload rides in the
-  commutative agg buffer, not in every sort record. Ties
-  (right.ts == left.ts) are included by sorting feature rows before
-  spine rows at equal timestamps; multiple feature rows at the same
-  timestamp resolve by the precombine tie-break
-  (``core/hudi_engine.py:141-149``), then by the lexicographic max
-  payload (total deterministic order).
+The ``strategy`` names pick how the kernel runs its window:
 
-* ``range_join``: left join on ``key AND right.ts <= left.ts`` then
-  ``row_number() == 1`` per spine row ordered by right.ts desc. Quadratic
-  per key in the worst case, but the right side can be broadcast when
-  small — useful when features ≪ spine.
+* ``union_window`` (default): one plain running-max window.
+* ``union_window_skew``: the running max decomposed into time-range
+  buckets — a zipfian hot key spreads across ``skew_buckets``
+  partitions instead of serializing one partition's sort. Output
+  hash-identical to ``union_window``.
+* ``auto``: a two-job skew probe per feature group (freqItems
+  candidates + one scalar verify agg) picks between the two.
 
-* ``union_window_skew``: the union-window's running max decomposed
-  into time-range buckets — a zipfian hot key spreads across
-  ``skew_buckets`` partitions instead of serializing one partition's
-  sort. Output hash-identical to ``union_window``.
-
-* ``auto``: a two-job skew probe (freqItems candidates + one scalar
-  verify agg) picks between ``union_window`` and ``union_window_skew``.
+``range_join`` is the one other algorithm: left join on
+``key AND right.ts <= left.ts`` then ``row_number() == 1`` per spine
+row ordered by right.ts desc. Quadratic per key in the worst case, but
+the right side can be broadcast when small — useful when features ≪
+spine, and the reference the kernel is tested against.
 """
 
 from __future__ import annotations
@@ -146,42 +148,57 @@ def point_in_time_join(
     Both results are memoized per (application, plan, leaf file set)
     (``plan_memo``), so repeated calls over the same files pay them
     once; a frame that lists no files pays them on every call."""
-    max_staleness = validate_max_staleness(max_staleness)
     keys = list(keys)
+    spec = {
+        "df": feature_df, "feature_ts": feature_ts, "features": features,
+        "prefix": prefix, "precombine": precombine,
+        "max_staleness": validate_max_staleness(max_staleness),
+    }
+    if strategy == "range_join":
+        features, out_names = _spec_outputs(spec, keys, set(spine.columns))
+        return _pit_range_join(
+            spine, feature_df, keys, spine_ts, feature_ts, features,
+            out_names, precombine, spec["max_staleness"],
+        )
+    return _pit_union_window_many(
+        spine, [spec], keys, spine_ts,
+        skew=_use_skew(strategy, [feature_df], keys),
+        skew_buckets=skew_buckets,
+    )
+
+
+def _use_skew(strategy: str, feature_dfs, keys) -> bool:
+    """Whether the kernel runs the time-bucketed running max:
+    ``union_window_skew`` always, ``union_window`` never, ``auto`` when
+    the skew probe finds a hot key in any feature group."""
+    if strategy == "auto":
+        return any(_pit_skew_probe(df, keys) for df in feature_dfs)
+    if strategy in ("union_window", "union_window_skew"):
+        return strategy == "union_window_skew"
+    raise ValueError(f"Unknown PIT strategy {strategy!r}")
+
+
+def _spec_outputs(spec: dict, keys, taken: set):
+    """A spec's feature columns (default: every column but the keys and
+    the event time) and their output names. Each name is added to
+    ``taken``; one already there raises."""
+    feature_df, feature_ts = spec["df"], spec["feature_ts"]
+    features = spec.get("features")
     if features is None:
         features = [
             c for c in feature_df.columns if c not in keys and c != feature_ts
         ]
     features = list(features)
+    prefix = spec.get("prefix")
     out_names = [(prefix + f) if prefix else f for f in features]
     for n in out_names:
-        if n in spine.columns:
+        if n in taken:
             raise ValueError(
-                f"PIT output column {n!r} collides with a spine column; use prefix="
+                f"PIT output column {n!r} collides with a spine or "
+                "earlier feature column; use prefix="
             )
-
-    if strategy == "auto":
-        strategy = (
-            "union_window_skew"
-            if _pit_skew_probe(feature_df, keys)
-            else "union_window"
-        )
-    if strategy == "union_window":
-        return _pit_union_window(
-            spine, feature_df, keys, spine_ts, feature_ts, features,
-            out_names, precombine, max_staleness,
-        )
-    if strategy == "union_window_skew":
-        return _pit_union_window_skew(
-            spine, feature_df, keys, spine_ts, feature_ts, features,
-            out_names, precombine, max_staleness, skew_buckets=skew_buckets,
-        )
-    if strategy == "range_join":
-        return _pit_range_join(
-            spine, feature_df, keys, spine_ts, feature_ts, features,
-            out_names, precombine, max_staleness,
-        )
-    raise ValueError(f"Unknown PIT strategy {strategy!r}")
+        taken.add(n)
+    return features, out_names
 
 
 def _staleness_cutoff(ts_col, max_staleness):
@@ -307,116 +324,27 @@ def _pit_recover_map(spine, keys, spine_ts, feature_schemas, feature_ts_types):
     return recover
 
 
-def _pit_build_union(
-    spine, feature_df, keys, spine_ts, feature_ts, features, precombine
-):
-    """The shared union frame both union-window strategies sort: keys +
-    ``__ts`` + ``__side`` (0=feature, 1=spine) + the ``__cand``
-    (ts[, precombine], payload) struct (NULL on spine rows so running
-    maxes skip them) + the NON-recoverable spine payload columns (NULL
-    on feature rows; key/spine_ts columns are recovered from the union
-    itself — see :func:`_pit_recover_map`)."""
-    payload = F.struct(*[F.col(f) for f in features])
-    cand_fields = [F.col(feature_ts).alias("t")]
-    if precombine:
-        cand_fields.append(F.col(precombine).cast("double").alias("p"))
-    cand_fields.append(payload.alias("v"))
-    cand = F.struct(*cand_fields)
-    cand_type = _cand_struct_type(feature_df, feature_ts, features, precombine)
-    recover = _pit_recover_map(
-        spine, keys, spine_ts,
-        [{f.name: f.dataType for f in feature_df.schema.fields}],
-        [feature_df.schema[feature_ts].dataType],
-    )
-    carry = [c for c in spine.columns if c not in recover]
-
-    fg_side = feature_df.select(
-        *[F.col(k) for k in keys],
-        F.col(feature_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        cand.alias("__cand"),
-        *[F.lit(None).cast(spine.schema[c].dataType).alias(f"__s_{c}")
-          for c in carry],
-    )
-    spine_side = spine.select(
-        *[F.col(k) for k in keys],
-        F.col(spine_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.lit(None).cast(cand_type).alias("__cand"),
-        *[F.col(c).alias(f"__s_{c}") for c in carry],
-    )
-    return fg_side.unionByName(spine_side), recover
-
-
-def _pit_project_out(matched, spine, features, out_names, max_staleness,
-                     recover):
-    """Final projection shared by the union-window strategies: restore
-    spine columns (recoverable ones straight from the union columns),
-    unpack the matched payload, apply the TTL null-out."""
-    if max_staleness is not None:
-        # __ts on the surviving (side=1) rows IS the spine timestamp
-        fresh = F.col("__match").getField("t") >= _staleness_cutoff(
-            F.col("__ts"), max_staleness
-        )
-        out_cols = [
-            F.when(fresh, F.col("__match").getField("v").getField(f))
-            .alias(n)
-            for f, n in zip(features, out_names)
-        ]
-    else:
-        out_cols = [
-            F.col("__match").getField("v").getField(f).alias(n)
-            for f, n in zip(features, out_names)
-        ]
-    return matched.select(
-        *[
-            (F.col(recover[c]) if c in recover else F.col(f"__s_{c}"))
-            .alias(c)
-            for c in spine.columns
-        ],
-        *out_cols,
-    )
-
-
-def _pit_union_window(
-    spine, feature_df, keys, spine_ts, feature_ts, features, out_names,
-    precombine, max_staleness=None,
-) -> DataFrame:
-    # feature rows (side=0) sort before spine rows (side=1) at equal ts,
-    # so an exact-tie feature row IS visible to the spine row (<= match).
-    # The match is the running lexicographic MAX of (ts, precombine,
-    # payload) over the expanding frame: latest ts wins, then max
-    # precombine, then max payload — a TOTAL deterministic pick, so
-    # duplicate feature rows can never flip the answer between runs (or
-    # against the SQL oracle). Because max is commutative, tie ORDER
-    # among equal-(ts, side) rows is irrelevant, which keeps the window
-    # SORT KEY at just (ts, side) — the payload rides in the O(1)/row
-    # incremental agg buffer instead of fattening every sort record
-    # (round 2 sorted by the full payload struct: +60% on b4).
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__ts").asc(), F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    unioned, recover = _pit_build_union(
-        spine, feature_df, keys, spine_ts, feature_ts, features, precombine
-    )
-    matched = unioned.withColumn(
-        "__match", F.max(F.col("__cand")).over(w)
-    ).where(F.col("__side") == 1)
-    return _pit_project_out(
-        matched, spine, features, out_names, max_staleness, recover
-    )
-
-
 def _bucketed_running_max(
     unioned: DataFrame, keys, cand_cols: List[str], skew_buckets: int
 ):
-    """Shared two-stage (time-bucket) decomposition of per-key running
-    maxes over a tagged union frame. Returns the side=1 rows with one
+    """Two-stage (time-bucket) decomposition of per-key running maxes
+    over a tagged union frame. Returns the side=1 rows with one
     ``__match_<cand>`` column per entry of ``cand_cols``, or ``None``
     when bucketing is degenerate (empty input / single distinct ts) and
-    the caller should fall back to the plain single window."""
+    the caller should fall back to the plain single window.
+
+    Because max is commutative/associative, a prefix max decomposes
+    exactly: for a row in bucket b,
+
+        match = max( running-max within bucket b up to the row,
+                     max over ALL rows of buckets < b )
+
+    Stage 1 windows partition on (key, ts-bucket) — per-partition work
+    is ~1/skew_buckets of the hot key. Stage 2's carry-in is a window
+    over the per-(key, bucket) maxima — ``skew_buckets`` rows per key —
+    joined back on (key, bucket), an equi-join AQE can further split if
+    one bucket is still hot. Equal timestamps land in the same bucket by
+    construction, so the tie semantics are the plain window's."""
     ts_t = unioned.schema["__ts"].dataType.typeName()
     if ts_t in ("timestamp", "timestamp_ntz"):
         axis = F.unix_micros(F.col("__ts").cast("timestamp"))
@@ -489,72 +417,6 @@ def _bucketed_running_max(
     return matched
 
 
-def _fused_skew_match(unioned, keys, n_cands: int, skew_buckets: int):
-    """Multi-candidate skew decomposition; falls back to the plain
-    fused window on degenerate bucketing."""
-    cand_cols = [f"__cand{i}" for i in range(n_cands)]
-    matched = _bucketed_running_max(unioned, keys, cand_cols, skew_buckets)
-    if matched is None:
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__ts").asc(), F.col("__side").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        matched = unioned
-        for i in range(n_cands):
-            matched = matched.withColumn(
-                f"__match{i}", F.max(F.col(f"__cand{i}")).over(w)
-            )
-        return matched.where(F.col("__side") == 1)
-    for i in range(n_cands):
-        matched = matched.withColumn(f"__match{i}", F.col(f"__match___cand{i}"))
-    return matched
-
-
-def _pit_union_window_skew(
-    spine, feature_df, keys, spine_ts, feature_ts, features, out_names,
-    precombine, max_staleness=None, skew_buckets: int = 32,
-) -> DataFrame:
-    """Skew-safe union-window PIT: a running max decomposed into
-    time-range buckets so ONE hot key spreads over ``skew_buckets``
-    partitions instead of serializing its millions of rows into a
-    single partition's sort (the plain strategy's worst case at 100 TB
-    with zipfian keys — AQE skew-join handles joins, not windows).
-
-    Because max is commutative/associative, a prefix max decomposes
-    exactly: for a row in bucket b,
-
-        match = max( running-max within bucket b up to the row,
-                     max over ALL rows of buckets < b )
-
-    Stage 1 windows partition on (key, ts-bucket) — per-partition work
-    is ~1/skew_buckets of the hot key. Stage 2's carry-in is a window
-    over the per-(key, bucket) maxima — ``skew_buckets`` rows per key,
-    trivially small — joined back on (key, bucket), an equi-join AQE
-    can further split if one bucket is still hot. Bucket bounds come
-    from one min/max agg over the union (a columnar scan Spark answers
-    from statistics where available). Output is hash-identical to the
-    plain strategy: same total (ts, precombine, payload) max, same tie
-    semantics (equal timestamps land in the same bucket by
-    construction)."""
-    unioned, recover = _pit_build_union(
-        spine, feature_df, keys, spine_ts, feature_ts, features, precombine
-    )
-    matched = _bucketed_running_max(unioned, keys, ["__cand"], skew_buckets)
-    if matched is None:
-        # empty input or a single distinct timestamp: bucketing is
-        # degenerate (everything lands in bucket 0) — the plain
-        # single-window path is both correct and cheaper
-        return _pit_union_window(
-            spine, feature_df, keys, spine_ts, feature_ts, features,
-            out_names, precombine, max_staleness,
-        )
-    matched = matched.withColumn("__match", F.col("__match___cand"))
-    return _pit_project_out(
-        matched, spine, features, out_names, max_staleness, recover
-    )
-
-
 def _pit_range_join(
     spine, feature_df, keys, spine_ts, feature_ts, features, out_names,
     precombine, max_staleness=None,
@@ -616,133 +478,125 @@ def point_in_time_join_many(
 
     ``rights`` entries: dicts with ``df``, ``feature_ts``, optional
     ``keys`` (default ``spine_keys_default``), ``features``, ``prefix``,
-    ``precombine``. Mirrors the multi-FG PIT query of a FeatureView
-    (``constructor/fs_query.py:32-43``).
+    ``precombine``, ``max_staleness``. Mirrors the multi-FG PIT query of
+    a FeatureView (``constructor/fs_query.py:32-43``).
 
     When every feature group joins on the SAME keys (the common
-    FeatureView shape) and no per-spec strategy override is given, all
-    of them fuse into ONE union + ONE window carrying a running max per
-    feature group — a single hash shuffle of (spine + all features)
-    instead of one shuffle per feature group. N-FG PIT at 100 TB is
-    then exactly as many shuffles as 1-FG PIT. Mixed keys or explicit
-    strategies fall back to the sequential per-FG joins.
+    FeatureView shape, one group included), all of them fuse into ONE
+    union + ONE window carrying a running max per feature group — a
+    single hash shuffle of (spine + all features) instead of one shuffle
+    per feature group. N-FG PIT at 100 TB is then exactly as many
+    shuffles as 1-FG PIT. ``auto`` probes every group once and runs the
+    fused window bucketed if any of them is skewed. Mixed key sets join
+    one group at a time; so does ``range_join``, which has no fused
+    form.
     """
-    if (
-        strategy in ("union_window", "union_window_skew")
-        and len(rights) > 1
-        and all("strategy" not in spec for spec in rights)
-    ):
-        key_sets = {
-            tuple(spec.get("keys") or list(spine_keys_default or []))
-            for spec in rights
-        }
-        if len(key_sets) == 1:
-            return _pit_union_window_many(
-                spine, rights, list(key_sets.pop()), spine_ts,
-                skew=(strategy == "union_window_skew"),
-            )
+    def keys_of(spec):
+        return list(spec.get("keys") or spine_keys_default or [])
+
+    key_sets = {tuple(keys_of(s)) for s in rights}
+    if strategy != "range_join" and len(key_sets) == 1:
+        keys = keys_of(rights[0])
+        return _pit_union_window_many(
+            spine, rights, keys, spine_ts,
+            skew=_use_skew(strategy, [s["df"] for s in rights], keys),
+        )
     out = spine
     for spec in rights:
         out = point_in_time_join(
             out,
             spec["df"],
-            keys=spec.get("keys") or list(spine_keys_default or []),
+            keys=keys_of(spec),
             spine_ts=spine_ts,
             feature_ts=spec["feature_ts"],
             features=spec.get("features"),
             prefix=spec.get("prefix"),
             precombine=spec.get("precombine"),
-            strategy=spec.get("strategy", strategy),
+            strategy=strategy,
             max_staleness=spec.get("max_staleness"),
         )
     return out
 
 
 def _pit_union_window_many(
-    spine: DataFrame, rights: List[dict], keys: List[str], spine_ts: str,
+    spine: DataFrame, specs: List[dict], keys: List[str], spine_ts: str,
     skew: bool = False, skew_buckets: int = 32,
 ) -> DataFrame:
-    """Fused multi-FG union-window PIT: one (ts, pre, payload) candidate
-    struct COLUMN per feature group, all riding the same union and the
-    same window sort — the running max of each resolves independently
-    with the identical total tie order as the single-FG path.
+    """The union-window as-of kernel for N >= 1 feature groups joined on
+    the same ``keys`` (``specs`` entries as in
+    :func:`point_in_time_join_many`).
 
-    ``skew=True``: the same time-range-bucket decomposition as the
-    single-FG ``union_window_skew``, generalized to N candidate
-    columns — N feature groups against a zipfian spine still cost ONE
-    (bucketed) shuffle instead of N sequential skew-safe joins."""
-    specs = []
+    Each feature group becomes one (ts[, precombine], payload) candidate
+    struct COLUMN, NULL on every other side's rows; all of them ride one
+    union (feature sides first, the spine last) and one window sort, and
+    the running max of each resolves independently. Feature rows
+    (side=0) sort before spine rows (side=1) at equal ts, so an
+    exact-tie feature row IS visible to the spine row (<= match). The
+    match is the running lexicographic MAX of (ts, precombine, payload)
+    over the expanding frame: latest ts wins, then max precombine, then
+    max payload — a TOTAL deterministic pick, so duplicate feature rows
+    can never flip the answer between runs (or against the SQL oracle).
+    Because max is commutative, tie ORDER among equal-(ts, side) rows is
+    irrelevant, which keeps the window SORT KEY at just (ts, side) — the
+    payload rides in the O(1)/row incremental agg buffer instead of
+    fattening every sort record (round 2 sorted by the full payload
+    struct: +60% on b4).
+
+    ``skew=True``: the running maxes decompose into time-range buckets
+    (:func:`_bucketed_running_max`) so ONE hot key spreads over
+    ``skew_buckets`` partitions instead of serializing its millions of
+    rows into a single partition's sort (the plain window's worst case
+    at 100 TB with zipfian keys — AQE skew-join handles joins, not
+    windows). Output is hash-identical to the plain window; on empty
+    input or a single distinct timestamp the bucketing is degenerate and
+    the plain window runs instead.
+
+    Each group's ``max_staleness`` nulls its features when the match is
+    older than the spine timestamp minus that TTL."""
     taken = set(spine.columns)
-    for i, spec in enumerate(rights):
-        feature_df = spec["df"]
-        feature_ts = spec["feature_ts"]
-        features = spec.get("features")
-        if features is None:
-            features = [
-                c for c in feature_df.columns
-                if c not in keys and c != feature_ts
-            ]
-        features = list(features)
-        prefix = spec.get("prefix")
-        out_names = [(prefix + f) if prefix else f for f in features]
-        for n in out_names:
-            if n in taken:
-                raise ValueError(
-                    f"PIT output column {n!r} collides with a spine or "
-                    "earlier feature column; use prefix="
-                )
-            taken.add(n)
-        specs.append(
+    groups = []
+    for spec in specs:
+        features, out_names = _spec_outputs(spec, keys, taken)
+        groups.append(
             {
-                "df": feature_df,
-                "ts": feature_ts,
+                "df": spec["df"],
+                "ts": spec["feature_ts"],
                 "features": features,
                 "out_names": out_names,
                 "pre": spec.get("precombine"),
                 "ttl": validate_max_staleness(spec.get("max_staleness")),
             }
         )
-
     recover = _pit_recover_map(
         spine, keys, spine_ts,
-        [{f.name: f.dataType for f in s["df"].schema.fields} for s in specs],
-        [s["df"].schema[s["ts"]].dataType for s in specs],
+        [{f.name: f.dataType for f in g["df"].schema.fields} for g in groups],
+        [g["df"].schema[g["ts"]].dataType for g in groups],
     )
     carry = [c for c in spine.columns if c not in recover]
+    cands = [f"__cand{i}" for i in range(len(groups))]
+    cand_types = [
+        _cand_struct_type(g["df"], g["ts"], g["features"], g["pre"])
+        for g in groups
+    ]
 
     sides = []
-    cand_types = {}
-    for i, s in enumerate(specs):
-        cand_fields = [F.col(s["ts"]).alias("t")]
-        if s["pre"]:
-            cand_fields.append(F.col(s["pre"]).cast("double").alias("p"))
+    for i, g in enumerate(groups):
+        cand_fields = [F.col(g["ts"]).alias("t")]
+        if g["pre"]:
+            cand_fields.append(F.col(g["pre"]).cast("double").alias("p"))
         cand_fields.append(
-            F.struct(*[F.col(f) for f in s["features"]]).alias("v")
+            F.struct(*[F.col(f) for f in g["features"]]).alias("v")
         )
-        cand = F.struct(*cand_fields)
-        side = s["df"].select(
-            *[F.col(k) for k in keys],
-            F.col(s["ts"]).alias("__ts"),
-            F.lit(0).alias("__side"),
-            cand.alias(f"__cand{i}"),
-        )
-        cand_types[i] = _cand_struct_type(
-            s["df"], s["ts"], s["features"], s["pre"]
-        )
-        sides.append((i, side))
-
-    fg_sides = []
-    for i, side in sides:
-        fg_sides.append(
-            side.select(
+        sides.append(
+            g["df"].select(
                 *[F.col(k) for k in keys],
-                "__ts",
-                "__side",
+                F.col(g["ts"]).alias("__ts"),
+                F.lit(0).alias("__side"),
                 *[
-                    F.col(f"__cand{j}")
+                    F.struct(*cand_fields).alias(c)
                     if j == i
-                    else F.lit(None).cast(cand_types[j]).alias(f"__cand{j}")
-                    for j in range(len(specs))
+                    else F.lit(None).cast(t).alias(c)
+                    for j, (c, t) in enumerate(zip(cands, cand_types))
                 ],
                 *[
                     F.lit(None).cast(spine.schema[c].dataType).alias(f"__s_{c}")
@@ -750,41 +604,41 @@ def _pit_union_window_many(
                 ],
             )
         )
-    spine_side = spine.select(
-        *[F.col(k) for k in keys],
-        F.col(spine_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        *[
-            F.lit(None).cast(cand_types[j]).alias(f"__cand{j}")
-            for j in range(len(specs))
-        ],
-        *[F.col(c).alias(f"__s_{c}") for c in carry],
+    sides.append(
+        spine.select(
+            *[F.col(k) for k in keys],
+            F.col(spine_ts).alias("__ts"),
+            F.lit(1).alias("__side"),
+            *[F.lit(None).cast(t).alias(c) for c, t in zip(cands, cand_types)],
+            *[F.col(c).alias(f"__s_{c}") for c in carry],
+        )
     )
+    unioned = sides[0]
+    for side in sides[1:]:
+        unioned = unioned.unionByName(side)
 
-    unioned = spine_side
-    for fg in fg_sides:
-        unioned = unioned.unionByName(fg)
-    if skew:
-        matched = _fused_skew_match(unioned, keys, len(specs), skew_buckets)
-    else:
+    matched = (
+        _bucketed_running_max(unioned, keys, cands, skew_buckets)
+        if skew else None
+    )
+    if matched is None:
         w = (
             Window.partitionBy(*keys)
             .orderBy(F.col("__ts").asc(), F.col("__side").asc())
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         matched = unioned
-        for i in range(len(specs)):
-            matched = matched.withColumn(
-                f"__match{i}", F.max(F.col(f"__cand{i}")).over(w)
-            )
+        for c in cands:
+            matched = matched.withColumn(f"__match_{c}", F.max(c).over(w))
         matched = matched.where(F.col("__side") == 1)
 
-    def _field(i, s, f):
-        v = F.col(f"__match{i}").getField("v").getField(f)
-        if s["ttl"] is None:
+    def field(c, g, f):
+        v = F.col(f"__match_{c}").getField("v").getField(f)
+        if g["ttl"] is None:
             return v
-        fresh = F.col(f"__match{i}").getField("t") >= _staleness_cutoff(
-            F.col("__ts"), s["ttl"]
+        # __ts on the surviving (side=1) rows IS the spine timestamp
+        fresh = F.col(f"__match_{c}").getField("t") >= _staleness_cutoff(
+            F.col("__ts"), g["ttl"]
         )
         return F.when(fresh, v)
 
@@ -795,8 +649,8 @@ def _pit_union_window_many(
             for c in spine.columns
         ],
         *[
-            _field(i, s, f).alias(n)
-            for i, s in enumerate(specs)
-            for f, n in zip(s["features"], s["out_names"])
+            field(c, g, f).alias(n)
+            for c, g in zip(cands, groups)
+            for f, n in zip(g["features"], g["out_names"])
         ],
     )

@@ -397,18 +397,7 @@ class CommitStore:
     def _data_df(
         self, spark: SparkSession, filters=None
     ) -> Optional[DataFrame]:
-        if filters is not None:
-            import inspect
-
-            try:
-                accepts = "filters" in inspect.signature(
-                    self.backend.scan
-                ).parameters
-            except (TypeError, ValueError):
-                accepts = False
-            if accepts:
-                return self.backend.scan(spark, filters=filters)
-        return self.backend.scan(spark)
+        return self.backend.scan(spark, filters=filters)
 
     def snapshot_or_none(self, spark, start_commit=None, end_commit=None):
         try:

@@ -446,9 +446,9 @@ def test_backend_seam_custom_backend_drop_in(spark, tmp_path):
             calls.append(("append", tuple(partition_cols)))
             return super().append_commit(df, partition_cols)
 
-        def scan(self, spark):
+        def scan(self, spark, filters=None):
             calls.append(("scan",))
-            return super().scan(spark)
+            return super().scan(spark, filters=filters)
 
         def drop_commit(self, commit_time):
             calls.append(("drop", commit_time))

@@ -16,9 +16,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_fused_multi_fg_pit_has_one_exchange(spark, sf_dir):
-    """N feature groups over shared keys = ONE hash exchange total."""
-    from feature_store_api_spark.operators.pit_join import point_in_time_join_many
+@pytest.mark.parametrize("strategy", ["union_window", "auto"])
+def test_fused_multi_fg_pit_has_one_exchange(spark, sf_dir, strategy):
+    """N feature groups over shared keys = ONE hash exchange total.
+    ``auto`` probes each group and fuses too: it has the exchanges of
+    the fused strategy its probe picked and the rows of the plain one."""
+    from feature_store_api_spark.operators.pit_join import (
+        _pit_skew_probe,
+        point_in_time_join_many,
+    )
 
     ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
@@ -28,20 +34,35 @@ def test_fused_multi_fg_pit_has_one_exchange(spark, sf_dir):
         F.col("o_custkey").alias("ck"), "o_orderdate",
         F.col("o_totalprice").alias("p2"),
     )
-    out = point_in_time_join_many(
-        spine,
-        [
-            {"df": f1, "feature_ts": "o_orderdate", "features": ["o_totalprice"], "prefix": "a_"},
-            {"df": f2, "feature_ts": "o_orderdate", "features": ["p2"], "prefix": "b_"},
-        ],
-        spine_keys_default=["ck"],
-        spine_ts="ts",
-    )
+
+    def pit(strategy):
+        return point_in_time_join_many(
+            spine,
+            [
+                {"df": f1, "feature_ts": "o_orderdate", "features": ["o_totalprice"], "prefix": "a_"},
+                {"df": f2, "feature_ts": "o_orderdate", "features": ["p2"], "prefix": "b_"},
+            ],
+            spine_keys_default=["ck"],
+            spine_ts="ts",
+            strategy=strategy,
+        )
+
+    out = pit(strategy)
     plan = _plan(out)
     # AQE wraps the plan; count the shuffle exchanges it declares
     n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, plan[:2000]
-    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
+    picked = strategy
+    if strategy == "auto":
+        skewed = any(_pit_skew_probe(f, ["ck"]) for f in (f1, f2))
+        picked = "union_window_skew" if skewed else "union_window"
+        rows = lambda df: sorted(map(tuple, df.collect()), key=lambda r: r[0])
+        assert rows(out) == rows(pit("union_window"))
+    assert n_exchanges == _plan(pit(picked)).count(
+        "Exchange hashpartitioning"
+    ), plan[:2000]
+    if picked == "union_window":
+        assert n_exchanges == 1, plan[:2000]
+        assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
 
 def test_single_fg_pit_sort_key_excludes_payload(spark, sf_dir):
@@ -507,3 +528,17 @@ def test_query_compiler_is_the_only_planner():
         if path != home and call.search(path.read_text())
     ]
     assert offenders == []
+
+
+def test_pit_join_has_one_union_window_kernel():
+    """The as-of join's union-window algorithm lives in one kernel
+    (``_pit_union_window_many``, one feature group or N): its union is
+    the module's only ``unionByName`` call. A second call is a second
+    union build with its own window, skew fallback and TTL projection."""
+    import pathlib
+
+    import feature_store_api_spark
+
+    root = pathlib.Path(feature_store_api_spark.__file__).parent
+    source = (root / "operators" / "pit_join.py").read_text()
+    assert source.count(".unionByName(") == 1
