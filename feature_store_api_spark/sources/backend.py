@@ -25,13 +25,13 @@ TimeTravelBackend    Delta Lake                    Hudi
 ``log_lock``
 ===================  ============================  =========================
 
-A Delta/Hudi backend would let the FORMAT resolve row versions at scan
-time (its log already orders file groups), returning an
-already-merged frame; :class:`CommitStore` detects that via
-``self_merging`` and skips its own window dedupe. The default
-:class:`CommitLogBackend` is not self-merging: it appends raw commit
-partitions and lets the store merge at read — the Hudi-MOR-like
-design documented in :mod:`.commit_store`.
+Visibility rule: a commit is visible exactly when the store's log
+holds its entry, and the store appends that entry only after
+``append_commit`` has landed the data. ``scan`` returns raw rows of
+every commit the backend holds, logged or not; the store filters the
+scan to the logged commits of the read's window and resolves row
+versions itself (merge-on-read, the Hudi-MOR-like design documented
+in :mod:`.commit_store`).
 """
 
 from __future__ import annotations
@@ -51,10 +51,6 @@ _DATA = "data"
 
 class TimeTravelBackend:
     """Contract for the commit store's physical I/O (see module doc)."""
-
-    #: True when the format merges row versions itself at scan time
-    #: (Delta/Hudi snapshot reads); the store then skips window dedupe.
-    self_merging = False
 
     def append_commit(self, df: DataFrame, partition_cols: Sequence[str]) -> None:
         """Persist one commit's rows (the frame already carries the
@@ -110,8 +106,6 @@ class CommitLogBackend(TimeTravelBackend):
       stale-holder reclaim (the reference offloads this to Hudi/Delta's
       transaction log).
     """
-
-    self_merging = False
 
     def __init__(self, location: str) -> None:
         self.location = location

@@ -12,6 +12,12 @@ Hudi-MOR-like:
   ``data/_commit_time=<epoch_ms>/`` (plus user partition keys), so the
   commit id is a real partition column and time-travel reads become
   **partition pruning** — `.explain` shows the pruned scan.
+* a commit is visible exactly when its log entry exists (Delta Lake's
+  "the log is the table"): ``write`` lands the rows through the backend
+  first and appends the log entry after, and every read scans exactly
+  the logged commits of its window (:meth:`CommitStore._window`) — rows
+  of a write that crashed before its log entry, or is still in flight,
+  are never served.
 * row identity = ``primary_key + event_time`` (the Hudi record key,
   ``core/hudi_engine.py:126-140``); a snapshot is the latest version of
   each identity (window dedupe), with the precombine key as tie-break
@@ -137,11 +143,21 @@ class CommitStore:
         return sorted(self._read_log(), key=lambda c: -c["commit_time"])
 
     def _next_commit_time(self) -> int:
-        now = int(time.time() * 1000)
-        log = self._read_log()
-        if log and log[-1]["commit_time"] >= now:
-            now = log[-1]["commit_time"] + 1
-        return now
+        """Reserve a commit time under the log lock: later than every
+        logged commit and every earlier reservation (a high-water mark
+        kept next to the log), so two writers in flight never share a
+        ``_commit_time`` partition."""
+        mark = os.path.join(self.location, "_commit_time.hwm")
+        with self._log_lock():
+            taken = [c["commit_time"] for c in self._read_log()]
+            if os.path.exists(mark):
+                with open(mark) as fh:
+                    taken.append(int(fh.read()))
+            ct = max([int(time.time() * 1000)] + [t + 1 for t in taken])
+            with open(mark + ".tmp", "w") as fh:
+                fh.write(str(ct))
+            os.replace(mark + ".tmp", mark)
+        return ct
 
     # -- write path --------------------------------------------------------
     def has_stream_batch(self, batch_key: str, *legacy_keys) -> bool:
@@ -248,85 +264,45 @@ class CommitStore:
             self.compact(spark)
         return commit
 
-    def _commits_in_window(
-        self, start_commit: Optional[int], end_commit: Optional[int]
-    ) -> int:
-        """Number of commit partitions a snapshot/incremental read will
-        merge — mirrors :meth:`snapshot`'s pruning. Each commit holds at
-        most one row per record key, so this is a hard upper bound on
-        rows-per-key entering the latest-per-key resolve, computable
-        driver-side from the log alone."""
-        log = self._read_log()
-        if start_commit is None:
-            bases = [
-                c["commit_time"]
-                for c in log
-                if c.get("base")
+    @staticmethod
+    def _window(
+        log: List[Dict],
+        start_commit: Optional[int],
+        end_commit: Optional[int],
+    ) -> List[Dict]:
+        """The live logged commits a read merges, oldest first — the one
+        place the merge window is worked out. A commit with no log entry
+        is never in it, so its rows are never read.
+
+        A snapshot (no ``start_commit``) starts at the newest base at or
+        before ``end_commit``: everything older is folded into it. An
+        incremental pull takes the commits in ``(start, end]`` except
+        COMPACTION bases — rewrites, not changes; including one would
+        report the whole table as changed. An OVERWRITE base stays: its
+        rows ARE new data (Hudi's insert_overwrite shows in incremental
+        reads). Vacuumed commits have no files and never widen it."""
+        live = sorted(
+            (
+                c for c in log
+                if not c.get("vacuumed")
                 and (end_commit is None or c["commit_time"] <= end_commit)
-            ]
-            lo = max(bases) if bases else None
-            return sum(
-                1
-                for c in log
-                if (lo is None or c["commit_time"] >= lo)
-                and (end_commit is None or c["commit_time"] <= end_commit)
-            )
-        return sum(
-            1
-            for c in log
-            if not c.get("base")
-            and c["commit_time"] > start_commit
-            and (end_commit is None or c["commit_time"] <= end_commit)
-        )
-
-    def _lone_compaction_base(
-        self, end_commit: Optional[int], log: Optional[List[Dict]] = None
-    ) -> bool:
-        """True iff a snapshot read bounded by ``end_commit`` merges
-        exactly ONE commit and that commit is a COMPACTION base.
-
-        A compaction base is engine-written from :meth:`snapshot`'s own
-        ``latest_per_key`` output, so it holds at most one row per
-        record key BY CONSTRUCTION — the read-side resolve would
-        shuffle the whole table to keep every row. (An OVERWRITE base
-        is user data and carries no such guarantee: a batch with
-        duplicate record keys relies on the read window to pick one.)
-        Vacuumed commits have no files, so they never widen the
-        window."""
-        base_ct, tail = self._compaction_window_shape(end_commit, log)
-        return base_ct is not None and not tail
-
-    def _compaction_window_shape(
-        self, end_commit: Optional[int], log: Optional[List[Dict]] = None
-    ) -> "tuple[Optional[int], List[Dict]]":
-        """Shape of the snapshot merge window bounded by ``end_commit``:
-        ``(base_commit_time, tail_commits)`` when the window's oldest
-        commit is a COMPACTION base, else ``(None, [])``.
-
-        Mirrors :meth:`snapshot`'s pruning (window starts at the newest
-        live base ≤ end); the base qualifies only when it is a
-        compaction (engine-written ``latest_per_key`` output — unique
-        per record key by construction; an OVERWRITE base is user data
-        with no such guarantee). ``tail_commits`` are the live log
-        entries after the base, oldest first."""
-        if log is None:
-            log = self._read_log()
-        live = [
-            c for c in log
-            if not c.get("vacuumed")
-            and (end_commit is None or c["commit_time"] <= end_commit)
-        ]
-        bases = [c for c in live if c.get("base")]
-        if not bases:
-            return None, []
-        newest = max(bases, key=lambda c: c["commit_time"])
-        if newest.get("operation") != "compaction":
-            return None, []
-        tail = sorted(
-            (c for c in live if c["commit_time"] > newest["commit_time"]),
+            ),
             key=lambda c: c["commit_time"],
         )
-        return newest["commit_time"], tail
+        if start_commit is not None:
+            return [
+                c for c in live
+                if c["commit_time"] > start_commit
+                and c.get("operation") != "compaction"
+            ]
+        bases = [i for i, c in enumerate(live) if c.get("base")]
+        return live[bases[-1]:] if bases else live
+
+    def _commits_since_base(self) -> int:
+        """Delta commits on top of the newest base — the merge-on-read
+        tail length a snapshot read has to window over."""
+        window = self._window(self._read_log(), None, None)
+        return len(window) - (1 if window and window[0].get("base") else 0)
 
     # broadcast gate for the base-plus-small-tail merge: ~2M keys at
     # ~(8-50) B/key builds a 16-100 MB broadcast relation — comfortably
@@ -363,14 +339,15 @@ class CommitStore:
         order: List[str],
         tail_len: int,
     ) -> DataFrame:
-        """Merge-on-read split of a snapshot frame already bounded to
-        ``[base_ct, end]``: base rows not superseded by any tail row
-        (broadcast null-safe anti join on the record key) unioned with
-        the tail's own latest-per-key survivors. Exactly equivalent to
-        the resolve over base ∪ tail: every tail commit time is newer
-        than the base's, so a key present in the tail always shadows
-        its base row regardless of precombine, and keys only in the
-        base keep their single (base-unique) row."""
+        """Merge-on-read split of a snapshot frame already filtered to
+        its window (a compaction base plus its tail): base rows not
+        superseded by any tail row (broadcast null-safe anti join on the
+        record key) unioned with the tail's own latest-per-key
+        survivors. Exactly equivalent to the resolve over base ∪ tail:
+        every tail commit time is newer than the base's, so a key
+        present in the tail always shadows its base row regardless of
+        precombine, and keys only in the base keep their single
+        (base-unique) row."""
         base = df.where(F.col(COMMIT_COL) == base_ct).alias("__base")
         delta = df.where(F.col(COMMIT_COL) > base_ct)
         delta_keys = F.broadcast(delta.select(*key).alias("__tail"))
@@ -383,22 +360,7 @@ class CommitStore:
         resolved = latest_per_key(delta, key, order_by=order, strategy=strategy)
         return survivors.unionByName(resolved)
 
-    def _commits_since_base(self) -> int:
-        """Delta commits on top of the newest compaction base — the
-        merge-on-read tail length a snapshot read has to window over."""
-        n = 0
-        for c in reversed(self._read_log()):
-            if c.get("base"):
-                break
-            n += 1
-        return n
-
     # -- read path ---------------------------------------------------------
-    def _data_df(
-        self, spark: SparkSession, filters=None
-    ) -> Optional[DataFrame]:
-        return self.backend.scan(spark, filters=filters)
-
     def snapshot_or_none(self, spark, start_commit=None, end_commit=None):
         try:
             return self.snapshot(spark, start_commit, end_commit)
@@ -435,7 +397,7 @@ class CommitStore:
                 )
             except ValueError:
                 tree = None  # unknown op in the hint: skip pushdown
-        df = self._data_df(spark, tree)
+        df = self.backend.scan(spark, filters=tree)
         if df is None:
             raise FileNotFoundError(f"No data written to {self.location}")
         log = self._read_log()
@@ -482,68 +444,43 @@ class CommitStore:
                     f"{vmax})"
                 )
 
-        # start from the newest compaction base ≤ end (skip merged history)
-        if start_commit is None:
-            bases = [
-                c["commit_time"]
-                for c in log
-                if c.get("base")
-                and not c.get("vacuumed")
-                and (end_commit is None or c["commit_time"] <= end_commit)
-            ]
-            if bases:
-                df = df.where(F.col(COMMIT_COL) >= max(bases))
-        else:
-            # incremental pull: COMPACTION bases are rewrites, not
-            # changes — including one would report the whole table as
-            # changed. Delta partitions survive compaction, so excluding
-            # them leaves exactly the real changes (partition-prunable
-            # NOT IN). An OVERWRITE base is different: its rows ARE new
-            # data (Hudi's insert_overwrite shows in incremental reads),
-            # so it stays in the window.
-            base_times = [
-                c["commit_time"] for c in log
-                if c.get("base") and c.get("operation") == "compaction"
-            ]
-            if base_times:
-                df = df.where(~F.col(COMMIT_COL).isin(base_times))
-
-        if end_commit is not None:
-            df = df.where(F.col(COMMIT_COL) <= F.lit(int(end_commit)))
-        if start_commit is not None:
-            df = df.where(F.col(COMMIT_COL) > F.lit(int(start_commit)))
+        # the log is the table: scan exactly the window's logged commits
+        window = self._window(log, start_commit, end_commit)
+        df = df.where(
+            F.col(COMMIT_COL).isin([c["commit_time"] for c in window])
+        )
 
         key = [k for k in self.record_key if k in df.columns]
         if key:
             order = [COMMIT_COL] + ([self.precombine_key] if self.precombine_key else [])
             # One commit holds at most one row per record key (upsert
             # grain), so ordering by commit time is total — and rows per
-            # key in this read are bounded by the number of commits in
-            # the merge window, known driver-side from the log. With a
-            # short tail (auto-compaction keeps it ≤ auto_compact_every)
-            # a window sort partition holds ≤ tail_len rows per key —
-            # no hot-key risk BY CONSTRUCTION, and the window plan skips
+            # key in this read are bounded by len(window), known
+            # driver-side from the log. With a short tail
+            # (auto-compaction keeps it ≤ auto_compact_every) a window
+            # sort partition holds that few rows per key — no hot-key
+            # risk BY CONSTRUCTION, and the window plan skips
             # the agg path's per-row struct buffers (~70% of b3's cost
             # at benign skew). Only an unbounded tail (auto-compaction
             # off, hundreds of commits) falls back to the skew-immune
-            # map-side max_by.
-            base_ct, tail_commits = (
-                self._compaction_window_shape(end_commit, log)
-                if start_commit is None
-                else (None, [])
+            # map-side max_by. A compaction base is engine-written
+            # latest_per_key output, unique per record key BY
+            # CONSTRUCTION (an OVERWRITE base is user data with no such
+            # guarantee).
+            compacted = (
+                bool(window) and window[0].get("operation") == "compaction"
             )
-            if base_ct is not None and not tail_commits:
-                # merge window == exactly one compaction base: rows are
-                # already unique per record key (the base is a
-                # latest_per_key output), so the resolve below would
-                # shuffle the ENTIRE table to keep every row. Skip it —
-                # the post-maintenance steady state at warehouse scale
-                # reads base files with zero exchanges (guide §2.4:
-                # removing a distinct over already-unique data). The
-                # delete filter below stays (vacuously true here: a
-                # base never carries delete rows).
+            tail = window[1:]
+            if compacted and not tail:
+                # merge window == exactly one compaction base: the
+                # resolve would shuffle the ENTIRE table to keep every
+                # row. Skip it — the post-maintenance steady state at
+                # warehouse scale reads base files with zero exchanges
+                # (guide §2.4: removing a distinct over already-unique
+                # data). The delete filter below stays (vacuously true
+                # here: a base never carries delete rows).
                 pass
-            elif base_ct is not None and self._tail_rows_small(tail_commits):
+            elif compacted and self._tail_rows_small(tail):
                 # compaction base + SMALL delta tail: the classic
                 # merge-on-read split. The base streams through a
                 # broadcast ANTI join against the tail's record keys
@@ -554,11 +491,10 @@ class CommitStore:
                 # would shuffle the whole table to apply a tail that is
                 # orders of magnitude smaller.
                 df = self._merge_base_with_tail(
-                    df, base_ct, key, order, len(tail_commits)
+                    df, window[0]["commit_time"], key, order, len(tail)
                 )
             else:
-                tail = self._commits_in_window(start_commit, end_commit)
-                strategy = "window" if tail <= 64 else "agg"
+                strategy = "window" if len(window) <= 64 else "agg"
                 df = latest_per_key(df, key, order_by=order, strategy=strategy)
         df = df.where(F.col(OP_COL) != "delete")
         return df.drop(COMMIT_COL, OP_COL)

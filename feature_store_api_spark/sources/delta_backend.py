@@ -25,7 +25,7 @@ client (delta-spark, DuckDB ``delta_scan``, delta-rs) can read:
 * the store's OWN commit metadata (counts, extra, retention) stays in
   its ``_commits.json`` sidecar, which Delta clients ignore.
 
-The store remains merge-on-read (``self_merging = False``): an
+The store remains merge-on-read: an
 external Delta reader sees the RAW commit rows including
 ``_commit_time``/``_op`` — the documented log-view contract (like
 Hudi's MOR read-optimized vs log view) — while the store's snapshot
@@ -138,8 +138,6 @@ class DeltaLogBackend(CommitLogBackend):
 
     Inherits the JSON sidecar + lockfile for the STORE's logical log;
     data/scan/vacuum speak the Delta protocol."""
-
-    self_merging = False
 
     def __init__(self, location: str) -> None:
         super().__init__(location)

@@ -64,8 +64,6 @@ class HudiBackend(CommitLogBackend):
     #: overrides to MERGE_ON_READ
     table_type = "COPY_ON_WRITE"
 
-    self_merging = False
-
     def __init__(self, location: str) -> None:
         super().__init__(location)
         self._meta_dir = os.path.join(location, ".hoodie")

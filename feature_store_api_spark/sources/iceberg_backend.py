@@ -10,7 +10,7 @@ readable by ANY Iceberg client and by :mod:`.iceberg_reader`
 (iceberg.apache.org/spec/). Like the Delta backend, the store's own
 commit metadata (counts, retention) stays in the ``_commits.json``
 sidecar that Iceberg clients ignore, and the table is merge-on-read
-from the store's point of view (``self_merging = False``): external
+from the store's point of view: external
 readers see the RAW commit rows including ``_commit_time``/``_op`` —
 the documented log-view contract.
 
@@ -277,8 +277,6 @@ class IcebergBackend(CommitLogBackend):
 
     Inherits the JSON sidecar + lockfile for the STORE's logical log;
     data/scan/vacuum speak the Iceberg spec."""
-
-    self_merging = False
 
     def __init__(self, location: str) -> None:
         super().__init__(location)

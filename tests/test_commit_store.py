@@ -752,21 +752,20 @@ def test_as_of_below_lone_base_keeps_resolve(spark, fs):
 
 def _force_window_resolve(store):
     """Context: disable both compaction-window fast paths, forcing the
-    classic shuffle resolve (the reference plan for equivalence)."""
-    import contextlib
+    classic shuffle resolve (the reference plan for equivalence): the
+    merge window keeps its commits, but its compaction base reads as a
+    plain (overwrite) base."""
+    from unittest import mock
 
-    @contextlib.contextmanager
-    def ctx():
-        orig = type(store)._compaction_window_shape
-        type(store)._compaction_window_shape = (
-            lambda self, e, log=None: (None, [])
-        )
-        try:
-            yield
-        finally:
-            type(store)._compaction_window_shape = orig
+    window = type(store)._window
 
-    return ctx()
+    def plain(log, start_commit, end_commit):
+        return [
+            dict(c, operation="overwrite")
+            for c in window(log, start_commit, end_commit)
+        ]
+
+    return mock.patch.object(type(store), "_window", staticmethod(plain))
 
 
 def test_base_plus_small_tail_merge_on_read(spark, fs):
@@ -872,3 +871,57 @@ def test_base_tail_merge_requires_known_small_tail(spark, fs):
     finally:
         type(fg2.commit_store).MOR_TAIL_MAX_ROWS = saved
     assert fg2.read(spark).count() == 2
+
+
+@pytest.mark.parametrize(
+    "fmt", ["COMMITLOG", "DELTA", "ICEBERG", "HUDI", "HUDI_MOR"]
+)
+def test_unlogged_commit_is_invisible(spark, tmp_path, fmt):
+    """A commit is visible exactly when its log entry exists. Rows a
+    backend holds without one (a write that crashed between landing its
+    data and appending its log entry, or one still in flight) must not
+    reach a snapshot, an as-of read or an incremental pull."""
+    from feature_store_api_spark.sources.commit_store import COMMIT_COL, OP_COL
+
+    fs = FeatureStore(root=str(tmp_path / fmt.lower()))
+    fg = fs.create_feature_group(
+        f"ghost_{fmt.lower()}", primary_key=["k"], event_time="ts",
+        time_travel_format=fmt, auto_compact_every=None,
+    )
+    schema = "k long, ts long, v string"
+    c1 = fg.insert(spark.createDataFrame([(1, 10, "a"), (2, 10, "b")], schema))
+    store = fg.commit_store
+    ghost_ct = store._next_commit_time()
+    ghost = (
+        spark.createDataFrame([(1, 10, "GHOST"), (3, 10, "GHOST")], schema)
+        .withColumn(COMMIT_COL, F.lit(ghost_ct))
+        .withColumn(OP_COL, F.lit("upsert"))
+    )
+    store.backend.append_commit(ghost, [COMMIT_COL] + store.partition_key)
+    assert [c["commit_time"] for c in store.commit_details()] == [c1.commit_time]
+
+    def rows(df):
+        return sorted((r["k"], r["v"]) for r in df.collect())
+
+    logged = [(1, "a"), (2, "b")]
+    assert rows(fg.read(spark)) == logged
+    assert rows(fg.as_of(ghost_ct).read(spark)) == logged
+    pulled = fg.select_all().pull_changes(c1.commit_time - 1, ghost_ct)
+    assert rows(pulled.read(spark)) == logged
+
+
+def test_commit_time_allocation_is_reserved(tmp_path, monkeypatch):
+    """Two writers in flight never share a commit time: the allocation
+    is reserved under the log lock, so a second allocation before the
+    first commit's log entry lands still gets a later time, from the
+    same store object or from another one on the same location."""
+    from feature_store_api_spark.sources import commit_store as cs
+
+    monkeypatch.setattr(cs.time, "time", lambda: 1_700_000_000.0)
+    loc = str(tmp_path / "alloc")
+    a = cs.CommitStore(loc, primary_key=["id"])
+    b = cs.CommitStore(loc, primary_key=["id"])
+    first = a._next_commit_time()
+    second = a._next_commit_time()
+    third = b._next_commit_time()
+    assert first < second < third

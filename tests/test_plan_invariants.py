@@ -542,3 +542,31 @@ def test_pit_join_has_one_union_window_kernel():
     root = pathlib.Path(feature_store_api_spark.__file__).parent
     source = (root / "operators" / "pit_join.py").read_text()
     assert source.count(".unionByName(") == 1
+
+
+def test_commit_store_reads_one_window():
+    """A read's commit set is worked out once, by ``CommitStore._window``
+    from the log, and ``snapshot`` scans exactly that set through one
+    ``isin`` on the commit column. Range predicates on the commit column
+    (``>= base``, ``<= end``, ``> start``) also admit rows the log holds
+    no entry for, and a second walk bounding the log by ``end_commit``
+    is a second window rule that can drift from the first."""
+    import ast
+    import inspect
+    import re
+
+    from feature_store_api_spark.sources import commit_store
+
+    snapshot = inspect.getsource(commit_store.CommitStore.snapshot)
+    assert snapshot.count(".isin(") == 1
+    assert "self._window(" in snapshot
+    assert not re.search(r"F\.col\(COMMIT_COL\)\s*[<>]", snapshot)
+    source = inspect.getsource(commit_store)
+    bounding = re.compile(r'\["commit_time"\]\s*<=\s*end_commit')
+    walkers = [
+        node.name
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.FunctionDef)
+        and bounding.search(ast.get_source_segment(source, node))
+    ]
+    assert walkers == ["_window"]
