@@ -39,7 +39,7 @@ import time
 from dataclasses import asdict, dataclass, field
 from typing import Dict, List, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import latest_per_key
@@ -186,10 +186,19 @@ class CommitStore:
         MERGE semantics are realized lazily: the commit only appends its
         rows; conflict resolution (newest commit wins per record key)
         happens at read via one window dedupe — the merge-on-read
-        pattern. Insert/update/delete counts for the commit metadata are
-        computed with a broadcast-friendly semi-join against the prior
-        snapshot (parity ``core/delta_engine.py:172-204``); pass
-        ``compute_stats=False`` to skip that extra job on huge writes.
+        pattern. The commit metadata counts come from the write itself,
+        the way Delta's ``operationMetrics`` do (parity
+        ``core/delta_engine.py:172-204``):
+
+        * the batch row count ``n`` is observed on the write's own plan
+          (``Dataset.observe``) and read once the backend append
+          returns — no job of its own. A delete records
+          ``rows_deleted = n``;
+        * ``rows_updated`` is one left-semi count of the batch's record
+          keys against the prior live keys (:meth:`_rows_updated`), run
+          before the append; ``rows_inserted = n - rows_updated``.
+
+        ``compute_stats=False`` skips both and records 0/0/0.
         """
         if operation not in (
             "upsert", "insert", "bulk_insert", "delete", "overwrite"
@@ -201,26 +210,12 @@ class CommitStore:
             raise ValueError(f"DataFrame missing record-key columns {missing}")
 
         ct = self._next_commit_time()
-        inserted = updated = deleted = 0
+        observed, updated = None, 0
         if compute_stats:
-            n = df.count()
-            prior = (
-                None if operation == "overwrite"
-                else self.snapshot_or_none(spark)
-            )
-            if operation == "delete":
-                deleted = n
-            elif prior is None:
-                inserted = n
-            else:
-                key = [k for k in self.record_key if k in df.columns]
-                matched = (
-                    df.select(key)
-                    .join(prior.select(key), on=key, how="left_semi")
-                    .count()
-                )
-                updated = matched
-                inserted = n - matched
+            if operation not in ("delete", "overwrite"):
+                updated = self._rows_updated(spark, df)
+            observed = Observation()
+            df = df.observe(observed, F.count(F.lit(1)))
 
         out = df.withColumn(COMMIT_COL, F.lit(ct)).withColumn(
             OP_COL, F.lit("delete" if operation == "delete" else "upsert")
@@ -242,6 +237,14 @@ class CommitStore:
             self.backend.append_commit(
                 out, [COMMIT_COL] + self.partition_key
             )
+        inserted = deleted = 0
+        if observed is not None:
+            # the append was the observed plan's only action
+            (n,) = observed.get.values()
+            if operation == "delete":
+                deleted = n
+            else:
+                inserted = n - updated
         commit = FeatureGroupCommit(
             commit_time=ct,
             operation=operation,
@@ -303,6 +306,36 @@ class CommitStore:
         tail length a snapshot read has to window over."""
         window = self._window(self._read_log(), None, None)
         return len(window) - (1 if window and window[0].get("base") else 0)
+
+    def _rows_updated(self, spark: SparkSession, df: DataFrame) -> int:
+        """Rows of ``df`` whose record key is live before the write: one
+        left-semi count against the prior live keys. Without a key
+        column no row can match; an empty window holds no key.
+
+        Only a delete commit can retire a key, so while the snapshot
+        window holds none, every key in any of its logged commits is
+        live — the window's rows stand in for the snapshot without its
+        latest-per-key resolve. Otherwise the snapshot itself is the
+        prior state."""
+        key = [k for k in self.record_key if k in df.columns]
+        window = self._window(self._read_log(), None, None)
+        if not key or not window:
+            return 0
+        if any(c.get("operation") == "delete" for c in window):
+            prior = self.snapshot_or_none(spark)
+        else:
+            prior = self.backend.scan(spark)
+            if prior is not None:
+                prior = prior.where(
+                    F.col(COMMIT_COL).isin([c["commit_time"] for c in window])
+                )
+        if prior is None:
+            return 0
+        return (
+            df.select(key)
+            .join(prior.select(key), on=key, how="left_semi")
+            .count()
+        )
 
     # broadcast gate for the base-plus-small-tail merge: ~2M keys at
     # ~(8-50) B/key builds a 16-100 MB broadcast relation — comfortably

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -60,3 +61,21 @@ def assert_df_equal(sdf, odf, sort_cols=None, rtol=1e-5):
     a = a.sort_values(sort_cols).reset_index(drop=True)
     b = b.sort_values(sort_cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=False, rtol=rtol, atol=1e-6)
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs started inside the block.
+
+    Yields a list that is filled, in job-id order, when the block exits.
+    Job events reach the status tracker through the asynchronous
+    listener bus, so the bus is drained on both sides of the block."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    started = []
+    yield started
+    bus.waitUntilEmpty()
+    started.extend(sorted(set(tracker.getJobIdsForGroup(None)) - before))

@@ -925,3 +925,90 @@ def test_commit_time_allocation_is_reserved(tmp_path, monkeypatch):
     second = a._next_commit_time()
     third = b._next_commit_time()
     assert first < second < third
+
+
+def test_insert_without_record_key_counts_as_inserted(spark, tmp_path):
+    """An ``insert`` batch that carries none of the record-key columns
+    can match no prior row: once a commit exists it must record every
+    row as inserted instead of failing on an empty join key."""
+    from feature_store_api_spark.sources.commit_store import CommitStore
+
+    store = CommitStore(str(tmp_path / "nokey"), primary_key=["id"])
+    store.write(spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, v double"))
+    c = store.write(
+        spark.createDataFrame([(3.0,), (4.0,), (5.0,)], "v double"),
+        operation="insert",
+    )
+    assert (c.rows_inserted, c.rows_updated, c.rows_deleted) == (3, 0, 0)
+
+
+def _stats(c):
+    return (c.rows_inserted, c.rows_updated, c.rows_deleted)
+
+
+def _reference_stats(spark, store, df, operation):
+    """Commit counts by the direct formula: count the batch, then
+    semi-join its record keys against the resolved prior snapshot."""
+    n = df.count()
+    if operation == "delete":
+        return (0, 0, n)
+    prior = None if operation == "overwrite" else store.snapshot_or_none(spark)
+    key = [k for k in store.record_key if k in df.columns]
+    if prior is None or not key:
+        return (n, 0, 0)
+    matched = df.select(key).join(prior.select(key), on=key, how="left_semi").count()
+    return (n - matched, matched, 0)
+
+
+@pytest.mark.parametrize(
+    "fmt", ["COMMITLOG", "DELTA", "ICEBERG", "HUDI", "HUDI_MOR"]
+)
+def test_commit_stats_match_snapshot_formula(spark, tmp_path, fmt):
+    """Every commit's inserted/updated/deleted counts equal the direct
+    formula (batch count, then a semi-join against the resolved prior
+    snapshot) on each window shape the write path tells apart: first
+    commit, plain tail, compaction and overwrite bases with tails, a
+    delete in the window, duplicate batch keys, unlogged rows holding a
+    batch key, and an empty batch."""
+    from feature_store_api_spark.sources.commit_store import COMMIT_COL, OP_COL
+
+    fs = FeatureStore(root=str(tmp_path / fmt.lower()))
+    fg = fs.create_feature_group(
+        f"stats_{fmt.lower()}", primary_key=["k"], event_time="ts",
+        time_travel_format=fmt, auto_compact_every=None,
+    )
+    store = fg.commit_store
+    schema = "k long, ts long, v double"
+
+    def batch(*keys):
+        return spark.createDataFrame([(k, 10, float(k)) for k in keys], schema)
+
+    def ghost(*keys):
+        ct = store._next_commit_time()
+        rows = batch(*keys).withColumn(COMMIT_COL, F.lit(ct))
+        store.backend.append_commit(
+            rows.withColumn(OP_COL, F.lit("upsert")),
+            [COMMIT_COL] + store.partition_key,
+        )
+
+    def write(df, want, operation="upsert"):
+        ref = _reference_stats(spark, store, df, operation)
+        got = _stats(store.write(df, operation=operation))
+        assert got == ref == want, (operation, got, ref)
+
+    write(batch(1, 2, 3, 4), (4, 0, 0))        # first commit
+    write(batch(3, 4, 5, 6), (2, 2, 0))        # plain tail
+    write(batch(5, 5, 7, 7), (2, 2, 0))        # duplicate batch keys
+    store.compact(spark)
+    write(batch(1, 8), (1, 1, 0))              # lone compaction base
+    write(batch(8, 9), (1, 1, 0))              # compaction base + tail
+    ghost(10)
+    write(batch(10, 9), (1, 1, 0))             # unlogged key is not live
+    write(batch(2), (0, 0, 1), "delete")
+    write(batch(2, 3), (1, 1, 0))              # re-insert after a delete
+    ghost(11)
+    write(batch(11), (1, 0, 0))                # unlogged, delete in window
+    write(batch(1, 2, 50), (3, 0, 0), "overwrite")
+    write(batch(2, 60), (1, 1, 0))             # overwrite base + tail
+    write(batch(), (0, 0, 0))                  # empty batch
+    assert _stats(store.write(batch(60, 61), compute_stats=False)) == (0, 0, 0)

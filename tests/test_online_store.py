@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_store_api_spark.online.store import OnlineStore, _BUCKET
+from tests.conftest import spark_jobs
 
 
 def _files(path):
@@ -231,10 +232,9 @@ def test_arrow_lookup_matches_spark_and_runs_no_job(spark, store_dir, build):
     Spark plan returns — latest per key across base ∪ delta with the
     precombine/seq tie order — and (b) launch ZERO Spark jobs."""
     store, keys = build(spark, store_dir)
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    fast = store._arrow_lookup(keys)
-    assert tracker.getJobIdsForGroup(None) == before  # no Spark job
+    with spark_jobs(spark) as jobs:
+        fast = store._arrow_lookup(keys)
+    assert jobs == []  # no Spark job
     assert fast is not None
 
     slow = store.lookup(store._pruned(spark, keys), keys)
@@ -254,9 +254,9 @@ def test_arrow_lookup_matches_spark_and_runs_no_job(spark, store_dir, build):
     assert fast[0]["v"] == 300.0 and fast[1]["v"] == 700.0
 
     # the public API routes through the fast path for dict returns
-    before = tracker.getJobIdsForGroup(None)
-    one = store.get_feature_vector(spark, {"uid": 3})
-    assert tracker.getJobIdsForGroup(None) == before
+    with spark_jobs(spark) as jobs:
+        one = store.get_feature_vector(spark, {"uid": 3})
+    assert jobs == []
     assert one["v"] == 300.0
 
 

@@ -570,3 +570,22 @@ def test_commit_store_reads_one_window():
         and bounding.search(ast.get_source_segment(source, node))
     ]
     assert walkers == ["_window"]
+
+
+def test_commit_write_counts_rows_on_the_write():
+    """``CommitStore.write`` runs no count job over the incoming frame:
+    the batch row count is observed on the write's own plan, and the one
+    statistics query (the left-semi count behind ``rows_updated``) takes
+    its commit set from ``self._window(`` like every read does."""
+    import inspect
+
+    from feature_store_api_spark.sources import commit_store
+
+    store = commit_store.CommitStore
+    write = inspect.getsource(store.write)
+    assert ".count()" not in write
+    assert ".observe(" in write
+    updated = inspect.getsource(store._rows_updated)
+    assert "self._window(" in updated
+    assert updated.count(".count()") == 1
+    assert "left_semi" in updated

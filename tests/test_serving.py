@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from feature_store_api_spark import FeatureStore
 from feature_store_api_spark.feature_view import FeatureView
 from feature_store_api_spark.sources.readers import read_parquet
+from tests.conftest import spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -170,11 +171,9 @@ def test_transform_fast_path_runs_no_spark_job(spark, served):
     server = fv.init_serving(spark, training_df=served["ev"])
     rows = [{"user_id": 3, "value": 10.0, "agg_total_value": 1.0,
              "agg_n_events": 2, "ts": None, "event_id": 1}]
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    out = server._transform(spark, list(rows))
-    after = tracker.getJobIdsForGroup(None)
-    assert after == before  # zero Spark jobs on the fast path
+    with spark_jobs(spark) as jobs:
+        out = server._transform(spark, list(rows))
+    assert jobs == []  # zero Spark jobs on the fast path
     assert out[0]["plus_one_value"] == pytest.approx(11.0)
     assert "min_max_scaler_value" in out[0] and "value" not in out[0]
 
@@ -257,10 +256,9 @@ def test_live_serving_full_request_runs_no_spark_job(spark, served):
     live = fv_live.init_serving(
         spark, training_df=served["ev"], pin_snapshots=False
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    got = live.get_feature_vector(spark, {"user_id": 3})
-    assert tracker.getJobIdsForGroup(None) == before  # zero jobs end-to-end
+    with spark_jobs(spark) as jobs:
+        got = live.get_feature_vector(spark, {"user_id": 3})
+    assert jobs == []  # zero jobs end-to-end
     assert set(got) == set(want)
     for c in want:
         assert got[c] == pytest.approx(want[c]) if isinstance(want[c], float) else got[c] == want[c], c

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_store_api_spark.operators import similarity as sim
+from tests.conftest import spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -113,12 +114,10 @@ def test_retry_no_retry_path_scans_once(emb, spark):
     idx = sim.build_ann_index(emb, "embedding", dim=16, num_planes=10)
     idx = idx.localCheckpoint(eager=True)  # pin the input, isolate jobs
 
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    out = sim.find_neighbors_ann_retry(
-        idx, q, col="embedding", k=5, num_planes=10, max_hamming=10
-    )  # radius = num_planes → every row qualifies → never retries
-    during = set(tracker.getJobIdsForGroup(None)) - before
+    with spark_jobs(spark) as during:
+        out = sim.find_neighbors_ann_retry(
+            idx, q, col="embedding", k=5, num_planes=10, max_hamming=10
+        )  # radius = num_planes → every row qualifies → never retries
     # two actions: the candidate count (materializes the cache) and the
     # top-k collect that localizes the result before unpersist; AQE may
     # split each into a job per query stage, so bound, don't pin
@@ -133,11 +132,10 @@ def test_retry_no_retry_path_scans_once(emb, spark):
     # same contract for the IVF retry
     ivf = sim.build_ivf_index(emb, "embedding", id_col="vec_id", num_centroids=8)
     ivf.df = ivf.df.localCheckpoint(eager=True)
-    before = set(tracker.getJobIdsForGroup(None))
-    out = sim.find_neighbors_ivf_retry(
-        ivf, q, col="embedding", k=5, nprobe=8
-    )  # nprobe = |centroids| → exhaustive → never retries
-    during = set(tracker.getJobIdsForGroup(None)) - before
+    with spark_jobs(spark) as during:
+        out = sim.find_neighbors_ivf_retry(
+            ivf, q, col="embedding", k=5, nprobe=8
+        )  # nprobe = |centroids| → exhaustive → never retries
     assert 1 <= len(during) <= 6
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert ("LocalTableScan" in plan or "ExistingRDD" in plan)

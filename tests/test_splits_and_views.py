@@ -12,6 +12,7 @@ from feature_store_api_spark.operators.splits import (
     split_labels,
     time_series_split,
 )
+from tests.conftest import spark_jobs
 
 
 def ts(s):
@@ -189,10 +190,9 @@ def test_statistics_and_rows_share_one_execution(
         assert "Window" in plan
         return
     assert "Window" not in plan
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None))
-    rows = out.collect()
-    assert len(tracker.getJobIdsForGroup(None)) - before == 1
+    with spark_jobs(spark) as jobs:
+        rows = out.collect()
+    assert len(jobs) == 1
     assert sorted(r["min_max_scaler_bal"] is None for r in rows) == [
         False, False, True]
 
