@@ -386,10 +386,10 @@ class FeatureGroup(FeatureGroupBase):
         while ``as_of`` below it keeps working until vacuum.
 
         The returned commit's counts come from the write itself
-        (``CommitStore.write``): the row count is observed on the write,
-        and ``rows_updated`` is one left-semi count of the batch keys
-        against the live keys. ``compute_stats=False`` skips both and
-        records 0/0/0.
+        (``CommitStore.write``): the row count and ``rows_updated`` are
+        both observed on the write's one query, ``rows_updated`` through
+        an existence join of the batch keys against the live keys.
+        ``compute_stats=False`` skips both and records 0/0/0.
 
         Provenance: the ingested frame's physical plan is matched
         against the store's managed feature-group locations and any hit

@@ -31,7 +31,11 @@ holds its entry, and the store appends that entry only after
 every commit the backend holds, logged or not; the store filters the
 scan to the logged commits of the read's window and resolves row
 versions itself (merge-on-read, the Hudi-MOR-like design documented
-in :mod:`.commit_store`).
+in :mod:`.commit_store`). The same rule holds for the schema on the
+plain backend: each log entry records its commit's data schema (as
+Delta's log carries ``metaData``), and :class:`CommitLogBackend` reads
+with the fold of the live entries' schemas, so an unlogged commit's
+columns are not read either and no job merges file footers.
 """
 
 from __future__ import annotations
@@ -44,6 +48,7 @@ from contextlib import contextmanager
 from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 _LOG = "_commits.json"
 _DATA = "data"
@@ -202,6 +207,12 @@ class CommitLogBackend(TimeTravelBackend):
     def scan(
         self, spark: SparkSession, filters=None
     ) -> Optional[DataFrame]:
+        """The parquet commit tree, read with the logged schema
+        (:meth:`_logged_schema`): the data columns every live logged
+        commit recorded, then the partition columns from partition
+        discovery with their inferred types — the schema a
+        ``mergeSchema`` footer merge gives, without its job. A log that
+        cannot give one keeps the footer merge."""
         # ``filters`` is the store's PARTITION-ONLY subtree. For a
         # simple scan-filter plan Catalyst would prune directories from
         # the root predicate alone — but hints arrive precisely when
@@ -213,7 +224,12 @@ class CommitLogBackend(TimeTravelBackend):
         # shares them), and the caller re-applies the exact predicate.
         if not os.path.exists(self._data_path):
             return None
-        df = spark.read.option("mergeSchema", "true").parquet(self._data_path)
+        schema = self._logged_schema()
+        reader = (
+            spark.read.schema(schema) if schema is not None
+            else spark.read.option("mergeSchema", "true")
+        )
+        df = reader.parquet(self._data_path)
         if filters is not None:
             from ..constructor.filter import filters_to_column, remap_tree
 
@@ -221,6 +237,28 @@ class CommitLogBackend(TimeTravelBackend):
             if bound is not None:
                 df = df.where(filters_to_column(bound))
         return df
+
+    def _logged_schema(self) -> Optional[StructType]:
+        """The data columns of every live logged commit, folded oldest
+        first in first-seen column order (the order a ``mergeSchema``
+        footer merge gives). None — keep the footer merge — when there
+        is no live commit, one was logged without a schema (a store
+        written before commits recorded theirs), or two commits disagree
+        on a column's type or name case: settling that stays with the
+        footer merge."""
+        live = sorted(
+            (c for c in self.read_log() if not c.get("vacuumed")),
+            key=lambda c: c["commit_time"],
+        )
+        if not live or any(not c.get("schema") for c in live):
+            return None
+        fields: Dict[str, StructField] = {}
+        for schema in dict.fromkeys(c["schema"] for c in live):
+            for f in StructType.fromJson(json.loads(schema)).fields:
+                seen = fields.setdefault(f.name.lower(), f)
+                if (seen.name, seen.dataType) != (f.name, f.dataType):
+                    return None
+        return StructType(list(fields.values()))
 
     def drop_commit(self, commit_time: int) -> bool:
         from .commit_store import COMMIT_COL

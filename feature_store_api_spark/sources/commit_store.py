@@ -34,6 +34,8 @@ compaction read only base + tail commits.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import time
 from dataclasses import asdict, dataclass, field
@@ -41,12 +43,41 @@ from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..operators.dedup import latest_per_key
 from .backend import CommitLogBackend, TimeTravelBackend
 
 COMMIT_COL = "_commit_time"
 OP_COL = "_op"
+# the existence marker ``write`` tags batch rows with for rows_updated
+_HIT = "__prior_hit"
+
+
+def _all(conds):
+    return functools.reduce(operator.and_, conds)
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` nullable at every level, as a parquet read returns it, so
+    commits whose frames differ only in nullability log one schema."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata)
+             for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 @dataclass
@@ -60,6 +91,9 @@ class FeatureGroupCommit:
     rows_deleted: int = 0
     base: bool = False  # compaction base commit
     extra: Dict = field(default_factory=dict)
+    # the commit's data-file schema as JSON (Delta's ``metaData``
+    # ``schemaString``): the plain backend reads with it
+    schema: Optional[str] = None
 
     def to_dict(self) -> Dict:
         return asdict(self)
@@ -188,17 +222,31 @@ class CommitStore:
         happens at read via one window dedupe — the merge-on-read
         pattern. The commit metadata counts come from the write itself,
         the way Delta's ``operationMetrics`` do (parity
-        ``core/delta_engine.py:172-204``):
+        ``core/delta_engine.py:172-204``), and are read once the backend
+        append returns — no query of their own:
 
         * the batch row count ``n`` is observed on the write's own plan
-          (``Dataset.observe``) and read once the backend append
-          returns — no job of its own. A delete records
-          ``rows_deleted = n``;
-        * ``rows_updated`` is one left-semi count of the batch's record
-          keys against the prior live keys (:meth:`_rows_updated`), run
-          before the append; ``rows_inserted = n - rows_updated``.
+          (``Dataset.observe``). A delete records ``rows_deleted = n``;
+        * ``rows_updated`` is observed on the same plan: every batch row
+          is tagged with whether its record key is among the prior live
+          keys (:meth:`_prior_keys`) by a correlated ``EXISTS``, which
+          Catalyst plans as an existence join — it never drops or
+          duplicates a batch row. ``rows_inserted = n - rows_updated``.
 
-        ``compute_stats=False`` skips both and records 0/0/0.
+        While the prior keys fit under ``autoBroadcastJoinThreshold`` the
+        existence join broadcasts them and the batch keeps its own
+        partitioning. Above it the join is a sort-merge join: the batch
+        is hash-shuffled on its record key before the write, so the
+        commit lands as one file per (coalesced) shuffle partition,
+        each holding a hash range of keys.
+
+        ``compute_stats=False`` skips both and records 0/0/0. Delete and
+        overwrite commits, an empty window and a batch without record-key
+        columns add no tag.
+
+        The log entry also records the commit's data-file schema (every
+        column but the partition columns, all nullable, as JSON), which
+        the plain backend reads with instead of merging file footers.
         """
         if operation not in (
             "upsert", "insert", "bulk_insert", "delete", "overwrite"
@@ -210,12 +258,36 @@ class CommitStore:
             raise ValueError(f"DataFrame missing record-key columns {missing}")
 
         ct = self._next_commit_time()
-        observed, updated = None, 0
+        schema = self._data_schema(df.schema)
+        observed = hits = None
         if compute_stats:
-            if operation not in ("delete", "overwrite"):
-                updated = self._rows_updated(spark, df)
+            # observing the row count below the tag also shields a union
+            # batch from Spark's PushProjectionThroughUnion, which would
+            # push the EXISTS projection into each branch and lose the
+            # subquery's outer references
             observed = Observation()
             df = df.observe(observed, F.count(F.lit(1)))
+            key = [k for k in self.record_key if k in df.columns]
+            prior = (
+                None if operation in ("delete", "overwrite")
+                else self._prior_keys(spark, key)
+            )
+            if prior is not None:
+                hit = (
+                    prior.alias("__p")
+                    .where(_all(
+                        F.col(f"__b.`{k}`").outer() == F.col(f"__p.`{k}`")
+                        for k in key
+                    ))
+                    .exists()
+                )
+                hits = Observation()
+                df = (
+                    df.alias("__b")
+                    .withColumn(_HIT, hit)
+                    .observe(hits, F.count_if(_HIT))
+                    .drop(_HIT)
+                )
 
         out = df.withColumn(COMMIT_COL, F.lit(ct)).withColumn(
             OP_COL, F.lit("delete" if operation == "delete" else "upsert")
@@ -237,10 +309,12 @@ class CommitStore:
             self.backend.append_commit(
                 out, [COMMIT_COL] + self.partition_key
             )
-        inserted = deleted = 0
+        inserted = updated = deleted = 0
         if observed is not None:
             # the append was the observed plan's only action
             (n,) = observed.get.values()
+            if hits is not None:
+                (updated,) = hits.get.values()
             if operation == "delete":
                 deleted = n
             else:
@@ -258,6 +332,7 @@ class CommitStore:
             # travel below it keeps working until vacuum
             base=(operation == "overwrite"),
             extra=extra or {},
+            schema=schema,
         )
         self._append_log(commit)
         if (
@@ -266,6 +341,18 @@ class CommitStore:
         ):
             self.compact(spark)
         return commit
+
+    def _data_schema(self, schema: StructType) -> str:
+        """A commit's data-file schema as JSON: the frame's columns minus
+        the partition columns, plus ``_op``, nullable at every level as
+        a parquet read gives them."""
+        skip = {COMMIT_COL, OP_COL, *self.partition_key}
+        return _nullable(
+            StructType(
+                [f for f in schema.fields if f.name not in skip]
+                + [StructField(OP_COL, StringType())]
+            )
+        ).json()
 
     @staticmethod
     def _window(
@@ -307,35 +394,49 @@ class CommitStore:
         window = self._window(self._read_log(), None, None)
         return len(window) - (1 if window and window[0].get("base") else 0)
 
-    def _rows_updated(self, spark: SparkSession, df: DataFrame) -> int:
-        """Rows of ``df`` whose record key is live before the write: one
-        left-semi count against the prior live keys. Without a key
-        column no row can match; an empty window holds no key.
+    def _prior_keys(
+        self, spark: SparkSession, key: List[str]
+    ) -> Optional[DataFrame]:
+        """The ``key`` columns (the record-key columns the batch has) of
+        the rows live before the write, or None when no batch row can
+        match: no key column, or an empty window.
 
         Only a delete commit can retire a key, so while the snapshot
         window holds none, every key in any of its logged commits is
         live — the window's rows stand in for the snapshot without its
-        latest-per-key resolve. Otherwise the snapshot itself is the
-        prior state."""
-        key = [k for k in self.record_key if k in df.columns]
+        latest-per-key resolve. With deletes in the window, a row stays
+        live unless a delete row of the same key is newer: one anti join
+        against the window's delete rows, exact because a commit's
+        ``_op`` is constant and commit times are unique."""
         window = self._window(self._read_log(), None, None)
         if not key or not window:
-            return 0
-        if any(c.get("operation") == "delete" for c in window):
-            prior = self.snapshot_or_none(spark)
-        else:
-            prior = self.backend.scan(spark)
-            if prior is not None:
-                prior = prior.where(
-                    F.col(COMMIT_COL).isin([c["commit_time"] for c in window])
-                )
-        if prior is None:
-            return 0
-        return (
-            df.select(key)
-            .join(prior.select(key), on=key, how="left_semi")
-            .count()
+            return None
+        rows = self.backend.scan(spark)
+        if rows is None:
+            return None
+        rows = rows.where(
+            F.col(COMMIT_COL).isin([c["commit_time"] for c in window])
         )
+        deletes = [c for c in window if c.get("operation") == "delete"]
+        if deletes:
+            gone = rows.where(F.col(OP_COL) == "delete").alias("__d")
+            if self._tail_rows_small(deletes):
+                # the log's counts show the delete rows are few
+                gone = F.broadcast(gone)
+            rows = (
+                rows.where(F.col(OP_COL) != "delete")
+                .alias("__r")
+                .join(
+                    gone,
+                    _all(
+                        F.col(f"__r.`{k}`").eqNullSafe(F.col(f"__d.`{k}`"))
+                        for k in key
+                    )
+                    & (F.col(f"__d.{COMMIT_COL}") > F.col(f"__r.{COMMIT_COL}")),
+                    "left_anti",
+                )
+            )
+        return rows.select(*[F.col(f"`{k}`") for k in key])
 
     # broadcast gate for the base-plus-small-tail merge: ~2M keys at
     # ~(8-50) B/key builds a 16-100 MB broadcast relation — comfortably
@@ -384,10 +485,10 @@ class CommitStore:
         base = df.where(F.col(COMMIT_COL) == base_ct).alias("__base")
         delta = df.where(F.col(COMMIT_COL) > base_ct)
         delta_keys = F.broadcast(delta.select(*key).alias("__tail"))
-        cond = None
-        for k in key:
-            c = F.col(f"__base.`{k}`").eqNullSafe(F.col(f"__tail.`{k}`"))
-            cond = c if cond is None else (cond & c)
+        cond = _all(
+            F.col(f"__base.`{k}`").eqNullSafe(F.col(f"__tail.`{k}`"))
+            for k in key
+        )
         survivors = base.join(delta_keys, cond, "left_anti")
         strategy = "window" if tail_len <= 64 else "agg"
         resolved = latest_per_key(delta, key, order_by=order, strategy=strategy)
@@ -539,6 +640,7 @@ class CommitStore:
         copy-on-write moment of our merge-on-read design."""
         snap = self.snapshot(spark)
         ct = self._next_commit_time()
+        schema = self._data_schema(snap.schema)
         out = snap.withColumn(COMMIT_COL, F.lit(ct)).withColumn(OP_COL, F.lit("upsert"))
         sort_keys = [
             c for c in (self.cluster_by or self.record_key)
@@ -550,7 +652,9 @@ class CommitStore:
             # matching row groups
             out = out.sortWithinPartitions(*sort_keys)
         self.backend.append_base_commit(out, [COMMIT_COL] + self.partition_key)
-        commit = FeatureGroupCommit(commit_time=ct, operation="compaction", base=True)
+        commit = FeatureGroupCommit(
+            commit_time=ct, operation="compaction", base=True, schema=schema
+        )
         self._append_log(commit)
         return commit
 

@@ -79,3 +79,15 @@ def spark_jobs(spark):
     yield started
     bus.waitUntilEmpty()
     started.extend(sorted(set(tracker.getJobIdsForGroup(None)) - before))
+
+
+def job_stages(spark, job_ids):
+    """The stage names of each job, by job id: what a failing job-budget
+    assertion reports, so a regression names the jobs that came back."""
+    tracker = spark.sparkContext.statusTracker()
+    out = {}
+    for j in job_ids:
+        info = tracker.getJobInfo(j)
+        stages = [tracker.getStageInfo(s) for s in info.stageIds] if info else []
+        out[j] = [s.name for s in stages if s is not None]
+    return out

@@ -3,6 +3,7 @@ precombine tie-break, compaction, commit metadata counts."""
 
 import datetime as dt
 import os
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -893,7 +894,10 @@ def test_unlogged_commit_is_invisible(spark, tmp_path, fmt):
     store = fg.commit_store
     ghost_ct = store._next_commit_time()
     ghost = (
-        spark.createDataFrame([(1, 10, "GHOST"), (3, 10, "GHOST")], schema)
+        spark.createDataFrame(
+            [(1, 10, "GHOST", 1.0), (3, 10, "GHOST", 3.0)],
+            schema + ", extra double",
+        )
         .withColumn(COMMIT_COL, F.lit(ghost_ct))
         .withColumn(OP_COL, F.lit("upsert"))
     )
@@ -908,6 +912,14 @@ def test_unlogged_commit_is_invisible(spark, tmp_path, fmt):
     assert rows(fg.as_of(ghost_ct).read(spark)) == logged
     pulled = fg.select_all().pull_changes(c1.commit_time - 1, ghost_ct)
     assert rows(pulled.read(spark)) == logged
+    if fmt == "COMMITLOG":
+        # the plain backend reads with the logged commits' schemas, so
+        # the unlogged commit's column is not read either. The Delta,
+        # Iceberg and Hudi COW scans still show it: their own format
+        # logs hold the ghost commit
+        windows = [(None, None), (None, ghost_ct), (c1.commit_time - 1, ghost_ct)]
+        for start, end in windows:
+            assert store.snapshot(spark, start, end).columns == ["k", "ts", "v"]
 
 
 def test_commit_time_allocation_is_reserved(tmp_path, monkeypatch):
@@ -960,16 +972,34 @@ def _reference_stats(spark, store, df, operation):
     return (n - matched, matched, 0)
 
 
+_FORMATS = ["COMMITLOG", "DELTA", "ICEBERG", "HUDI", "HUDI_MOR"]
+
+
 @pytest.mark.parametrize(
-    "fmt", ["COMMITLOG", "DELTA", "ICEBERG", "HUDI", "HUDI_MOR"]
+    "fmt, broadcast",
+    [(f, True) for f in _FORMATS] + [("COMMITLOG", False)],
+    ids=_FORMATS + ["COMMITLOG-sort_merge"],
 )
-def test_commit_stats_match_snapshot_formula(spark, tmp_path, fmt):
+def test_commit_stats_match_snapshot_formula(spark, tmp_path, fmt, broadcast):
     """Every commit's inserted/updated/deleted counts equal the direct
     formula (batch count, then a semi-join against the resolved prior
     snapshot) on each window shape the write path tells apart: first
     commit, plain tail, compaction and overwrite bases with tails, a
-    delete in the window, duplicate batch keys, unlogged rows holding a
-    batch key, and an empty batch."""
+    delete in the window, duplicate batch keys, a null batch key,
+    unlogged rows holding a batch key, and an empty batch. With
+    broadcasts off the existence join behind ``rows_updated`` plans as
+    a sort-merge join instead of a broadcast hash join."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    if not broadcast:
+        spark.conf.set(key, "-1")
+    try:
+        _check_commit_stats(spark, tmp_path, fmt)
+    finally:
+        spark.conf.set(key, saved)
+
+
+def _check_commit_stats(spark, tmp_path, fmt):
     from feature_store_api_spark.sources.commit_store import COMMIT_COL, OP_COL
 
     fs = FeatureStore(root=str(tmp_path / fmt.lower()))
@@ -999,6 +1029,10 @@ def test_commit_stats_match_snapshot_formula(spark, tmp_path, fmt):
     write(batch(1, 2, 3, 4), (4, 0, 0))        # first commit
     write(batch(3, 4, 5, 6), (2, 2, 0))        # plain tail
     write(batch(5, 5, 7, 7), (2, 2, 0))        # duplicate batch keys
+    null_key = spark.createDataFrame([(None, 10, 0.0), (7, 10, 7.0)], schema)
+    write(null_key, (1, 1, 0))                 # a null key matches nothing
+    write(null_key, (1, 1, 0))                 # not even a live null key
+    write(batch(6).union(batch(7)), (0, 2, 0))  # a union batch
     store.compact(spark)
     write(batch(1, 8), (1, 1, 0))              # lone compaction base
     write(batch(8, 9), (1, 1, 0))              # compaction base + tail
@@ -1006,9 +1040,79 @@ def test_commit_stats_match_snapshot_formula(spark, tmp_path, fmt):
     write(batch(10, 9), (1, 1, 0))             # unlogged key is not live
     write(batch(2), (0, 0, 1), "delete")
     write(batch(2, 3), (1, 1, 0))              # re-insert after a delete
+    write(batch(2), (0, 1, 0))                 # live again after it
     ghost(11)
     write(batch(11), (1, 0, 0))                # unlogged, delete in window
     write(batch(1, 2, 50), (3, 0, 0), "overwrite")
     write(batch(2, 60), (1, 1, 0))             # overwrite base + tail
     write(batch(), (0, 0, 0))                  # empty batch
     assert _stats(store.write(batch(60, 61), compute_stats=False)) == (0, 0, 0)
+
+
+def test_logged_schema_scan_matches_footer_merge(spark, tmp_path):
+    """The plain backend reads with the schema the commit log records,
+    not a ``mergeSchema`` footer merge. Its schema (names, types,
+    nullability, order) and rows must equal a footer-merged read of the
+    same data directory: over a type zoo, a commit that adds a column, a
+    date-like string partition key (its inferred partition type must not
+    change), a compaction base, vacuumed commits, and a log written
+    without schemas, which keeps the footer merge."""
+    from feature_store_api_spark.sources.commit_store import CommitStore
+    from tests.conftest import spark_jobs
+
+    store = CommitStore(
+        str(tmp_path / "zoo"), primary_key=["k"], partition_key=["d"],
+        auto_compact_every=None,
+    )
+    backend = store.backend
+    zoo = (
+        "k long, i int, x double, s string, b boolean, m decimal(10,2), "
+        "day date, t timestamp, ntz timestamp_ntz, arr array<int>, "
+        "kv map<string,double>, st struct<a:int,z:string>, d string"
+    )
+
+    def rows(k, with_added=False):
+        row = (
+            k, k, k / 2, f"s{k}", k % 2 == 0, Decimal(f"{k}.25"),
+            dt.date(2024, 1, 1 + k), ts(f"2024-01-0{1 + k} 12:00:00"),
+            dt.datetime(2024, 2, 1 + k, 8), [k, None], {"a": float(k)},
+            (k, f"z{k}"), f"2024-03-0{1 + k % 2}",
+        )
+        return spark.createDataFrame(
+            [row + ((k * 10,) if with_added else ())],
+            zoo + (", added long" if with_added else ""),
+        )
+
+    def as_json(df):
+        return sorted(r[0] for r in df.select(F.to_json(F.struct("*"))).collect())
+
+    def check(logged=True):
+        assert (backend._logged_schema() is not None) == logged
+        merged = spark.read.option("mergeSchema", "true").parquet(
+            backend._data_path
+        )
+        with spark_jobs(spark) as jobs:
+            got = backend.scan(spark)
+        if logged:
+            assert jobs == []  # no footer job
+        assert got.schema == merged.schema
+        assert as_json(got) == as_json(merged)
+        return got
+
+    store.write(rows(0))
+    assert dict(check().dtypes)["d"] == "date"
+    store.write(rows(1, with_added=True))
+    assert check().columns[-4:] == ["_op", "added", "_commit_time", "d"]
+    store.compact(spark)
+    store.write(rows(2))
+    check()
+    assert store.vacuum(retain_hours=0, now_ms=2**62)
+    check()
+    store.write(rows(3, with_added=True))
+    check()
+    with store._log_lock():
+        log = store._read_log()
+        for c in log:
+            c.pop("schema")
+        store._write_log(log)
+    check(logged=False)

@@ -573,19 +573,36 @@ def test_commit_store_reads_one_window():
 
 
 def test_commit_write_counts_rows_on_the_write():
-    """``CommitStore.write`` runs no count job over the incoming frame:
-    the batch row count is observed on the write's own plan, and the one
-    statistics query (the left-semi count behind ``rows_updated``) takes
-    its commit set from ``self._window(`` like every read does."""
+    """``CommitStore.write`` runs no query for its commit statistics:
+    the batch row count and ``rows_updated`` are both observed on the
+    write's own plan, ``rows_updated`` through an existence join (one
+    correlated ``EXISTS``) against prior keys whose commit set comes
+    from ``self._window(`` like every read's. No count job, no
+    left-semi join."""
     import inspect
 
     from feature_store_api_spark.sources import commit_store
 
     store = commit_store.CommitStore
     write = inspect.getsource(store.write)
-    assert ".count()" not in write
-    assert ".observe(" in write
-    updated = inspect.getsource(store._rows_updated)
-    assert "self._window(" in updated
-    assert updated.count(".count()") == 1
-    assert "left_semi" in updated
+    prior = inspect.getsource(store._prior_keys)
+    assert write.count(".observe(") == 2  # the row count, the tag count
+    assert write.count(".exists()") == 1
+    assert not hasattr(store, "_rows_updated")
+    for src in (write, prior):
+        assert ".count()" not in src
+        assert "left_semi" not in src
+    assert "self._window(" in prior
+
+
+def test_plain_backend_scan_reads_the_logged_schema():
+    """``CommitLogBackend.scan`` builds its reader from the schema the
+    commit log records, falling back to a ``mergeSchema`` footer merge
+    only when the log cannot give one."""
+    import inspect
+
+    from feature_store_api_spark.sources.backend import CommitLogBackend
+
+    scan = inspect.getsource(CommitLogBackend.scan)
+    assert "self._logged_schema()" in scan
+    assert "spark.read.schema(schema)" in scan
