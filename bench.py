@@ -1275,59 +1275,6 @@ def main():
     )
 
 
-# ---------------------------------------------------------------------------
-# APPENDIX — one-time sf1 (on-disk) scaling spot-check, r11
-# ---------------------------------------------------------------------------
-# The x10 harness measures operators over PERSISTED replicated frames,
-# which validates shuffle volume but not file-count / footer-stat
-# behavior at 10x the FILES. r11 ran the three biggest queries once
-# against the same replicas MATERIALIZED to 32 real parquet files each
-# (/tmp/bench_sf1, ~sf1 data volume), 3-run mins on the same box as
-# that session's x10 numbers:
-#
-#   b10 corpus curation  5.07s  (x10 in-memory same session: 4.40)
-#   e4 exact window dedup 5.32s (x10 in-memory same session: 5.42)
-#   b3 upsert+timetravel 4.17s  (x10 same shape: 3.67-4.0 band)
-#
-# Verdict: scaling matched the x10-predicted exponent — the only delta
-# is a bounded +0.5-0.7s cold-scan term where x10 read cached frames
-# (b10), and e4/b3 were flat within the box's noise band. No
-# file-count or footer-stat pathology appeared at 10x the files; the
-# pinned x10 floors extrapolate.
-
-# ---------------------------------------------------------------------------
-# APPENDIX — r12 quiet-box board re-pin (VERDICT r11 #1)
-# ---------------------------------------------------------------------------
-# The r11 board was judged load-contaminated. r12 re-ran the full
-# 5-sample protocol on a measured-idle box (load 0.16 pre-run, 0 user
-# sessions). Findings:
-#
-# 1. SAMPLES ARE CLEAN: tight, monotonically-warming, spike-free
-#    (b4: [1.685, 1.701, 1.481, 1.393, 1.272]) — no co-tenant events.
-# 2. THE THREE CARRIED X10 ITEMS ARE EXONERATED, all back at their
-#    r10 scaling with zero code change to their paths:
-#      e5_semantic_dedup  x10 scaling 1.59  (r10 1.54, r11 4.24)
-#      e7_label_window    x10 scaling 2.32  (r10 1.62, r11 5.23)
-#      e8_negative_sampl. x10 3.43s / 2.04  (r10 2.51s ~2.0, r11 7.77)
-#    The r11 x10 drift was load, as suspected.
-# 3. A UNIFORM SPARK-SIDE MULTIPLIER REMAINS vs the r10 session:
-#    every headline min sits 1.35-1.45x above its r10 min (b3 1.15 vs
-#    0.84, b4 1.27 vs 0.88, b6 0.86 vs 0.61, b8 1.50 vs 1.07) — while
-#    the DuckDB oracle runs AT r10 speed on the same session (b1
-#    oracle 0.051 = r10's 0.051; b6 oracle 0.268 < r10's 0.354). A
-#    uniform multiplier across ALL queries, including paths untouched
-#    since r9, with single-thread DuckDB unchanged, is platform
-#    multicore throughput (a 32-process spin probe measured 0.68
-#    parallel efficiency this session), not a code regression — no
-#    per-query action is available or warranted. Round-over-round
-#    comparisons should normalize by this board, not r10's.
-# 4. b1_scan_filter stayed >2x vs_oracle on the quiet box (min 2.48):
-#    floor-pinned in its docstring (zero-data shape = 0.098s vs whole
-#    DuckDB query 0.051s => ratio floor ~1.9 before data). b2's pinned
-#    floor note stands. b6's ratio (3.5-4.0) is the same multiplier
-#    vs a FASTER oracle sample; its 5M-distinct exact-count floor note
-#    stands.
-
 def prune_ab():
     """One-number quantification of the r14/r15 pruning machinery
     (VERDICT r14 #6): a FeatureView batch-window read over MANAGED

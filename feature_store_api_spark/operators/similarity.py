@@ -4,21 +4,26 @@ Parity surface: ``find_neighbors``
 (``/root/reference/python/hsfs/feature_group.py:2394-2459``,
 ``core/vector_db_client.py:107-200``) with similarity types L2 / cosine
 / dot (``embedding.py:41-43``). The reference delegates to an OpenSearch
-kNN index; here the baseline is exact brute-force top-k inside Spark
-(distance = higher-order-function expression, JVM-side; top-k =
-TakeOrdered, no full sort), and the scale path is a random-hyperplane
-LSH bucketed index that prunes candidates before the exact re-rank.
+kNN index. Here every search runs one core: an index only generates
+candidates, with one widening value — exact search keeps every row, the
+random-hyperplane LSH index the buckets within a Hamming radius of the
+query's, IVF the query's ``nprobe`` nearest cells — and one scorer
+(:func:`_distance_sql`), one top-k (:func:`_top_k`) and one retry loop
+(:func:`_widening_probe`) rank them.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import random
-from typing import List, Optional, Sequence
+from dataclasses import dataclass
+from typing import Callable, List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -27,10 +32,8 @@ from .parallelism import repartition_up
 
 
 def _quote_ident(name: str) -> str:
-    """Backtick-quote an identifier for rendered SQL, escaping embedded
-    backticks by doubling (Spark's quoting rule) — hardening for the
-    day these helpers take raw user strings; FG-sanitized names never
-    contain backticks."""
+    """Backtick-quote an identifier for rendered SQL (embedded backticks
+    doubled, Spark's quoting rule)."""
     return "`" + name.replace("`", "``") + "`"
 
 
@@ -46,52 +49,139 @@ def _norm(a: Column) -> Column:
     )
 
 
-def distance_expr(col, query: Sequence[float], metric: str) -> Column:
-    """Distance/score column. For l2 smaller is better; for cosine/dot
-    we return a *distance-like* value (negated similarity) so ordering
-    is uniformly ascending.
+def _literal_array(values: Sequence[float]) -> str:
+    return "array(" + ", ".join(f"{float(v)!r}D" for v in values) + ")"
 
-    ``col`` may be a column NAME (preferred: the whole expression —
-    including the dim query literals — renders as ONE SQL string parsed
-    server-side instead of ~dim py4j round trips per probe) or a Column
-    (legacy callers; falls back to the object formulation)."""
-    if isinstance(col, str):
-        c = _quote_ident(col)
-        arr = "array(" + ", ".join(f"{float(v)!r}D" for v in query) + ")"
-        if metric == "l2":
-            return F.expr(
-                f"sqrt(aggregate(zip_with({c}, {arr}, "
-                "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x))"
-            )
-        if metric == "cosine":
-            qn = sum(float(v) * float(v) for v in query) ** 0.5
-            dot = (
-                f"aggregate(zip_with({c}, {arr}, (x, y) -> x * y), "
-                "0.0D, (acc, x) -> acc + x)"
-            )
-            nrm = f"sqrt(aggregate({c}, 0.0D, (acc, x) -> acc + x * x))"
-            return F.expr(f"-({dot} / ({nrm} * {float(qn)!r}D))")
-        if metric == "dot":
-            return F.expr(
-                f"-aggregate(zip_with({c}, {arr}, (x, y) -> x * y), "
-                "0.0D, (acc, x) -> acc + x)"
-            )
-        raise ValueError(f"Unknown similarity metric {metric!r}")
-    q = F.array(*[F.lit(float(v)) for v in query])
+
+def _argmin_sql(scores: Sequence[str]) -> str:
+    """Index of the smallest of the SQL ``scores``, ties to the smaller
+    index (a struct ``array_min``): the one nearest-centroid assignment
+    of IVF cells and PQ codes, scan-side."""
+    structs = ", ".join(f"struct({s} as d, {i} as c)" for i, s in enumerate(scores))
+    return f"array_min(array({structs})).c"
+
+
+def _zip_sum_sql(a: str, b: str, term: str) -> str:
+    """SQL ``Σ term(x, y)`` over two arrays: a left fold from 0.0D, the
+    float operation order every distance and signature here shares."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {term}), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def _vector_norm(vec: Sequence[float]) -> float:
+    # same left-to-right summation order as the JVM fold
+    return sum(float(x) * float(x) for x in vec) ** 0.5
+
+
+def _distance_sql(metric: str, col: str, query, query_norms=()) -> str:
+    """The one scorer, rendered as ONE SQL string parsed server-side
+    (Column objects would cost ~dim py4j round trips per probe). Smaller
+    is nearer: cosine and dot are NEGATED similarities. ``query`` is a
+    literal vector, or None for the joined batch columns ``__qv``,
+    ``__qn`` (its norm; ``query_norms`` lists them all) and ``__vnorm``
+    (the row norm, folded before the join). Under cosine a zero-norm row
+    scores NULL — never similar, as in :func:`semantic_dedup` — and a
+    zero query raises ValueError before any job runs."""
+    v = _quote_ident(col)
+    if query is not None:
+        query_norms = [_vector_norm(query)]
+        vn = f"sqrt(aggregate({v}, 0.0D, (acc, x) -> acc + x * x))"
+        q, qn = _literal_array(query), f"{query_norms[0]!r}D"
+    else:
+        q, vn, qn = "`__qv`", "`__vnorm`", "`__qn`"
     if metric == "l2":
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(col, q, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
+        return f"sqrt({_zip_sum_sql(v, q, '(x - y) * (x - y)')})"
     if metric == "cosine":
-        qn = sum(float(v) * float(v) for v in query) ** 0.5
-        return -(_dot(col, q) / (_norm(col) * F.lit(qn)))
+        if 0.0 in query_norms:
+            raise ValueError("cosine distance to a zero query vector is undefined")
+        return f"-try_divide({_zip_sum_sql(v, q, 'x * y')}, {vn} * {qn})"
     if metric == "dot":
-        return -_dot(col, q)
+        return f"-{_zip_sum_sql(v, q, 'x * y')}"
     raise ValueError(f"Unknown similarity metric {metric!r}")
+
+
+def distance_expr(col: str, query: Sequence[float], metric: str) -> Column:
+    """Distance of the vectors in column ``col`` (a NAME) to a literal
+    query: smaller is nearer for l2, cosine and dot alike."""
+    return F.expr(_distance_sql(metric, col, query))
+
+
+def _scored(df, query, col, metric, where=None, filter=None) -> DataFrame:
+    """A literal query's candidates (index predicate ``where``, then the
+    caller's ``filter``) with their ``distance``."""
+    dist = distance_expr(col, query, metric)
+    cand = df if where is None else df.where(where)
+    if filter is not None:
+        cand = cand.where(filter)
+    return cand.withColumn("distance", F.round(dist.cast("double"), 6))
+
+
+def _top_k(scored: DataFrame, k: int, drop=(), per_query=False) -> DataFrame:
+    """The one top-k: nearest first, NULL distances last, ties on the
+    first index column, the index's internal ``drop`` columns removed.
+    One literal query is ``orderBy().limit()`` — TakeOrderedAndProject,
+    no shuffle; a batch is a row_number window per ``query_id``, one
+    shuffle for all queries (a single query as a batch of one would put
+    a broadcast join and a shuffle on every serving probe)."""
+    order = [F.col("distance").asc_nulls_last()] + [
+        F.col(c).asc() for c in scored.columns if c not in drop
+    ][:1]
+    if per_query:
+        w = Window.partitionBy("query_id").orderBy(*order)
+        ranked = scored.withColumn("rank", F.row_number().over(w))
+        return ranked.where(F.col("rank") <= k).drop(*drop)
+    return scored.orderBy(*order).limit(k).drop(*drop)
+
+
+def _widening_probe(
+    df, query, col, k, metric, where: Callable[[int], Column], width: int,
+    cap: int, filter, drop,
+) -> DataFrame:
+    """The one k-limit retry loop (parity: the reference widens and
+    re-queries when filters starve the result set,
+    ``core/vector_db_client.py:107-200``): while the filtered probe
+    ``where(width)`` yields <k rows, double the widening value up to
+    ``cap``, where every row qualifies — never silently fewer than
+    min(k, |matching rows|). One scan per probe: the count materializes
+    the persisted candidates, the top-k is collected from that cache,
+    and the cache is freed (a persisted frame stays in the CacheManager
+    for the session, so returning it would leak one entry per call)."""
+    while True:
+        scored = _scored(df, query, col, metric, where(width), filter).persist()
+        n = scored.count()
+        if width >= cap or n >= k:
+            out = _top_k(scored, k, drop)
+            rows, schema = out.collect(), out.schema
+            scored.unpersist()
+            return df.sparkSession.createDataFrame(rows, schema)
+        scored.unpersist()
+        width = min(cap, max(2 * width, width + 1))
+
+
+def _batch_probe(df, queries, col, k, metric, key_ddl, on, drop) -> DataFrame:
+    """M queries ``[(query_id, candidate key, vector)]`` in ONE plan: the
+    tiny query frame (key column ``key_ddl``) is broadcast into the
+    candidate join ``on``, then the per-query top-k — one index scan and
+    one shuffle instead of M scans. Returns (query_id, <index columns>,
+    distance, rank)."""
+    vecs = [[float(v) for v in vec] for _, _, vec in queries]
+    norms = [_vector_norm(v) for v in vecs]
+    dist = F.expr(_distance_sql(metric, col, None, norms))
+    qdf = df.sparkSession.createDataFrame(
+        [(q[0], q[1], v, n) for q, v, n in zip(queries, vecs, norms)],
+        f"query_id string, {key_ddl}, __qv array<double>, __qn double",
+    )
+    # the row norm is query-independent: fold it once per index row, not
+    # once per (row x query) pair; l2 and dot never read it, and column
+    # pruning drops it from their plans
+    base = df.withColumn("__vnorm", _norm(F.col(col)))
+    scored = base.join(F.broadcast(qdf), on).withColumn(
+        "distance", F.round(dist.cast("double"), 6)
+    )
+    drop = [*drop, *qdf.columns[1:], "__vnorm"]
+    return _top_k(scored, k, drop, per_query=True)
 
 
 def find_neighbors(
@@ -102,7 +192,7 @@ def find_neighbors(
     filter=None,
     metric: str = "l2",
 ) -> DataFrame:
-    """Exact brute-force kNN: one scan, distance expression, top-k.
+    """Exact brute-force kNN: every row is a candidate.
 
     ``source`` is a DataFrame or FeatureGroup; ``filter`` (a Filter /
     Logic / Column) is applied BEFORE the top-k, mirroring the
@@ -111,27 +201,17 @@ def find_neighbors(
     """
     from ..feature_group import FeatureGroupBase
 
+    df = source
     if isinstance(source, FeatureGroupBase):
         from ..session import get_spark
 
         df = source.read_source(get_spark())
-        col = col or next(
-            f.name for f in df.schema.fields if str(f.dataType).startswith("ArrayType")
-        )
-    else:
-        df = source
-        if col is None:
-            col = next(
-                f.name for f in df.schema.fields if str(f.dataType).startswith("ArrayType")
-            )
-    if filter is not None:
-        if isinstance(filter, Column):
-            df = df.where(filter)
-        else:
-            df = df.where(filters_to_column(normalize_filters(filter)))
-    dist = distance_expr(col, embedding, metric)
-    scored = df.withColumn("distance", F.round(dist.cast("double"), 6))
-    return scored.orderBy(F.col("distance").asc()).limit(k)
+    col = col or next(
+        f.name for f in df.schema.fields if str(f.dataType).startswith("ArrayType")
+    )
+    if filter is not None and not isinstance(filter, Column):
+        filter = filters_to_column(normalize_filters(filter))
+    return _top_k(_scored(df, embedding, col, metric, filter=filter), k)
 
 
 # ---------------------------------------------------------------------------
@@ -150,17 +230,12 @@ def signature_sql(col_name: str, planes: List[List[float]]) -> str:
     packed into a long. Rendered as ONE string parsed server-side —
     the Column-object formulation cost dim × num_planes py4j round
     trips (~0.8 s of pure driver time per index build at 64×12; see the
-    plan-build note in operators/dedup.py). Math is identical to the
-    old Column form: zip_with multiply, left-fold add from 0.0D,
-    if(dot >= 0, 1<<i, 0) summed."""
-    bits = []
-    for i, p in enumerate(planes):
-        arr = ", ".join(f"{float(v)!r}D" for v in p)
-        dot = (
-            f"aggregate(zip_with({_quote_ident(col_name)}, array({arr}), "
-            "(x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-        )
-        bits.append(f"if({dot} >= 0, {1 << i}, 0)")
+    plan-build note in operators/dedup.py)."""
+    c = _quote_ident(col_name)
+    bits = [
+        f"if({_zip_sum_sql(c, _literal_array(p), 'x * y')} >= 0, {1 << i}, 0)"
+        for i, p in enumerate(planes)
+    ]
     return f"cast(({' + '.join(bits)}) as bigint)"
 
 
@@ -180,44 +255,63 @@ def build_ann_index(
     return df.withColumn("__bucket", signature_expr(col, planes))
 
 
+def _qsig(embedding: Sequence[float], num_planes: int, seed: int) -> int:
+    planes = _hyperplanes(len(embedding), num_planes, seed)
+    qsig = 0
+    for i, p in enumerate(planes):
+        if sum(a * b for a, b in zip(embedding, p)) >= 0:
+            qsig |= 1 << i
+    return qsig
+
+
+def _hamming(qsig: Column, radius: int) -> Column:
+    """LSH candidates: the bucket is within ``radius`` bits of the query
+    signature. Evaluated at the scan, so on a bucket-partitioned index
+    only candidate files are read."""
+    return F.bit_count(F.col("__bucket").bitwiseXOR(qsig)) <= radius
+
+
+def _write_index(df: DataFrame, part: str, path: str, mode: str, meta: dict) -> None:
+    """The one persisted-index format: partitioned by the candidate
+    column ``part`` (``__bucket`` or ``__cell``), so a probe's candidate
+    predicate prunes directories at the scan, plus one JSON sidecar with
+    that column, its type and the driver-side probe state."""
+    df.write.partitionBy(part).mode(mode).parquet(path)
+    meta = {"partition": part, "type": df.schema[part].dataType.simpleString(), **meta}
+    with open(os.path.join(path, "_index.json"), "w") as fh:
+        json.dump(meta, fh)
+
+
+def _read_index(spark, path: str):
+    """``(df, sidecar)`` of a persisted index; the partition column is
+    cast back to its built type so probe predicates type-match."""
+    with open(os.path.join(path, "_index.json")) as fh:
+        meta = json.load(fh)
+    part = meta["partition"]
+    df = spark.read.parquet(path).withColumn(part, F.col(part).cast(meta["type"]))
+    return df, meta
+
+
 def write_ann_index(index_df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Materialize an LSH index partitioned by ``__bucket`` — the 100 TB
-    layout the probe functions are designed for: the Hamming-radius
-    bucket predicate becomes DIRECTORY-level partition pruning at the
-    scan (asserted in tests/test_similarity.py), so a probe reads only
-    candidate buckets instead of the full index."""
-    index_df.write.partitionBy("__bucket").mode(mode).parquet(path)
+    """Materialize an LSH index partitioned by ``__bucket``: a probe
+    reads only its candidate buckets (asserted in
+    tests/test_similarity.py)."""
+    _write_index(index_df, "__bucket", path, mode, {})
 
 
 def read_ann_index(spark, path: str) -> DataFrame:
-    """Load a persisted LSH index. ``__bucket`` comes back as a
-    partition column; cast to long so the probes' bitwise expressions
-    type-match the in-memory index."""
-    df = spark.read.parquet(path)
-    return df.withColumn("__bucket", F.col("__bucket").cast("long"))
+    return _read_index(spark, path)[0]
 
 
 def write_ivf_index(index: "IvfIndex", path: str, mode: str = "overwrite") -> None:
     """Materialize an IVF index partitioned by ``__cell`` (probes prune
-    to the nprobe nearest cell directories) plus a centroid sidecar."""
-    import json
-    import os
-
-    index.df.write.partitionBy("__cell").mode(mode).parquet(path)
-    with open(os.path.join(path, "_centroids.json"), "w") as fh:
-        json.dump(index.centroids, fh)
+    to the nprobe nearest cell directories) with its centroids."""
+    _write_index(index.df, "__cell", path, mode, {"centroids": index.centroids})
 
 
 def read_ivf_index(spark, path: str) -> "IvfIndex":
-    import json
-    import os
-
-    df = spark.read.parquet(path).withColumn(
-        "__cell", F.col("__cell").cast("int")
-    )
-    with open(os.path.join(path, "_centroids.json")) as fh:
-        centroids = json.load(fh)
-    return IvfIndex(df, centroids)
+    df, meta = _read_index(spark, path)
+    return IvfIndex(df, meta["centroids"])
 
 
 def find_neighbors_ann(
@@ -230,25 +324,10 @@ def find_neighbors_ann(
     seed: int = 7,
     max_hamming: int = 2,
 ) -> DataFrame:
-    """Probe the LSH index: keep rows whose bucket is within
-    ``max_hamming`` bits of the query bucket, then exact re-rank. The
-    bucket predicate uses ``bit_count(xor)`` — evaluated at the scan, so
-    with a bucket-partitioned index only candidate files are read."""
-    planes = _hyperplanes(len(embedding), num_planes, seed)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if sum(a * b for a, b in zip(embedding, p)) >= 0:
-            qsig |= 1 << i
-    cand = index_df.where(
-        F.bit_count(F.col("__bucket").bitwiseXOR(F.lit(qsig))) <= max_hamming
-    )
-    dist = distance_expr(col, embedding, metric)
-    return (
-        cand.withColumn("distance", F.round(dist.cast("double"), 6))
-        .orderBy(F.col("distance").asc())
-        .limit(k)
-        .drop("__bucket")
-    )
+    """Probe the LSH index: rows whose bucket is within ``max_hamming``
+    bits of the query bucket, exact re-rank."""
+    where = _hamming(F.lit(_qsig(embedding, num_planes, seed)), max_hamming)
+    return _top_k(_scored(index_df, embedding, col, metric, where), k, ["__bucket"])
 
 
 def find_neighbors_ann_retry(
@@ -262,46 +341,15 @@ def find_neighbors_ann_retry(
     max_hamming: int = 2,
     filter: Optional[Column] = None,
 ) -> DataFrame:
-    """ANN probe with k-limit retry (parity: the reference widens k and
-    re-queries when filters starve the result set,
-    ``core/vector_db_client.py:107-200``). Here the widening knob is the
-    Hamming radius: if the (optionally filtered) probe yields <k rows,
-    double the radius and re-probe; at radius = num_planes every bucket
-    qualifies, so the final fallback is exact brute force over the
-    filter — never silently fewer than min(k, |matching rows|).
-
-    Each retry is one more pruned probe (cheap with a bucket-partitioned
-    index); retries only happen when the thin-bucket case actually
-    occurs, so the common path stays single-probe. The convergence check
-    persists the scored candidate frame and counts THAT — one scan total:
-    the returned top-k reads the cached candidates, so the caller's
-    action does not re-run the probe (the candidate set is small by
-    construction — that is what the bucket pruning is for)."""
-    qsig = _qsig(embedding, num_planes, seed)
-    h = max_hamming
-    while True:
-        cand = index_df.where(
-            F.bit_count(F.col("__bucket").bitwiseXOR(F.lit(qsig))) <= h
-        )
-        if filter is not None:
-            cand = cand.where(filter)
-        dist = distance_expr(col, embedding, metric)
-        scored = cand.withColumn(
-            "distance", F.round(dist.cast("double"), 6)
-        ).persist()
-        n = scored.count()  # the ONE probe scan; materializes the cache
-        if h >= num_planes or n >= k:
-            # Materialize the k rows from the cache, then free it —
-            # persist() registers in Spark's CacheManager and is NOT
-            # GC-freed, so returning the cached frame would leak one
-            # cache entry per serving call. k is small (a serving
-            # top-k), so a driver-side localized result is cheap.
-            out = scored.orderBy(F.col("distance").asc()).limit(k).drop("__bucket")
-            rows, schema = out.collect(), out.schema
-            scored.unpersist()
-            return index_df.sparkSession.createDataFrame(rows, schema)
-        scored.unpersist()
-        h = min(num_planes, max(h * 2, h + 1))
+    """LSH probe with k-limit retry: the Hamming radius doubles from
+    ``max_hamming`` up to ``num_planes`` (every bucket: exact search
+    over the filter). Retries only happen when a filter starves the
+    buckets, so the common path stays single-probe."""
+    qsig = F.lit(_qsig(embedding, num_planes, seed))
+    return _widening_probe(
+        index_df, embedding, col, k, metric, lambda h: _hamming(qsig, h),
+        max_hamming, num_planes, filter, ["__bucket"],
+    )
 
 
 def find_neighbors_batch(
@@ -314,75 +362,15 @@ def find_neighbors_batch(
     seed: int = 7,
     max_hamming: int = 2,
 ) -> DataFrame:
-    """Batch ANN: score M query vectors against the LSH index in ONE
-    plan (the bulk-scoring / batch-serving pattern — M sequential
-    probes would scan the index M times).
-
-    ``queries`` = [(query_id, vector), ...]. The query frame (tiny: M
-    rows of id + signature + vector) is broadcast; candidates survive
-    the per-query Hamming bucket predicate; the exact re-rank is a
-    row_number window per query_id ordered by (distance, row id) — one
-    scan of the index, one shuffle on query_id, results for all M
-    probes. Returns (query_id, <index columns>, distance, rank).
-    """
-    from pyspark.sql import Window
-
-    spark = index_df.sparkSession
-    rows = []
-    for qid, vec in queries:
-        vec = [float(v) for v in vec]
-        # query norm driver-side, same left-to-right summation order as
-        # the JVM fold it replaces — bit-identical doubles
-        qn = sum(x * x for x in vec) ** 0.5
-        rows.append((qid, _qsig(vec, num_planes, seed), vec, qn))
-    qdf = spark.createDataFrame(
-        rows, "query_id string, __qsig long, __qv array<double>, __qn double"
+    """Batch LSH probe of ``queries`` = [(query_id, vector), ...] in ONE
+    plan: candidates pass each query's Hamming bucket predicate.
+    Returns (query_id, <index columns>, distance, rank)."""
+    return _batch_probe(
+        index_df,
+        [(qid, _qsig(vec, num_planes, seed), vec) for qid, vec in queries],
+        col, k, metric, "__qsig long",
+        _hamming(F.col("__qsig"), max_hamming), ["__bucket"],
     )
-    base = index_df
-    if metric == "cosine":
-        # the row's own norm is query-independent: fold it ONCE per
-        # index row before the join instead of once per surviving
-        # (row x query) pair (r15; same expression, same value)
-        base = base.withColumn("__vnorm", _norm(F.col(col)))
-    cand = base.join(
-        F.broadcast(qdf),
-        F.bit_count(F.col("__bucket").bitwiseXOR(F.col("__qsig"))) <= max_hamming,
-    )
-    v = F.col(col)
-    qv = F.col("__qv")
-    if metric == "l2":
-        dist = F.sqrt(
-            F.aggregate(
-                F.zip_with(v, qv, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    elif metric == "cosine":
-        dist = -(_dot(v, qv) / (F.col("__vnorm") * F.col("__qn")))
-    elif metric == "dot":
-        dist = -_dot(v, qv)
-    else:
-        raise ValueError(f"Unknown similarity metric {metric!r}")
-    scored = cand.withColumn("distance", F.round(dist.cast("double"), 6))
-    order = [F.col("distance").asc()] + [
-        F.col(c).asc() for c in index_df.columns if c != "__bucket"
-    ][:1]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .drop("__bucket", "__qsig", "__qv", "__qn", "__vnorm")
-    )
-
-
-def _qsig(embedding: Sequence[float], num_planes: int, seed: int) -> int:
-    planes = _hyperplanes(len(embedding), num_planes, seed)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if sum(a * b for a, b in zip(embedding, p)) >= 0:
-            qsig |= 1 << i
-    return qsig
 
 
 def embedding_cosine_dup_pairs(
@@ -405,22 +393,22 @@ def embedding_cosine_dup_pairs(
         for t in range(num_tables)
     )
     # the row norm is pair-independent: fold it once per (row, table)
-    # before the self-join instead of twice per candidate pair (r15;
-    # identical expression, identical value)
+    # before the self-join instead of twice per candidate pair
     idx = df.select(
         id_col, col, _norm(F.col(col)).alias("__vn")
     ).withColumn("__bucket", F.expr(f"explode(array({structs}))"))
-    a = idx.select(
-        F.col(id_col).alias("id_a"), F.col(col).alias("__va"),
-        F.col("__vn").alias("__na"), F.col("__bucket"),
-    )
-    b = idx.select(
-        F.col(id_col).alias("id_b"), F.col(col).alias("__vb"),
-        F.col("__vn").alias("__nb"), F.col("__bucket"),
+    a, b = (
+        idx.select(
+            F.col(id_col).alias(f"id_{s}"), F.col(col).alias(f"__v{s}"),
+            F.col("__vn").alias(f"__n{s}"), F.col("__bucket"),
+        )
+        for s in "ab"
     )
     pairs = a.join(b, on="__bucket").where(F.col("id_a") < F.col("id_b"))
-    cos = _dot(F.col("__va"), F.col("__vb")) / (
-        F.col("__na") * F.col("__nb")
+    # a zero vector shares every bucket with another zero vector; its
+    # cosine is NULL (never a duplicate) instead of a divide-by-zero
+    cos = F.try_divide(
+        _dot(F.col("__va"), F.col("__vb")), F.col("__na") * F.col("__nb")
     )
     return (
         pairs.withColumn("cosine", F.round(cos.cast("double"), 6))
@@ -446,26 +434,39 @@ def index_count(df: DataFrame) -> int:
 # IVF-Flat index — the second ANN scale path (alongside hyperplane LSH)
 # ---------------------------------------------------------------------------
 
+@dataclass(eq=False)
 class IvfIndex:
     """An inverted-file (IVF-Flat) index: ``df`` carries a ``__cell``
     column (nearest-centroid id); ``centroids`` is the small coarse
     quantizer, kept driver-side for probe planning."""
 
-    def __init__(self, df: DataFrame, centroids: List[List[float]]) -> None:
-        self.df = df
-        self.centroids = centroids
+    df: DataFrame
+    centroids: List[List[float]]
 
 
 def _assign_cell_expr(col: str, centroids: List[List[float]]) -> Column:
-    """argmin over centroids of ``|c|² − 2·v·c`` (the ``|v|²`` term is
-    common to all cells) — each dot product a JVM fold against a
-    literal array, ties broken by centroid index."""
-    scored = []
-    for i, c in enumerate(centroids):
-        norm2 = sum(x * x for x in c)
-        score = F.lit(norm2) - 2.0 * _dot(F.col(col), F.array(*[F.lit(x) for x in c]))
-        scored.append(F.struct(score.alias("d"), F.lit(i).alias("cell")))
-    return F.array_min(F.array(*scored)).getField("cell")
+    """Nearest centroid by ``|c|² − 2·v·c`` (the ``|v|²`` term is common
+    to all cells), ties by centroid index."""
+    v = _quote_ident(col)
+    return F.expr(_argmin_sql([
+        f"{sum(x * x for x in c)!r}D - "
+        f"{_zip_sum_sql(v, _literal_array(c), 'x * y')} * 2.0D"
+        for c in centroids
+    ]))
+
+
+def _cell_means(exploded: DataFrame, keys: List[str]) -> dict:
+    """One Lloyd mean step over ``exploded`` = (``keys``, ``__p``,
+    ``__x``): each cell's element-wise mean in ONE groupBy (the shuffle
+    carries cells × dim aggregated rows), collected driver-side as
+    ``{key tuple: means by position}``. Means round to 9 dp so float
+    summation order cannot perturb the next assignment."""
+    got: dict = {}
+    for r in exploded.groupBy(*keys, "__p").agg(
+        F.round(F.avg("__x"), 9).alias("__m")
+    ).collect():
+        got.setdefault(tuple(r[k] for k in keys), {})[r["__p"]] = float(r["__m"])
+    return {key: [m[p] for p in range(len(m))] for key, m in got.items()}
 
 
 def build_ivf_index(
@@ -476,24 +477,13 @@ def build_ivf_index(
     kmeans_iterations: int = 0,
 ) -> IvfIndex:
     """IVF-Flat build. The coarse quantizer starts from a DETERMINISTIC
-    sample — the vectors with the smallest ids — fully reproducible
-    across engines and runs (an oracle can re-derive it).
-
-    ``kmeans_iterations > 0`` adds that many Lloyd refinement rounds as
-    DataFrame aggregations: re-assign every vector to its nearest
-    centroid (scan-side argmin, no shuffle), then recompute each
-    centroid as the element-wise mean of its cell via ``posexplode`` →
-    ``groupBy(cell, pos).avg`` — one shuffle carrying
-    ``num_centroids × dim`` aggregated rows, collected driver-side
-    (tiny). Means are rounded to 9 dp so float summation order cannot
-    perturb assignments — the refinement stays deterministic given the
-    seed sample. On clustered real-world embedding distributions the
-    first-N seeds give unbalanced Voronoi cells (fat cells defeat
-    nprobe pruning); 2-3 Lloyd rounds restore balanced cells and
-    measurably better recall@k (see tests/test_similarity.py).
-
-    Assignment is scan-side; write ``df`` partitioned by ``__cell``
-    and a probe reads only ``nprobe`` directories.
+    sample — the vectors with the smallest ids — so an oracle can
+    re-derive it. ``kmeans_iterations`` Lloyd rounds then re-assign every
+    vector scan-side and move each centroid to its cell's mean
+    (:func:`_cell_means`): on clustered embeddings the first-N seeds give
+    fat cells that defeat nprobe pruning, and 2-3 rounds measurably
+    restore recall@k (tests/test_similarity.py). Write ``df``
+    partitioned by ``__cell`` and a probe reads ``nprobe`` directories.
     """
     cents = [
         [float(x) for x in r[1]]
@@ -506,20 +496,30 @@ def build_ivf_index(
             _assign_cell_expr(col, cents).alias("__cell"),
             F.col(col).alias("__v"),
         ).select("__cell", F.posexplode("__v").alias("__p", "__x"))
-        means = (
-            assigned.groupBy("__cell", "__p")
-            .agg(F.round(F.avg("__x"), 9).alias("__m"))
-            .collect()
-        )
-        by_cell: dict = {}
-        for r in means:
-            by_cell.setdefault(r["__cell"], {})[r["__p"]] = float(r["__m"])
-        cents = [
-            [by_cell[i][p] for p in range(len(c))] if i in by_cell else c
-            for i, c in enumerate(cents)
-        ]
+        means = _cell_means(assigned, ["__cell"])
+        cents = [means.get((i,), c) for i, c in enumerate(cents)]
     out = df.withColumn("__cell", _assign_cell_expr(col, cents))
     return IvfIndex(out, cents)
+
+
+def _nearest_cells(centroids: List[List[float]], embedding) -> List[int]:
+    """Cell ids nearest-first by ``|c|² − 2 q·c`` (``|q|²`` is common to
+    all cells), ties by cell id: the one cell ranking of IVF and IVF-PQ
+    probes, driver-side (|centroids| is tiny)."""
+
+    def d2(c):
+        return sum(x * x for x in c) - 2.0 * sum(
+            a * b for a, b in zip(embedding, c)
+        )
+
+    return sorted(range(len(centroids)), key=lambda i: (d2(centroids[i]), i))
+
+
+def _ivf_where(centroids, embedding) -> Callable[[int], Column]:
+    """IVF candidates: the ``nprobe`` cells nearest the query (partition
+    pruning on a ``__cell``-partitioned index)."""
+    cells = _nearest_cells(centroids, embedding)
+    return lambda nprobe: F.col("__cell").isin(cells[:nprobe])
 
 
 def find_neighbors_ivf(
@@ -531,44 +531,12 @@ def find_neighbors_ivf(
     metric: str = "cosine",
     filter: Optional[Column] = None,
 ) -> DataFrame:
-    """Probe the IVF index: rank cells by centroid distance to the
-    query (driver-side, |centroids| is tiny), scan only the ``nprobe``
-    nearest cells, exact re-rank inside them. With a ``__cell``-
-    partitioned index the cell predicate is partition pruning."""
-    return (
-        _ivf_candidates(index, embedding, col, nprobe, metric, filter)
-        .orderBy(F.col("distance").asc())
-        .limit(k)
-        .drop("__cell")
+    """Probe the IVF index: scan only the ``nprobe`` cells nearest the
+    query, exact re-rank inside them."""
+    where = _ivf_where(index.centroids, embedding)(nprobe)
+    return _top_k(
+        _scored(index.df, embedding, col, metric, where, filter), k, ["__cell"]
     )
-
-
-def _ivf_candidates(
-    index: "IvfIndex",
-    embedding: Sequence[float],
-    col: str,
-    nprobe: int,
-    metric: str,
-    filter: Optional[Column],
-) -> DataFrame:
-    """Scored candidate frame of one IVF probe (pre-top-k): the
-    ``nprobe`` nearest cells by driver-side centroid ranking, the
-    optional filter, and the exact distance column."""
-
-    def d2(c):
-        return sum(x * x for x in c) - 2.0 * sum(
-            a * b for a, b in zip(embedding, c)
-        )
-
-    order = sorted(
-        range(len(index.centroids)), key=lambda i: (d2(index.centroids[i]), i)
-    )
-    cells = order[:nprobe]
-    cand = index.df.where(F.col("__cell").isin(cells))
-    if filter is not None:
-        cand = cand.where(filter)
-    dist = distance_expr(col, embedding, metric)
-    return cand.withColumn("distance", F.round(dist.cast("double"), 6))
 
 
 def find_neighbors_ivf_batch(
@@ -579,63 +547,13 @@ def find_neighbors_ivf_batch(
     nprobe: int = 4,
     metric: str = "cosine",
 ) -> DataFrame:
-    """Batch IVF probe: M query vectors in ONE plan. Cell ranking per
-    query happens driver-side (|centroids| tiny); the broadcast query
-    frame carries each query's probe-cell list, candidates survive an
-    ``array_contains`` on their cell, and the exact re-rank is a
-    row_number window per query_id — one index scan for all probes."""
-    from pyspark.sql import Window
-
-    spark = index.df.sparkSession
-
-    def d2(c, q):
-        return sum(x * x for x in c) - 2.0 * sum(a * b for a, b in zip(q, c))
-
-    rows = []
-    for qid, vec in queries:
-        order = sorted(
-            range(len(index.centroids)),
-            key=lambda i: (d2(index.centroids[i], vec), i),
-        )
-        vec = [float(v) for v in vec]
-        qn = sum(x * x for x in vec) ** 0.5
-        rows.append((qid, order[:nprobe], vec, qn))
-    qdf = spark.createDataFrame(
-        rows, "query_id string, __cells array<int>, __qv array<double>, "
-        "__qn double"
-    )
-    base = index.df
-    if metric == "cosine":
-        # query-independent row norm folded once per row, not once per
-        # (row x query) pair (r15; identical value, same op order)
-        base = base.withColumn("__vnorm", _norm(F.col(col)))
-    cand = base.join(
-        F.broadcast(qdf), F.array_contains(F.col("__cells"), F.col("__cell"))
-    )
-    v, qv = F.col(col), F.col("__qv")
-    if metric == "l2":
-        dist = F.sqrt(
-            F.aggregate(
-                F.zip_with(v, qv, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    elif metric == "cosine":
-        dist = -(_dot(v, qv) / (F.col("__vnorm") * F.col("__qn")))
-    elif metric == "dot":
-        dist = -_dot(v, qv)
-    else:
-        raise ValueError(f"Unknown similarity metric {metric!r}")
-    scored = cand.withColumn("distance", F.round(dist.cast("double"), 6))
-    first_id = [c for c in index.df.columns if c != "__cell"][:1]
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), *[F.col(c).asc() for c in first_id]
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .drop("__cell", "__cells", "__qv", "__qn", "__vnorm")
+    """Batch IVF probe in ONE plan: the broadcast query frame carries
+    each query's probe-cell list; candidates pass an ``array_contains``
+    on their cell."""
+    cells = [(q, _nearest_cells(index.centroids, v)[:nprobe], v) for q, v in queries]
+    return _batch_probe(
+        index.df, cells, col, k, metric, "__cells array<int>",
+        F.array_contains(F.col("__cells"), F.col("__cell")), ["__cell"],
     )
 
 
@@ -648,31 +566,14 @@ def find_neighbors_ivf_retry(
     metric: str = "cosine",
     filter: Optional[Column] = None,
 ) -> DataFrame:
-    """IVF probe with k-limit retry: when the (optionally filtered)
-    probe returns <k rows, double ``nprobe`` and re-probe; at
-    nprobe = |centroids| the scan is exhaustive, so the result is never
-    silently short (parity ``core/vector_db_client.py:107-200``).
-
-    Like :func:`find_neighbors_ann_retry`, the convergence check counts
-    a persisted scored-candidate frame — ONE scan per probe, and the
-    returned top-k reads the cache instead of re-running it."""
-    n = nprobe
-    total = len(index.centroids)
-    while True:
-        scored = _ivf_candidates(
-            index, embedding, col, nprobe=n, metric=metric, filter=filter
-        ).persist()
-        cnt = scored.count()  # the ONE probe scan; materializes the cache
-        if n >= total or cnt >= k:
-            # As in find_neighbors_ann_retry: localize the k rows, then
-            # unpersist — otherwise every serving call leaks a
-            # CacheManager entry for the session lifetime.
-            out = scored.orderBy(F.col("distance").asc()).limit(k).drop("__cell")
-            rows, schema = out.collect(), out.schema
-            scored.unpersist()
-            return index.df.sparkSession.createDataFrame(rows, schema)
-        scored.unpersist()
-        n = min(total, n * 2)
+    """IVF probe with k-limit retry: ``nprobe`` doubles up to
+    |centroids| (an exhaustive scan), so the result is never silently
+    short."""
+    return _widening_probe(
+        index.df, embedding, col, k, metric,
+        _ivf_where(index.centroids, embedding), nprobe, len(index.centroids),
+        filter, ["__cell"],
+    )
 
 
 def normalize_embeddings(df: DataFrame, col: str, out_col: Optional[str] = None) -> DataFrame:
@@ -681,20 +582,19 @@ def normalize_embeddings(df: DataFrame, col: str, out_col: Optional[str] = None)
     transform per row, scan-side, zero Python. Zero vectors pass
     through unchanged (no divide-by-zero NaNs). Values round to 6 dp so
     the result is engine-portable."""
-    out_col = out_col or col
     c = F.col(col)
     norm = _norm(c)
-    normalized = F.when(
-        norm == 0, c
-    ).otherwise(F.transform(c, lambda x: F.round(x / norm, 6)))
-    return df.withColumn(out_col, normalized)
+    normalized = F.when(norm == 0, c).otherwise(
+        F.transform(c, lambda x: F.round(x / norm, 6))
+    )
+    return df.withColumn(out_col or col, normalized)
 
 
 def group_centroids(
     df: DataFrame, group_col: str, col: str, out_col: str = "centroid"
 ) -> DataFrame:
     """Element-wise mean embedding per group (cluster summaries, class
-    prototypes, IVF refinement): ``posexplode`` → one
+    prototypes): ``posexplode`` → one
     ``groupBy(group, position).avg`` with map-side partial aggregation
     (the shuffle carries ``groups × dim`` aggregated rows, not
     vectors) → per-group reassembly ordered by position. Returns
@@ -730,11 +630,8 @@ def quantization_params(df: DataFrame, col: str) -> List[dict]:
     )
     if not rows:
         return []
-    # Size by the max observed position, not len(rows): with ragged
-    # embedding arrays a middle dimension can be missing entirely, and
-    # indexing by position into a len(rows) list would IndexError (or
-    # leave a None that crashes quantize_embeddings later). Missing
-    # positions are an inconsistent-dimension corpus — fail loudly.
+    # size by the max observed position: ragged arrays can miss a middle
+    # dimension entirely, an inconsistent corpus that must fail loudly
     params = [None] * (max(r["__p"] for r in rows) + 1)
     for r in rows:
         lo, hi = float(r["lo"]), float(r["hi"])
@@ -759,42 +656,33 @@ def quantize_embeddings(
     when kept. Code = floor((x-lo)/scale + 0.5) clamped (floor+0.5
     rather than round(): identical across engines regardless of
     half-rounding mode). Pure per-row Column expression, scan-side."""
-    out_col = out_col or f"{col}_q8"
-    los = F.array(*[F.lit(p["lo"]) for p in params])
-    scales = F.array(*[F.lit(p["scale"]) for p in params])
-    code = F.zip_with(
-        F.col(col),
-        F.zip_with(los, scales, lambda lo, s: F.struct(lo.alias("lo"), s.alias("s"))),
-        lambda x, p: F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(255),
-                F.floor((x - p["lo"]) / p["s"] + F.lit(0.5)).cast("int"),
-            ),
-        ),
-    )
-    return df.withColumn(out_col, code)
+    code = _per_dimension(col, params, lambda x, p: F.greatest(
+        F.lit(0),
+        F.least(F.lit(255), F.floor((x - p["lo"]) / p["s"] + F.lit(0.5)).cast("int")),
+    ))
+    return df.withColumn(out_col or f"{col}_q8", code)
 
 
 def dequantize_expr(col: str, params: List[dict]) -> Column:
     """Approximate reconstruction: code*scale + lo per dimension."""
+    return _per_dimension(col, params, lambda c, p: c.cast("double") * p["s"] + p["lo"])
+
+
+def _per_dimension(col: str, params: List[dict], f) -> Column:
+    """``f(x, p)`` over each element ``x`` of ``col`` with its dimension's
+    quantization parameters ``p`` (fields ``lo`` and ``s``, the scale)."""
     los = F.array(*[F.lit(p["lo"]) for p in params])
     scales = F.array(*[F.lit(p["scale"]) for p in params])
-    return F.zip_with(
-        F.col(col),
-        F.zip_with(los, scales, lambda lo, s: F.struct(lo.alias("lo"), s.alias("s"))),
-        lambda c, p: c.cast("double") * p["s"] + p["lo"],
+    pairs = F.zip_with(
+        los, scales, lambda lo, s: F.struct(lo.alias("lo"), s.alias("s"))
     )
+    return F.zip_with(F.col(col), pairs, f)
 
 
 # ---------------------------------------------------------------------------
-# Product Quantization (PQ): m-subspace codebooks, 4-bit/8-bit codes,
-# asymmetric-distance (ADC) scoring. The compressed-index ANN scale path
-# beyond scalar quantization: dim-64 float64 vectors (512 B) compress to
-# m=8 uint8 codes (8 B, 64x) while ADC keeps ranking quality; codes are
-# scan-side Column expressions, training is a handful of tiny aggregates.
-# Public technique: Jegou, Douze, Schmid, "Product Quantization for
-# Nearest Neighbor Search" (TPAMI 2011).
+# Product Quantization (Jegou, Douze, Schmid, TPAMI 2011): m-subspace
+# codebooks and asymmetric-distance (ADC) scoring over the codes — dim-64
+# float64 vectors (512 B) compress to m=8 codes (8 B)
 # ---------------------------------------------------------------------------
 
 class PqCodebook:
@@ -821,27 +709,18 @@ def _pq_sub_slice(col: str, mi: int, subdim: int) -> Column:
     return F.slice(F.col(col), mi * subdim + 1, subdim)
 
 
-def _pq_d2(sub: Column, centroid: List[float]) -> Column:
-    """Σ(x−y)² as a SEQUENTIAL left fold over positions — the exact
-    float operation order an oracle engine's list_sum reproduces, so
-    codes match bit-for-bit across engines."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(sub, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pq_assign_expr(sub: Column, centroids: List[List[float]]) -> Column:
-    """argmin over centroids of d² ROUNDED to 9 dp, ties by centroid
-    index — rounding absorbs last-ulp float divergence between engines
-    so the argmin (hence the code) is engine-portable."""
-    scored = [
-        F.struct(F.round(_pq_d2(sub, c), 9).alias("d"), F.lit(i).alias("c"))
-        for i, c in enumerate(centroids)
-    ]
-    return F.array_min(F.array(*scored)).getField("c")
+def _pq_assign_expr(
+    col: str, mi: int, subdim: int, centroids: List[List[float]]
+) -> Column:
+    """Nearest centroid of subspace ``mi`` by Σ(x−y)² ROUNDED to 9 dp,
+    ties by centroid index. The left fold is the float operation order
+    an oracle engine's list_sum reproduces, and the rounding absorbs
+    last-ulp divergence, so codes match bit-for-bit across engines."""
+    sub = f"slice({_quote_ident(col)}, {mi * subdim + 1}, {subdim})"
+    return F.expr(_argmin_sql([
+        f"round({_zip_sum_sql(sub, _literal_array(c), '(x - y) * (x - y)')}, 9)"
+        for c in centroids
+    ]))
 
 
 def train_pq(
@@ -856,9 +735,7 @@ def train_pq(
     ``num_centroids`` smallest-id vectors (deterministic, oracle-
     re-derivable); optional Lloyd rounds refine ALL subspaces with ONE
     job per round: every (subspace, slice) is exploded once, assigned
-    scan-side, and a single groupBy(subspace, cell, pos) mean — the
-    shuffle carries ``m × k × subdim`` aggregated rows, collected
-    driver-side (tiny)."""
+    scan-side, and one :func:`_cell_means` over (subspace, cell)."""
     seeds = (
         df.select(id_col, col).orderBy(id_col).limit(num_centroids).collect()
     )
@@ -871,42 +748,26 @@ def train_pq(
         )
     subdim = dim // num_subspaces
     books = [
-        [
-            [float(x) for x in r[1][mi * subdim : (mi + 1) * subdim]]
-            for r in seeds
-        ]
+        [[float(x) for x in r[1][mi * subdim : (mi + 1) * subdim]] for r in seeds]
         for mi in range(num_subspaces)
     ]
     for _ in range(kmeans_iterations):
-        subs = F.array(
-            *[
-                F.struct(
-                    F.lit(mi).alias("m"),
-                    _pq_assign_expr(
-                        _pq_sub_slice(col, mi, subdim), books[mi]
-                    ).alias("cell"),
-                    _pq_sub_slice(col, mi, subdim).alias("v"),
-                )
-                for mi in range(num_subspaces)
-            ]
+        subs = F.array(*[
+            F.struct(
+                F.lit(mi).alias("m"),
+                _pq_assign_expr(col, mi, subdim, books[mi]).alias("cell"),
+                _pq_sub_slice(col, mi, subdim).alias("v"),
+            )
+            for mi in range(num_subspaces)
+        ])
+        exploded = df.select(F.explode(subs).alias("s")).select(
+            "s.m", "s.cell", F.posexplode("s.v").alias("__p", "__x")
         )
-        exploded = (
-            df.select(F.explode(subs).alias("s"))
-            .select("s.m", "s.cell", F.posexplode("s.v").alias("p", "x"))
-        )
-        means = (
-            exploded.groupBy("m", "cell", "p")
-            .agg(F.round(F.avg("x"), 9).alias("mu"))
-            .collect()
-        )
-        got: dict = {}
-        for r in means:
-            got.setdefault((r["m"], r["cell"]), {})[r["p"]] = float(r["mu"])
-        for mi in range(num_subspaces):
-            for ci in range(num_centroids):
-                cell = got.get((mi, ci))
-                if cell:
-                    books[mi][ci] = [cell[p] for p in range(subdim)]
+        means = _cell_means(exploded, ["m", "cell"])
+        books = [
+            [means.get((mi, ci), c) for ci, c in enumerate(book)]
+            for mi, book in enumerate(books)
+        ]
     return PqCodebook(books)
 
 
@@ -918,9 +779,7 @@ def pq_encode(
     shuffle, no Python."""
     codes = F.array(
         *[
-            _pq_assign_expr(
-                _pq_sub_slice(col, mi, codebook.subdim), codebook.codebooks[mi]
-            )
+            _pq_assign_expr(col, mi, codebook.subdim, codebook.codebooks[mi])
             for mi in range(codebook.num_subspaces)
         ]
     )
@@ -934,21 +793,15 @@ def pq_distance_expr(
     ``m × k`` lookup table of exact sub-distances; a row's distance is
     ``sqrt(Σ_m lut[m][code[m]])`` — an O(m) JVM fold per row over the
     literal table, never touching the original vectors."""
-    lut = []
-    for mi in range(codebook.num_subspaces):
-        qs = [float(x) for x in query[mi * codebook.subdim : (mi + 1) * codebook.subdim]]
-        row = []
-        for cent in codebook.codebooks[mi]:
-            d2 = 0.0
-            for a, b in zip(qs, cent):
-                d2 += (a - b) * (a - b)
-            row.append(d2)
-        lut.append(row)
     # one server-side-parsed SQL string: the m×k literal table as
-    # Column objects cost m*k py4j round trips per probe (1024 at the
-    # 8×16 default — ~0.3 s of driver time each call)
+    # Column objects cost m*k py4j round trips per probe
+    s, qs = codebook.subdim, [float(x) for x in query]
     lut_sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"{v!r}D" for v in row) + ")" for row in lut
+        _literal_array([
+            sum((a - b) * (a - b) for a, b in zip(qs[mi * s : (mi + 1) * s], cent))
+            for cent in book
+        ])
+        for mi, book in enumerate(codebook.codebooks)
     ) + ")"
     return F.expr(
         f"sqrt(aggregate(transform(`{code_col}`, (c, i) -> "
@@ -969,53 +822,36 @@ def find_neighbors_pq(
 ) -> DataFrame:
     """Top-k by ADC over the compressed codes; with ``col`` given, the
     ADC top ``k × rerank_factor`` candidates re-rank by EXACT L2 on the
-    original vectors (the standard PQ recall fix — the compressed scan
-    does the data reduction, exact math only touches a constant-size
-    candidate set). ``id_col`` makes tie-breaks at both cut points
-    deterministic (rounded distances collide; without it the k-th row
-    is engine-luck). Both cuts compile to TakeOrderedAndProject — a
-    per-partition top-k heap + driver merge, never a global sort."""
-    order = [F.col("adc_distance").asc()]
-    if id_col is not None:
-        order.append(F.col(id_col).asc())
+    original vectors (the standard PQ recall fix). ``id_col`` makes
+    tie-breaks at both cut points deterministic. Both cuts compile to
+    TakeOrderedAndProject, never a global sort."""
+    tie = [F.col(id_col).asc()] if id_col is not None else []
     adc = F.round(pq_distance_expr(code_col, codebook, query), 6)
-    scored = df.withColumn("adc_distance", adc)
+    cand = df.withColumn("adc_distance", adc).orderBy("adc_distance", *tie)
     if col is None:
-        return scored.orderBy(*order).limit(k)
-    cand = scored.orderBy(*order).limit(k * rerank_factor)
-    exact = cand.withColumn(
+        return cand.limit(k)
+    exact = cand.limit(k * rerank_factor).withColumn(
         "distance", F.round(distance_expr(col, query, "l2"), 6)
     )
-    final = [F.col("distance").asc()] + (
-        [F.col(id_col).asc()] if id_col is not None else []
-    )
-    return exact.orderBy(*final).limit(k)
+    return exact.orderBy("distance", *tie).limit(k)
 
 
 # ---------------------------------------------------------------------------
-# IVF-PQ: coarse inverted-file cells + in-cell PQ codes (the classic
-# compressed-index composition, e.g. FAISS IVFPQ with by_residual=False).
-# A probe prunes to nprobe cell partitions, ADC-scans only the 8-byte
-# codes inside them, and touches full vectors for a constant-size rerank
-# set — the 100 TB read pattern: partition pruning × 64x column shrink.
+# IVF-PQ (FAISS IVFPQ with by_residual=False): a probe prunes to nprobe
+# cell partitions, ADC-scans only their codes, and touches full vectors
+# for a constant-size rerank set
 # ---------------------------------------------------------------------------
 
+@dataclass(eq=False)
 class IvfPqIndex:
     """``df`` carries ``__cell`` (coarse nearest-centroid id) and
     ``pq_code``; ``centroids`` (coarse quantizer) and ``codebook`` (PQ)
     stay driver-side for probe planning."""
 
-    def __init__(
-        self,
-        df: DataFrame,
-        centroids: List[List[float]],
-        codebook: PqCodebook,
-        code_col: str = "pq_code",
-    ) -> None:
-        self.df = df
-        self.centroids = centroids
-        self.codebook = codebook
-        self.code_col = code_col
+    df: DataFrame
+    centroids: List[List[float]]
+    codebook: PqCodebook
+    code_col: str = "pq_code"
 
 
 def build_ivfpq_index(
@@ -1054,21 +890,10 @@ def find_neighbors_ivfpq(
     id_col: Optional[str] = "vec_id",
     filter: Optional[Column] = None,
 ) -> DataFrame:
-    """Probe: rank cells by centroid distance driver-side (same rule as
-    IVF-Flat: ``|c|² − 2 q·c``, ties by cell id), restrict to the
-    ``nprobe`` nearest, ADC-score their codes, exact-L2 rerank the top
-    ``k × rerank_factor`` when ``col`` is given."""
-
-    def d2(c):
-        return sum(x * x for x in c) - 2.0 * sum(
-            a * b for a, b in zip(embedding, c)
-        )
-
-    order = sorted(
-        range(len(index.centroids)),
-        key=lambda i: (d2(index.centroids[i]), i),
-    )
-    cand = index.df.where(F.col("__cell").isin(order[:nprobe]))
+    """Probe: restrict to the ``nprobe`` cells nearest the query (the
+    IVF-Flat cell ranking), ADC-score their codes, exact-L2 rerank the
+    top ``k × rerank_factor`` when ``col`` is given."""
+    cand = index.df.where(_ivf_where(index.centroids, embedding)(nprobe))
     if filter is not None:
         cand = cand.where(filter)
     return find_neighbors_pq(
@@ -1086,55 +911,35 @@ def write_ivfpq_index(
     codebook in a JSON sidecar. ``keep_vectors=False`` drops the full
     embedding column from the layout — the 64×-smaller codes-only
     index for ADC-only serving (rerank then needs the source table)."""
-    import json
-    import os
-
     df = index.df
     if not keep_vectors:
-        # drop EVERY float-family array column except the PQ codes —
-        # matching on the element type (not a str() prefix) so
-        # array<float> embeddings shrink away too
-        vec_cols = [
+        # every float-family array column but the codes (array<float>
+        # embeddings too)
+        df = df.drop(*[
             f.name for f in df.schema.fields
             if isinstance(f.dataType, T.ArrayType)
             and isinstance(f.dataType.elementType, (T.FloatType, T.DoubleType))
             and f.name != index.code_col
-        ]
-        df = df.drop(*vec_cols)
-    df.write.partitionBy("__cell").mode(mode).parquet(path)
-    with open(os.path.join(path, "_ivfpq_meta.json"), "w") as fh:
-        json.dump(
-            {
-                "centroids": index.centroids,
-                "codebook": index.codebook.to_dict(),
-                "code_col": index.code_col,
-            },
-            fh,
-        )
+        ])
+    _write_index(df, "__cell", path, mode, {
+        "centroids": index.centroids,
+        "codebook": index.codebook.to_dict(),
+        "code_col": index.code_col,
+    })
 
 
 def read_ivfpq_index(spark, path: str) -> IvfPqIndex:
-    import json
-    import os
-
-    df = spark.read.parquet(path).withColumn(
-        "__cell", F.col("__cell").cast("int")
-    )
-    with open(os.path.join(path, "_ivfpq_meta.json")) as fh:
-        meta = json.load(fh)
+    df, meta = _read_index(spark, path)
     return IvfPqIndex(
         df, meta["centroids"], PqCodebook.from_dict(meta["codebook"]),
-        code_col=meta.get("code_col", "pq_code"),
+        code_col=meta["code_col"],
     )
 
 
 # ---------------------------------------------------------------------------
-# Random projection (Johnson-Lindenstrauss) dimensionality reduction.
-# The standard pre-ANN shrink for high-dim embeddings (1536 → 128 keeps
-# pairwise distances within (1±eps)). Signs come from md5 parity of
-# (seed, out_dim_index, in_dim_index) — deterministic AND re-derivable
-# by any engine with md5, so projections are oracle-checkable
-# (Achlioptas 2003: ±1 entries satisfy the JL lemma).
+# Random projection (Johnson-Lindenstrauss; Achlioptas 2003 ±1 entries):
+# signs are md5 parity of (seed, out_dim_index, in_dim_index), so any
+# engine with md5 re-derives every projection
 # ---------------------------------------------------------------------------
 
 def _rp_sign(seed: int, j: int, i: int) -> float:
@@ -1152,43 +957,31 @@ def semantic_dedup(
     threshold: float = 0.95,
     method: str = "auto",
 ) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540 — public
-    algorithm): semantic near-duplicate removal over an embedding
-    column. Cluster the embeddings, then WITHIN each cluster mark every
-    item that has a near-identical neighbor (rounded cosine ≥
-    ``threshold``) with a smaller id as a duplicate — one survivor per
-    near-identical group, never comparing across clusters.
+    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
+    near-duplicate removal over an embedding column. Cluster the
+    embeddings, then WITHIN each cluster mark every item that has a
+    near-identical neighbor (rounded cosine ≥ ``threshold``) with a
+    smaller id as a duplicate — one survivor per near-identical group,
+    O(Σ cᵢ²) pair work instead of O(n²).
 
-    Output: ``(id_col, cluster, is_dup)`` — fully deterministic.
+    Output: ``(id_col, cluster, is_dup)`` — fully deterministic. The
+    clustering is nearest-seed assignment with DETERMINISTIC seeds (the
+    ``num_clusters`` smallest-id embeddings): highest rounded cosine,
+    ties to the smallest seed index, so any engine re-derives the exact
+    partition.
 
-    Engine notes: the coarse clustering is nearest-seed assignment with
-    DETERMINISTIC seeds (the ``num_clusters`` smallest-id embeddings),
-    argmax of rounded cosine with ties to the smallest seed index, so
-    any engine re-derives the exact partition (swap in
-    ``build_ivf_index``'s Lloyd-refined centroids for quality at
-    scale — the dedup semantics are identical). Scale posture: seeds
-    are a k-row collect (tiny), assignment is a scan-side fold, and the
-    only join is the within-cluster self-join — SemDeDup's whole point:
-    O(Σ cᵢ²) pair work instead of O(n²), with cluster count sized so
-    cᵢ ≈ n/k fits a partition.
-
-    ``method``: ``"expr"`` evaluates every cosine as Column expressions
-    (higher-order folds — interpreted per element, byte-stable across
-    engines: the oracle path) and verifies pairs through a
-    within-cluster self-join; ``"pandas"`` runs the assignment as an
-    Arrow-batched numpy matmul (``mapInPandas``) and the pair check as
-    ONE per-cluster blocked matmul (``applyInPandas`` — the shuffle
-    moves n rows, never the O(sum c_i^2) joined pairs) — 10-100x
-    faster when k x dim or cluster sizes are large, identical results
-    except on exact .5e-7 rounding boundaries (numpy rounds
-    half-to-even, Spark half-up). ``"auto"`` picks pandas once
-    ``num_clusters x dim`` exceeds ~1k (where interpreted folds stop
-    scaling)."""
+    ``method``: ``"expr"`` evaluates every cosine as a SQL fold
+    (byte-stable across engines: the oracle path) and verifies pairs
+    through a within-cluster self-join; ``"pandas"`` runs the assignment
+    as an Arrow-batched numpy matmul and the pair check as ONE
+    per-cluster blocked matmul (the shuffle moves n rows, never the
+    joined pairs) — identical results except on exact .5e-7 rounding
+    boundaries (numpy rounds half-to-even, Spark half-up). ``"auto"``
+    picks pandas once ``num_clusters x dim`` exceeds ~1k, the measured
+    crossover where interpreted folds stop scaling."""
     base = df.select(F.col(id_col).alias("__id"), F.col(col).alias("__v"))
-    # assignment is a k-cosines-per-row fold — compute-bound, so spread
-    # it across the cluster even when the input is one small file.
-    # Repartition UP only — never coalesce an already-parallel layout
-    # (plan-analysis-free guard: parallelism.py)
+    # assignment is compute-bound: spread it even when the input is one
+    # small file (repartition UP only, parallelism.py)
     base = repartition_up(base, "__id")
     seeds = [
         list(r["__v"])
@@ -1199,42 +992,22 @@ def semantic_dedup(
         return spark.createDataFrame(
             [], f"{id_col} long, cluster int, is_dup boolean"
         )
-    dim = len(seeds[0])
     if method == "auto":
-        # measured crossover on local[32]: the Arrow path wins once
-        # k x dim clears ~1k (assignment matmul + vectorized pair
-        # verify); below that the expression path's zero-serialization
-        # start beats it — and stays byte-portable for oracles
-        method = "pandas" if num_clusters * dim > 1024 else "expr"
+        method = "pandas" if num_clusters * len(seeds[0]) > 1024 else "expr"
     if method == "pandas":
-        # scale path: per-cluster blocked matmul (ONE applyInPandas) —
-        # Arrow moves n rows, not the O(sum c_i^2) joined pairs the
-        # expr path's self-join materializes (at 10x bench scale that
-        # join shipped ~7M pair rows x 2 vectors through a per-pair
-        # UDF; the matmul does the same 15M cosines in-memory in ms)
         assigned = _semantic_assign_pandas(base, seeds)
         return _semantic_dedup_groups(assigned, threshold).select(
             F.col("__id").alias(id_col), "cluster", "is_dup"
         )
-    else:
-        vnorm = _norm(F.col("__v"))
-        scored = []
-        for i, s in enumerate(seeds):
-            snorm = sum(x * x for x in s) ** 0.5 or 1.0
-            dot = _dot(F.col("__v"), F.array(*[F.lit(float(x)) for x in s]))
-            cos = F.when(vnorm == 0, F.lit(-2.0)).otherwise(
-                F.round(dot / (vnorm * F.lit(snorm)), 6)
-            )
-            # struct max: highest cosine wins, ties to the SMALLEST index
-            # (-i sorts the tie the right way inside array_max)
-            scored.append(
-                F.struct(
-                    cos.alias("c"), F.lit(-i).alias("ni"), F.lit(i).alias("cell")
-                )
-            )
-        assigned = base.withColumn(
-            "cluster", F.array_max(F.array(*scored)).getField("cell")
-        )
+    # the highest rounded cosine is the smallest negated one; a zero
+    # vector scores -2 against every seed (cluster 0)
+    vn = "sqrt(aggregate(`__v`, 0.0D, (acc, x) -> acc + x * x))"
+    assigned = base.withColumn("cluster", F.expr(_argmin_sql([
+        f"-(CASE WHEN {vn} = 0 THEN -2.0D ELSE round("
+        f"{_zip_sum_sql('`__v`', _literal_array(s), 'x * y')}"
+        f" / ({vn} * {sum(x * x for x in s) ** 0.5 or 1.0!r}D), 6) END)"
+        for s in seeds
+    ])))
     # materialize once: the assignment feeds both self-join sides AND
     # the final output join — without this it would run three times
     # (localCheckpoint frees itself on RDD GC, no CacheManager entry)
@@ -1302,24 +1075,17 @@ def _semantic_assign_pandas(base: DataFrame, seeds) -> DataFrame:
 def _semantic_dedup_groups(assigned: DataFrame, threshold: float) -> DataFrame:
     """Within-cluster near-dup marking as ONE ``applyInPandas`` over the
     cluster key: per group, a blocked V @ V.T cosine matmul marks every
-    row with a smaller-id neighbor at rounded cosine >= threshold.
-
-    Pair semantics are byte-identical to the expr path's self-join
-    (same dot/(|a||b|) operand order before the 6-dp round, zero-norm
-    rows score -2.0 so they never match), but the shuffle moves n rows
-    instead of the O(sum c_i^2) joined pairs. Block size adapts to the
-    group so the cos block stays ~64 MB however large one cluster gets;
-    the per-task memory bound is SemDeDup's own contract (size k so
-    c_i ~ n/k fits a task — identical to the join path, where one
-    cluster's pairs also landed on one task)."""
-    id_field = next(f for f in assigned.schema.fields if f.name == "__id")
-    out_schema = T.StructType(
-        [
-            T.StructField("__id", id_field.dataType, id_field.nullable),
-            T.StructField("cluster", T.IntegerType(), False),
-            T.StructField("is_dup", T.BooleanType(), False),
-        ]
-    )
+    row with a smaller-id neighbor at rounded cosine >= threshold. Pair
+    semantics match the expr path's self-join (same dot/(|a||b|) operand
+    order before the 6-dp round; zero-norm rows score -2.0 and never
+    match). The block size keeps one cos block near 64 MB however large
+    a cluster gets."""
+    id_field = assigned.schema["__id"]
+    out_schema = T.StructType([
+        T.StructField("__id", id_field.dataType, id_field.nullable),
+        T.StructField("cluster", T.IntegerType(), False),
+        T.StructField("is_dup", T.BooleanType(), False),
+    ])
     thr = float(threshold)
 
     def dedup(pdf):
@@ -1342,13 +1108,11 @@ def _semantic_dedup_groups(assigned: DataFrame, threshold: float) -> DataFrame:
             cos[:, zero] = -2.0
             hit = (cos >= thr) & (np.arange(s, e)[:, None] < cols[None, :])
             is_dup |= hit.any(axis=0)
-        return pd.DataFrame(
-            {
-                "__id": pdf["__id"],
-                "cluster": pdf["cluster"].astype("int32"),
-                "is_dup": is_dup,
-            }
-        )
+        return pd.DataFrame({
+            "__id": pdf["__id"],
+            "cluster": pdf["cluster"].astype("int32"),
+            "is_dup": is_dup,
+        })
 
     return assigned.groupBy("cluster").applyInPandas(dedup, schema=out_schema)
 
@@ -1363,16 +1127,11 @@ def random_projection(
 ) -> DataFrame:
     """Project ``col`` (array<double>, ``in_dim``) to ``out_dim`` dims:
     ``out[j] = Σ_i x[i] · sign(seed,j,i) / sqrt(out_dim)``. Pure
-    scan-side fold per output dim against ONE flat literal sign array —
-    no shuffle, no Python stage; at 100 TB this is a projection pushed
-    into the scan, shrinking every downstream exchange by
-    ``in_dim/out_dim``×.
-
-    Plan-size note: the whole in_dim×out_dim sign matrix is a SINGLE
-    ``array<double>`` literal (row-major, ``signs[j*in_dim+i]``)
-    indexed via ``slice`` inside ``transform(sequence(...))`` — a
+    scan-side fold per output dim, no shuffle, no Python stage. The whole
+    sign matrix is ONE ``array<double>`` literal (row-major,
+    ``signs[j*in_dim+i]``) sliced inside ``transform(sequence(...))``: a
     1536→128 projection is a handful of Catalyst nodes, not ~197k
-    per-entry literals that would blow up analysis/codegen."""
+    per-entry literals."""
     scale = 1.0 / (out_dim ** 0.5)
     flat = [
         _rp_sign(seed, j, i) for j in range(out_dim) for i in range(in_dim)
@@ -1387,17 +1146,7 @@ def random_projection(
     proj = F.transform(
         F.sequence(F.lit(0), F.lit(out_dim - 1)),
         lambda j: F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col(col),
-                    F.slice(signs, j * in_dim + 1, in_dim),
-                    lambda x, s: x * s,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            * F.lit(scale),
-            9,
+            _dot(F.col(col), F.slice(signs, j * in_dim + 1, in_dim)) * F.lit(scale), 9
         ),
     )
     return df.withColumn(out_col or f"{col}_rp{out_dim}", proj)

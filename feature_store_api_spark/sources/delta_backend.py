@@ -118,6 +118,31 @@ _RETENTION_UNIT_MS = {
 }
 
 
+def _write_cdc_file(tbl, cdc_dir: str):
+    """Write one commit file's rows (a pyarrow table) as a cdc file in
+    ``cdc_dir``, each tagged ``_change_type`` ``delete`` (a delete row in
+    the store's merge-on-read contract) or ``insert``. Returns the
+    file's table-relative path and size. Runs on the driver and inside
+    the executor tasks of ``_cdc_actions_distributed``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from .commit_store import OP_COL
+
+    if OP_COL in tbl.schema.names:
+        ct = pc.if_else(
+            pc.equal(tbl[OP_COL], "delete"),
+            pa.scalar("delete"), pa.scalar("insert"),
+        )
+    else:
+        ct = pa.array(["insert"] * tbl.num_rows)
+    name = f"cdc-{uuid.uuid4().hex[:12]}.parquet"
+    full = os.path.join(cdc_dir, name)
+    pq.write_table(tbl.append_column("_change_type", ct), full)
+    return f"_change_data/{name}", os.path.getsize(full)
+
+
 def _retention_ms(configuration: Optional[Dict[str, str]]) -> int:
     """``delta.deletedFileRetentionDuration`` ("interval N units",
     delta.io table-properties docs) -> millis; default 1 week."""
@@ -563,7 +588,6 @@ class DeltaLogBackend(CommitLogBackend):
         from .commit_store import OP_COL
 
         try:
-            import pyarrow as pa
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
         except Exception:
@@ -592,22 +616,12 @@ class DeltaLogBackend(CommitLogBackend):
                 tbl = pq.ParquetFile(dst).read()
             except Exception:
                 continue
-            if OP_COL in tbl.schema.names:
-                ct = pc.if_else(
-                    pc.equal(tbl[OP_COL], "delete"),
-                    pa.scalar("delete"), pa.scalar("insert"),
-                )
-            else:
-                ct = pa.array(["insert"] * tbl.num_rows)
-            tbl = tbl.append_column("_change_type", ct)
             os.makedirs(cdc_dir, exist_ok=True)
-            name = f"cdc-{uuid.uuid4().hex[:12]}.parquet"
-            full = os.path.join(cdc_dir, name)
-            pq.write_table(tbl, full)
+            path, size = _write_cdc_file(tbl, cdc_dir)
             out.append({"cdc": {
-                "path": f"_change_data/{name}",
+                "path": path,
                 "partitionValues": pv,
-                "size": os.path.getsize(full),
+                "size": size,
                 "dataChange": False,
             }})
         return out
@@ -619,42 +633,18 @@ class DeltaLogBackend(CommitLogBackend):
         only the (path, partitionValues, size) metadata rows return."""
         import pandas as pd
 
-        from .commit_store import OP_COL
-
         cdc_dir = os.path.join(self.location, "_change_data")
         os.makedirs(cdc_dir, exist_ok=True)
-        op_col = OP_COL
 
         def restate(batches):
-            import os as _os
-            import uuid as _uuid
-
-            import pyarrow as pa
-            import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
             for pdf in batches:
-                rows = []
-                for src, pvj in zip(pdf["__src"], pdf["__pv"]):
-                    tbl = pq.ParquetFile(src).read()
-                    if op_col in tbl.schema.names:
-                        ct = pc.if_else(
-                            pc.equal(tbl[op_col], "delete"),
-                            pa.scalar("delete"), pa.scalar("insert"),
-                        )
-                    else:
-                        ct = pa.array(["insert"] * tbl.num_rows)
-                    tbl = tbl.append_column("_change_type", ct)
-                    name = f"cdc-{_uuid.uuid4().hex[:12]}.parquet"
-                    full = _os.path.join(cdc_dir, name)
-                    pq.write_table(tbl, full)
-                    rows.append((
-                        f"_change_data/{name}", pvj,
-                        _os.path.getsize(full),
-                    ))
-                yield pd.DataFrame(
-                    rows, columns=["path", "pv", "size"]
-                )
+                rows = [
+                    (*_write_cdc_file(pq.ParquetFile(src).read(), cdc_dir), pvj)
+                    for src, pvj in zip(pdf["__src"], pdf["__pv"])
+                ]
+                yield pd.DataFrame(rows, columns=["path", "size", "pv"])
 
         spec = spark.createDataFrame(
             [(d, json.dumps(pv)) for d, pv in moved],
@@ -668,7 +658,7 @@ class DeltaLogBackend(CommitLogBackend):
             "size": int(r["size"]),
             "dataChange": False,
         }} for r in spec.mapInPandas(
-            restate, "path string, pv string, size long"
+            restate, "path string, size long, pv string"
         ).collect()]
 
     def scan(

@@ -606,3 +606,50 @@ def test_plain_backend_scan_reads_the_logged_schema():
     scan = inspect.getsource(CommitLogBackend.scan)
     assert "self._logged_schema()" in scan
     assert "spark.read.schema(schema)" in scan
+
+
+def test_vector_search_has_one_scorer_and_one_retry_loop():
+    """Every kNN path in ``operators/similarity.py`` ranks its index's
+    candidates through one scorer and one widening retry loop. Exactly
+    one function branches on the metric name (l2 / cosine / dot), and
+    exactly one ``while`` loop holds the module's one ``.persist()``.
+    A second branch is a second copy of the distance math with its own
+    zero-norm and rounding rules; a second loop is a second retry with
+    its own cache lifetime."""
+    import ast
+    import pathlib
+
+    import feature_store_api_spark
+
+    root = pathlib.Path(feature_store_api_spark.__file__).parent
+    source = (root / "operators" / "similarity.py").read_text()
+    tree = ast.parse(source)
+    metrics = {"l2", "cosine", "dot"}
+
+    def names_a_metric(node):
+        if isinstance(node, ast.Compare):
+            operands = [node.left, *node.comparators]
+        elif isinstance(node, ast.Dict):
+            operands = node.keys
+        else:
+            return False
+        return any(
+            isinstance(o, ast.Constant) and o.value in metrics for o in operands
+        )
+
+    functions = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+    branching = [
+        fn.name for fn in functions
+        if any(names_a_metric(n) for stmt in fn.body for n in ast.walk(stmt))
+    ]
+    assert branching == ["_distance_sql"]
+    loops = [
+        fn.name for fn in functions
+        if any(isinstance(n, ast.While) for n in ast.walk(fn))
+    ]
+    assert loops == ["_widening_probe"]
+    assert source.count(".persist(") == 1
+    persisting = [
+        fn.name for fn in functions if ".persist(" in ast.get_source_segment(source, fn)
+    ]
+    assert persisting == loops

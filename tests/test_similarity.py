@@ -71,6 +71,14 @@ def test_retry_caps_at_exhaustive(emb):
     assert out.count() == 3
 
 
+def test_ivf_retry_widens_from_zero_nprobe(emb):
+    """A zero widening value still widens (0 doubled is 0): the probe
+    ends with k rows instead of looping on an empty cell list."""
+    idx = sim.build_ivf_index(emb, "embedding", id_col="vec_id", num_centroids=8)
+    out = sim.find_neighbors_ivf_retry(idx, [0.1] * 16, col="embedding", k=5, nprobe=0)
+    assert out.count() == 5
+
+
 def test_batch_probes_match_single_probes(emb):
     """Batch LSH and batch IVF must return exactly the per-query single
     probes' results (same candidates, same ranking)."""
@@ -778,3 +786,110 @@ def test_exact_knn_cosine_and_l2_match_numpy(emb):
     for r in got_l2:
         assert r["vec_id"] in expect
         assert abs(r["distance"] - expect[r["vec_id"]]) < 1e-6
+
+
+# ---------------------------------------------------------------------------
+# Plan pins: the kNN plans stay put whichever index generates candidates
+# ---------------------------------------------------------------------------
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_knn_batch_plan_scans_once_broadcasts_and_shuffles_on_query_id(
+    emb, spark, tmp_path
+):
+    """M queries cost one index scan: the query frame is broadcast into
+    the candidate join and the per-query top-k is one shuffle on
+    ``query_id`` (the corpus-curation kNN plan)."""
+    sim.write_ann_index(
+        sim.build_ann_index(emb, "embedding", dim=16, num_planes=6),
+        str(tmp_path / "ann"),
+    )
+    idx = sim.read_ann_index(spark, str(tmp_path / "ann"))
+    qs = [("a", [0.1] * 16), ("b", [-0.3] * 16)]
+    plan = _executed(
+        sim.find_neighbors_batch(idx, qs, col="embedding", k=5, num_planes=6)
+    )
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "BroadcastExchange" in plan, plan
+    shuffles = [
+        line for line in plan.splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    ]
+    assert len(shuffles) == 1, plan
+    assert "hashpartitioning(query_id" in shuffles[0], plan
+
+
+@pytest.mark.parametrize("index", ["lsh", "ivf"])
+def test_single_probe_plans_as_take_ordered_without_exchange(emb, index):
+    """One literal query is a per-partition top-k heap plus a driver
+    merge (TakeOrderedAndProject): no shuffle, no window."""
+    q = [0.1] * 16
+    if index == "lsh":
+        idx = sim.build_ann_index(emb, "embedding", dim=16, num_planes=6)
+        out = sim.find_neighbors_ann(
+            idx, q, col="embedding", k=5, num_planes=6, max_hamming=1
+        )
+    else:
+        ivf = sim.build_ivf_index(emb, "embedding", num_centroids=8)
+        out = sim.find_neighbors_ivf(ivf, q, col="embedding", k=5, nprobe=2)
+    plan = _executed(out)
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "Exchange" not in plan, plan
+
+
+# ---------------------------------------------------------------------------
+# Cosine over zero vectors: a zero row is never similar, a zero query is
+# rejected before any job runs
+# ---------------------------------------------------------------------------
+
+_ZERO_ROWS = [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0])]
+
+
+def _cosine_probe(spark, entry):
+    """The entry point as a function of the query; indexes built here."""
+    df = spark.createDataFrame(_ZERO_ROWS, "vec_id long, embedding array<double>")
+    if entry == "find_neighbors":
+        return lambda q: sim.find_neighbors(
+            df, q, col="embedding", k=3, metric="cosine"
+        )
+    if entry == "find_neighbors_ivf_batch":
+        ivf = sim.build_ivf_index(df, "embedding", num_centroids=3)
+        return lambda q: sim.find_neighbors_ivf_batch(
+            ivf, [("q", q)], col="embedding", k=3, nprobe=3
+        ).orderBy("rank")
+    idx = sim.build_ann_index(df, "embedding", dim=2, num_planes=4)
+    if entry == "find_neighbors_ann":
+        return lambda q: sim.find_neighbors_ann(
+            idx, q, col="embedding", k=3, num_planes=4, max_hamming=4
+        )
+    return lambda q: sim.find_neighbors_batch(
+        idx, [("q", q)], col="embedding", k=3, num_planes=4, max_hamming=4
+    ).orderBy("rank")
+
+
+@pytest.mark.parametrize(
+    "entry",
+    ["find_neighbors", "find_neighbors_ann", "find_neighbors_batch",
+     "find_neighbors_ivf_batch"],
+)
+def test_cosine_zero_vector_ranks_last_and_zero_query_raises(spark, entry):
+    probe = _cosine_probe(spark, entry)
+    got = [(r["vec_id"], r["distance"]) for r in probe([1.0, 0.5]).collect()]
+    assert got == [(2, -0.894427), (3, -0.447214), (1, None)]
+    with spark_jobs(spark) as during:
+        with pytest.raises(ValueError, match="zero"):
+            probe([0.0, 0.0]).collect()
+    assert during == []
+
+
+def test_cosine_dup_pairs_skip_zero_vectors(spark):
+    """Two zero vectors share every LSH bucket: their pair has no cosine
+    and is never a duplicate."""
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [2.0, 0.0]), (4, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = sim.embedding_cosine_dup_pairs(df, "vec_id", "embedding", dim=2)
+    assert [tuple(r) for r in got.collect()] == [(2, 3, 1.0)]
